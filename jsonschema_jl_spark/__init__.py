@@ -13,6 +13,11 @@ Layout:
               phash, substring, components, textops, similarity)
   datagen/    deterministic synthetic `images` table (input_hint shape)
   io/         table read/write + checkpoint/resume manifests
+  zipcache    per-worker zip-directory reuse across pyspark tasks
 """
+
+from . import zipcache
+
+zipcache.install()
 
 __version__ = "0.1.0"

@@ -705,12 +705,14 @@ def _scalar_masks(
                 hit |= (~v) & present
             bad |= ~hit
         elif is_num:
+            # is_in hashes the sign bit, the walk compares numbers: adding
+            # 0.0 maps -0.0 to 0.0 on both sides, so -0.0 matches 0
             nums = [
-                float(e) for e in allowed
+                float(e) + 0.0 for e in allowed
                 if isinstance(e, (int, float)) and not isinstance(e, bool)
             ]
             bad |= ~_to_np(
-                pc.is_in(arrf, value_set=pa.array(nums, pa.float64()))
+                pc.is_in(pc.add(arrf, 0.0), value_set=pa.array(nums, pa.float64()))
             )
         elif is_str:
             strs = [e for e in allowed if isinstance(e, str)]

@@ -266,11 +266,16 @@ def gate_filter(
     JSON, >2^53 integers under comparisons) routed to the exact walk UDF.
     It is an OPT-IN, not the default, on measurement: JVM variant parse
     runs ~3 us/row/core vs ~1.5 us/row/core for the pyarrow screen's
-    simdjson-class read_json (0.66 s vs 0.43 s on the 100k-row bench
-    shape, 32 partitions), so the screen path is CPU-optimal whenever it
-    covers the schema; the variant path is the choice when Python workers
-    are unwanted (no IPC, no python worker memory, plan composability) and
-    is the only dynamic backend that judges absent-vs-null exactly.
+    simdjson-class read_json.  On the benchmark's 200k flat docs
+    (`perfbench/run.py --workload json_gate --trace 1`, local[4], median
+    of seeds 21-23) the screen pass (`gate.flat_screen_wall_s`) takes
+    0.39 s and the variant pass (`gate.flat_native_wall_s`) 1.28 s; before
+    Python workers stopped re-reading pyspark.zip's directory every task
+    (zipcache.py) they took 0.63 s and 1.59 s.  So the screen path is
+    CPU-optimal whenever it covers the schema; the variant path is the
+    choice when Python workers are unwanted (no IPC, no python worker
+    memory, plan composability) and is the only dynamic backend that
+    judges absent-vs-null exactly.
 
     `metrics` caveat under `dynamic_native=True`: the counters are threaded
     only into the refused-row WALK lane (the native lane has no Python

@@ -1513,10 +1513,7 @@ def _h_case(draw):
     return schema, rows
 
 
-@settings(max_examples=150, deadline=None)
-@given(_h_case())
-def test_screen_soundness_hypothesis(case):
-    schema, rows = case
+def _assert_screen_sound(schema, rows):
     data = Schema(schema).data
     plan = plan_screen(data)  # must never raise, screenable or not
     if plan is None:
@@ -1531,6 +1528,26 @@ def test_screen_soundness_hypothesis(case):
         assert _issue_record(rows[i], data) is None, (schema, rows[i])
     for i in np.flatnonzero(invalid):
         assert _issue_record(rows[i], data) is not None, (schema, rows[i])
+
+
+@settings(max_examples=150, deadline=None)
+@given(_h_case())
+def test_screen_soundness_hypothesis(case):
+    _assert_screen_sound(*case)
+
+
+# signed zero: the walk compares numbers (-0.0 == 0), so the screen's
+# hash-based enum/const membership must not tell the two zeros apart
+@pytest.mark.parametrize("schema, rows", [
+    ({"properties": {"k": {"const": -0.0}}}, [{"k": 0}]),
+    ({"properties": {"k": {"const": -0.0}}}, [{"k": 0.0}]),
+    ({"properties": {"k": {"enum": [0]}}}, [{"k": -0.0}]),
+])
+def test_screen_soundness_signed_zero(schema, rows):
+    _assert_screen_sound(schema, rows)
+    s = pd.Series([json.dumps(r) for r in rows], dtype=object)
+    masks = screen_batch(s, plan_screen(Schema(schema).data))
+    assert masks is not None and masks[0].all()
 
 
 # ---------------------------------------------------------------------------
