@@ -725,10 +725,11 @@ def q_images_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_images_dedup_resumable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P13 at contract level: the SAME flagship clustering as
-    images_dedup_clusters, computed through the checkpoint-manifest path
-    (io.checkpoint.resumable_pipeline: three checkpointed stages written as
-    Iceberg-layout parquet with per-bucket manifests, each stage resumed
-    from its checkpoint by the next) instead of the in-memory pipeline.
+    images_dedup_clusters, computed by the same dedup_pipeline with its
+    three materialization points (signatures, edges, labels) written as
+    Iceberg-layout parquet stages with per-bucket manifests, each stage
+    read back from its checkpoint by the next
+    (io.checkpoint.resumable_pipeline) instead of held in the session.
     Shares images_dedup_clusters' oracle SQL — agreement proves the
     checkpoint round-trip preserves the clustering bit-for-bit.  The
     checkpoint root is wiped first so the run is deterministic."""

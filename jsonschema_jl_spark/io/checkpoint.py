@@ -2,23 +2,31 @@
 
 The north rule requires signatures and component labels checkpointed per
 partition with lineage and per-partition metrics for resumable runs
-(BASELINE.json:14).  In the sandbox the sink is partitioned parquet (the
-Iceberg jars are not in the image — the same layout maps 1:1 onto an Iceberg
-table partitioned by `part_bucket`, with the manifest's role played by
-Iceberg snapshot metadata).
+(BASELINE.json:14).  Without the Iceberg runtime jar the sink is
+partitioned parquet: the same layout maps 1:1 onto an Iceberg table
+partitioned by `part_bucket`, with the manifest's role played by Iceberg
+snapshot metadata (io/iceberg.py).
 
 Layout:
     <root>/<config_hash>_L<layout_version>/<stage>/part_bucket=N/*.parquet
     <root>/<config_hash>_L<layout_version>/<stage>/_manifest.json
 
-Manifest records lineage (input descriptor, config hash, engine version),
-per-bucket row counts, and completion flags.  Resume = recompute only the
-buckets missing from the manifest; a config change hashes to a different
-directory, so stale state can never be mixed in.  The directory name also
-carries LAYOUT_VERSION — the version of the ON-DISK stage schema (column
-set of each checkpointed stage), bumped whenever the engine changes what a
-stage stores (e.g. v2 added the `bands` column to signatures).  A resumed
-run under a new engine therefore never reads a stage written in an older
+The stages are the three materialization points of
+operators.pipeline.dedup_pipeline, which writes them when it is given a
+manager (resumable_pipeline below); layout v3 stores:
+    signatures  (nid, image_id, txt_norm, phash, bands)  bucketed by image_id
+    edges       (src, dst, kind)                         bucketed by src
+    labels      (image_id, component)                    bucketed by image_id
+
+Manifest records lineage (input descriptor, bucket count, id column, config
+hash, engine version), per-bucket row counts, and completion flags.  Resume
+= recompute only the buckets missing from the manifest.  Stale state is
+never mixed in: a config change hashes to a different directory, and a
+stage whose manifest records another bucket count or id column restarts
+from scratch (its buckets partition the rows differently).  The directory
+name also carries LAYOUT_VERSION — the version of the ON-DISK stage schema,
+bumped whenever the engine changes what a stage stores.  A resumed run
+under a new engine therefore never reads a stage written in an older
 layout: the old directory is simply orphaned and the run recomputes under
 the new one, which extends the stale-state guarantee to engine upgrades
 where DedupConfig itself (and thus config_hash) is unchanged.
@@ -28,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -39,7 +48,9 @@ from jsonschema_jl_spark.config import DedupConfig
 # Version of the on-disk stage layout (NOT the dedup semantics — that is
 # DedupConfig.config_hash()).  Bump when a stage's stored column set changes.
 # v2: signatures stage stores precomputed LSH `bands` alongside the minhash.
-LAYOUT_VERSION = 2
+# v3: signatures store the fused kernel's projection (no `minhash` array),
+#     edges carry their `kind`.
+LAYOUT_VERSION = 3
 
 
 def bucket_col(id_col: str, n_buckets: int):
@@ -102,8 +113,13 @@ class CheckpointManager:
         path = os.path.join(self.base, stage)
         if materialize:
             df = df.localCheckpoint(eager=True)
-        manifest = self.read_manifest(stage) if resume else {"stage": stage, "buckets": {}}
-        manifest.setdefault("buckets", {})
+        manifest = self.read_manifest(stage)
+        recorded = manifest.get("lineage", {})
+        if not resume or (recorded.get("n_buckets"), recorded.get("id_col")) != (n_buckets, id_col):
+            # buckets hashed with another count or id column hold other
+            # rows: restart the stage instead of mixing them in
+            shutil.rmtree(path, ignore_errors=True)
+            manifest = {"stage": stage, "buckets": {}}
         manifest["config_hash"] = self.cfg.config_hash()
         manifest["engine_version"] = __version__
         manifest["layout_version"] = LAYOUT_VERSION
@@ -136,7 +152,11 @@ class CheckpointManager:
         return spark.read.option("basePath", path).parquet(os.path.join(path, "part_bucket=*"))
 
     def stage_complete(self, stage: str, n_buckets: int) -> bool:
-        return len(self.completed_buckets(stage)) >= n_buckets
+        recorded = self.read_manifest(stage).get("lineage", {}).get("n_buckets")
+        return recorded == n_buckets and self.completed_buckets(stage) >= set(range(n_buckets))
+
+    def stage_rows(self, stage: str) -> int:
+        return sum(v.get("rows", 0) for v in self.read_manifest(stage)["buckets"].values())
 
     def metrics(self) -> dict:
         out = {}
@@ -153,27 +173,6 @@ class CheckpointManager:
         return out
 
 
-def resumable_signatures(
-    spark: SparkSession,
-    images: DataFrame,
-    ckpt: CheckpointManager,
-    cfg: DedupConfig,
-    n_buckets: int = 8,
-) -> DataFrame:
-    """Gate + signature stage with per-bucket checkpoint/resume: the pandas
-    MinHash kernel never re-runs for completed buckets."""
-    from jsonschema_jl_spark.gate.gate import gate_filter
-    from jsonschema_jl_spark.operators.minhash import with_signatures
-    from jsonschema_jl_spark.operators.pipeline import IMAGES_GATE_SCHEMA
-
-    stage = "signatures"
-    if not ckpt.stage_complete(stage, n_buckets):
-        slim = gate_filter(images, IMAGES_GATE_SCHEMA).select("image_id", "caption", "phash")
-        sigs = with_signatures(slim, cfg=cfg)
-        ckpt.write_stage(sigs, stage, id_col="image_id", n_buckets=n_buckets)
-    return ckpt.read_stage(spark, stage)
-
-
 def resumable_pipeline(
     spark: SparkSession,
     images: DataFrame,
@@ -181,69 +180,14 @@ def resumable_pipeline(
     cfg: DedupConfig,
     n_buckets: int = 8,
 ) -> DataFrame:
-    """Full dedup pipeline with per-stage checkpoint/resume (P13): three
-    checkpointed stages — signatures (gate + normalize + MinHash), edges
-    (all three detectors + union-dedup), labels (connected components +
-    id mapping).  A killed run resumes at the first incomplete stage; a
-    completed stage is never recomputed (its parquet is the source of the
-    next stage), and within a stage only missing buckets are written.
-    Produces the same clustering as operators.pipeline.dedup_pipeline
-    under the same config (asserted by tests/test_checkpoint.py)."""
-    from jsonschema_jl_spark.gate.gate import gate_filter
-    from jsonschema_jl_spark.operators.minhash import normalize_udf, with_signatures
-    from jsonschema_jl_spark.operators.lsh import band_buckets, candidate_pairs
-    from jsonschema_jl_spark.operators.verify import verify_jaccard_text
-    from jsonschema_jl_spark.operators.phash import phash_pairs
-    from jsonschema_jl_spark.operators.substring import containment_pairs
-    from jsonschema_jl_spark.operators.components import connected_components
-    from jsonschema_jl_spark.operators.pipeline import IMAGES_GATE_SCHEMA
+    """dedup_pipeline with its signatures, edges and labels stages written
+    to `ckpt` in `n_buckets` buckets each (P13); returns the labels.  A
+    killed run resumes at the first incomplete stage, within it only the
+    missing buckets are written, and a completed stage never rebuilds its
+    upstream.  `spark` is unused (the run uses `images`' session); it stays
+    for existing callers."""
+    from jsonschema_jl_spark.operators.pipeline import dedup_pipeline
 
-    if not ckpt.stage_complete("signatures", n_buckets):
-        slim = gate_filter(images, IMAGES_GATE_SCHEMA).select(
-            F.xxhash64("image_id").alias("nid"),
-            "image_id",
-            normalize_udf(F.col("caption")).alias("txt_norm"),
-            "phash",
-        )
-        # bands stored alongside the signatures (+num_bands longs/row, ~12%
-        # of the minhash bytes) so a resumed run banding-explodes the
-        # checkpoint directly — same plain-posexplode hot path as
-        # dedup_pipeline, no slice/hash recompute
-        sigs = with_signatures(
-            slim, text_col="txt_norm", cfg=cfg, keep_shingles=False,
-            assume_normalized=True, with_bands=True,
-        )
-        ckpt.write_stage(sigs, "signatures", id_col="image_id", n_buckets=n_buckets)
-    sigs = ckpt.read_stage(spark, "signatures")
-
-    if not ckpt.stage_complete("edges", n_buckets):
-        buckets = band_buckets(sigs, id_col="nid", cfg=cfg, bands_col="bands")
-        cands = candidate_pairs(buckets, cfg)
-        cap = verify_jaccard_text(
-            cands, sigs, id_col="nid", text_col="txt_norm", cfg=cfg, assume_normalized=True
-        ).select("src", "dst")
-        ph = phash_pairs(sigs, id_col="nid", cfg=cfg).select("src", "dst")
-        cont = containment_pairs(
-            sigs, id_col="nid", text_col="txt_norm", cfg=cfg, assume_normalized=True
-        ).select("src", "dst")
-        edges = cap.unionByName(ph).unionByName(cont).dropDuplicates(["src", "dst"])
-        ckpt.write_stage(edges, "edges", id_col="src", n_buckets=n_buckets)
-    edges = ckpt.read_stage(spark, "edges")
-
-    if not ckpt.stage_complete("labels", n_buckets):
-        nid_labels = connected_components(
-            edges.select("src", "dst"),
-            vertices=sigs.select("nid"),
-            max_iters=cfg.cc_max_iters,
-        )
-        iddict = sigs.select("nid", "image_id")
-        comp_names = iddict.select(
-            F.col("nid").alias("component"), F.col("image_id").alias("component_id")
-        )
-        labels = (
-            nid_labels.join(iddict, nid_labels.id == iddict.nid)
-            .join(comp_names, "component")
-            .select("image_id", F.col("component_id").alias("component"))
-        )
-        ckpt.write_stage(labels, "labels", id_col="image_id", n_buckets=n_buckets)
-    return ckpt.read_stage(spark, "labels")
+    return dedup_pipeline(
+        images, cfg, checkpoint=(ckpt, n_buckets), collect_metrics=False
+    ).labels

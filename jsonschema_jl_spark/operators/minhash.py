@@ -142,18 +142,6 @@ def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def minhash_np(shingles: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Signature for one shingle set: min over (a*x+b) per permutation."""
-    sh = shingles.astype(np.uint64)
-    # (P, S) intermediate chunked over permutations to bound memory
-    out = np.empty(a.size, dtype=np.uint64)
-    step = 32
-    for i in range(0, a.size, step):
-        h = a[i : i + step, None] * sh[None, :] + b[i : i + step, None]
-        out[i : i + step] = h.min(axis=1)
-    return out
-
-
 _EMPTY = np.uint64(0xFFFFFFFFFFFFFFFF)
 _HOP = np.uint64(0x9E37)  # densification hop offset; values are 63-bit so
                           # accumulated hops can never collide with _EMPTY
@@ -164,15 +152,6 @@ def _splitmix(z: np.ndarray) -> np.ndarray:
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
-
-
-def _oph_signatures(sets: list[np.ndarray], cfg: DedupConfig) -> np.ndarray:
-    """OPH over explicit per-row shingle sets (keep_shingles path)."""
-    n = len(sets)
-    lens = np.fromiter((s.size for s in sets), dtype=np.int64, count=n)
-    flat = np.concatenate(sets).astype(np.uint64)
-    row = np.repeat(np.arange(n, dtype=np.int64), lens)
-    return _oph_signatures_flat(flat, row, n, cfg)
 
 
 def _oph_signatures_flat(
@@ -417,11 +396,10 @@ def normalize_signatures_bands(
 
 
 def _signatures_map_in_arrow(
-    df: DataFrame, text_col: str, cfg: DedupConfig, normalized: bool,
-    with_bands: bool = False,
+    df: DataFrame, text_col: str, cfg: DedupConfig, normalized: bool
 ) -> DataFrame:
-    """minhash column via mapInArrow with zero-copy Arrow I/O — the pipeline
-    hot path (keep_shingles=False).
+    """minhash column via mapInArrow with zero-copy Arrow I/O
+    (with_signatures' keep_shingles=False path).
 
     The pandas-UDF route pays two per-row conversion taxes this avoids: the
     text column materializes as Python str objects on the way in, and the
@@ -435,12 +413,9 @@ def _signatures_map_in_arrow(
 
     P = cfg.num_perm
     k = cfg.shingle_k
-    extra_fields = [T.StructField("minhash", T.ArrayType(T.LongType()), False)]
-    if with_bands:
-        # precomputed LSH bucket keys (see band_keys_np) — lsh.band_buckets
-        # then reduces to a plain posexplode, no JVM slice/hash expressions
-        extra_fields.append(T.StructField("bands", T.ArrayType(T.LongType()), False))
-    out_schema_t = T.StructType(df.schema.fields + extra_fields)
+    out_schema_t = T.StructType(
+        df.schema.fields + [T.StructField("minhash", T.ArrayType(T.LongType()), False)]
+    )
     col_names = list(df.columns)
     col_idx = col_names.index(text_col)
 
@@ -500,17 +475,7 @@ def _signatures_map_in_arrow(
             offsets = pa.array((np.arange(n + 1, dtype=np.int64) * P).astype(np.int32))
             minhash = pa.ListArray.from_arrays(offsets, pa.array(sigs, type=pa.int64()))
             out_cols = [batch.column(i) for i in range(batch.num_columns)] + [minhash]
-            out_names = col_names + ["minhash"]
-            if with_bands:
-                bk = band_keys_np(sigs.reshape(n, P), cfg).reshape(-1)
-                boff = pa.array(
-                    (np.arange(n + 1, dtype=np.int64) * cfg.num_bands).astype(np.int32)
-                )
-                out_cols.append(
-                    pa.ListArray.from_arrays(boff, pa.array(bk, type=pa.int64()))
-                )
-                out_names.append("bands")
-            yield pa.RecordBatch.from_arrays(out_cols, names=out_names)
+            yield pa.RecordBatch.from_arrays(out_cols, names=col_names + ["minhash"])
 
     return df.mapInArrow(gen, schema=out_schema_t)
 
@@ -535,7 +500,7 @@ def _classic_signatures_flat(
 def with_signatures(
     df: DataFrame, text_col: str = "caption", cfg: DedupConfig = DEFAULT_CONFIG,
     repartition: bool = True, keep_shingles: bool = True,
-    assume_normalized: bool = False, with_bands: bool = False,
+    assume_normalized: bool = False,
 ) -> DataFrame:
     """Add `minhash: array<long>` (and, when keep_shingles, the
     `shingles: array<long>` set) columns.
@@ -543,11 +508,6 @@ def with_signatures(
     keep_shingles=False skips materializing the shingle sets (~1 KB/row of
     Arrow transfer + cache); the verification stage recomputes shingles for
     the tiny candidate subset instead (verify.verify_jaccard_text).
-
-    with_bands=True (hot path only, requires keep_shingles=False) also emits
-    `bands: array<long>` — the num_bands LSH bucket keys computed vectorized
-    in the same kernel pass (band_keys_np), so banding downstream is a plain
-    posexplode instead of num_bands slice+xxhash64 Catalyst expressions.
 
     The Arrow kernel's parallelism equals the input partition count; a
     column-pruned scan of a few large files yields too few partitions to
@@ -566,12 +526,8 @@ def with_signatures(
         # size property), not the executor count — see pipeline.py
         df = df.repartition(int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
     if not keep_shingles:
-        # hot path: zero-copy Arrow kernel (see _signatures_map_in_arrow)
-        return _signatures_map_in_arrow(
-            df, text_col, cfg, normalized=assume_normalized, with_bands=with_bands
-        )
-    if with_bands:
-        raise ValueError("with_bands requires keep_shingles=False (hot path)")
+        # zero-copy Arrow kernel (see _signatures_map_in_arrow)
+        return _signatures_map_in_arrow(df, text_col, cfg, normalized=assume_normalized)
     out = df.withColumn("__sig", sig_udf(F.col(text_col)))
     return out.withColumn("shingles", F.col("__sig.shingles")).withColumn(
         "minhash", F.col("__sig.minhash")

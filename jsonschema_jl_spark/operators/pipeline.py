@@ -9,6 +9,7 @@
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -24,6 +25,9 @@ from jsonschema_jl_spark.operators.verify import verify_jaccard_text
 from jsonschema_jl_spark.operators.phash import phash_pairs
 from jsonschema_jl_spark.operators.substring import containment_pairs
 from jsonschema_jl_spark.operators.components import connected_components
+
+if TYPE_CHECKING:
+    from jsonschema_jl_spark.io.checkpoint import CheckpointManager
 
 # The gate schema for the authoritative input shape (BASELINE.json:15,
 # FIXTURES.md §1) — fully native-compilable, so the gate is pure Catalyst.
@@ -60,36 +64,37 @@ def dedup_pipeline(
     gate_schema: dict | None = None,
     use_phash: bool = True,
     use_containment: bool = True,
-    persist: bool = True,
+    checkpoint: tuple[CheckpointManager, int] | None = None,
     collect_metrics: bool = True,
 ) -> PipelineResult:
+    """The detector cascade.  Its three materialization points — the
+    signatures projection, the edge set and the labels — stay in the
+    session by default.  With `checkpoint=(manager, n_buckets)` each one
+    is instead the stage of that name in the manager: written unless its
+    manifest records it complete, then read back; a complete stage never
+    builds its upstream, and the row counts that size the partition floors
+    come from the manifest.  That is the whole difference between an
+    in-memory and a resumable run (io.checkpoint.resumable_pipeline)."""
     gate_schema = IMAGES_GATE_SCHEMA if gate_schema is None else gate_schema
+    spark = images.sparkSession
+    ckpt, n_buckets = checkpoint or (None, 0)
+
+    def landed(stage: str, id_col: str, build) -> tuple[DataFrame, int]:
+        if not ckpt.stage_complete(stage, n_buckets):
+            ckpt.write_stage(build(), stage, id_col=id_col, n_buckets=n_buckets)
+        return ckpt.read_stage(spark, stage).drop("part_bucket"), ckpt.stage_rows(stage)
 
     # gate backend observability (round-4 ask #8): which backend the gate
     # compiled to, plus the screen/walk split when the UDF lane runs.  The
     # default IMAGES_GATE_SCHEMA is fully native (pure Catalyst, no Python
     # stage), so its counters stay zero — a NONZERO walked/fallback count
     # in the flagship metrics is itself the regression signal.
-    gate_metrics = GateMetrics(images.sparkSession) if collect_metrics else None
+    gate_metrics = GateMetrics(spark) if collect_metrics else None
     try:
         compile_native_checks(gate_schema, images.schema)
         gate_backend = "native"
     except NotNativelyCompilable:
         gate_backend = "udf"
-    valid = gate_filter(images, gate_schema, metrics=gate_metrics)
-    # column pruning: only what dedup needs flows past the gate.  The string
-    # image_id is dictionary-encoded to a 64-bit hash for the hot path —
-    # bucket/gram/block explosions shuffle tens of rows per image, and a
-    # fixed-width long beats a 15-char string in every exchange and join.
-    # (At 10^12 rows you would zipWithIndex against the Iceberg snapshot
-    # instead; xxhash64 collisions are ~n^2/2^64 — negligible at bench scale
-    # and detectable by the final re-join.)
-    slim = valid.select(
-        F.xxhash64("image_id").alias("nid"),
-        "image_id",
-        F.col("caption"),
-        "phash",
-    )
     # rebalance: the pruned projection of a wide table collapses to few scan
     # partitions; every downstream kernel (minhash UDF, phash explode,
     # containment grams) inherits that, so rebalance once.  Partition COUNT
@@ -97,81 +102,92 @@ def dedup_pipeline(
     # job was configured for), NOT the executor count: scaling the cluster
     # must not change the plan's partitioning, or per-partition fixed costs
     # make small runs look anti-scalable and big runs under-split.
-    par = int(images.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    slim = slim.repartition(par)
-    # P2+P3+P4 in ONE Arrow crossing (minhash.normalize_signatures_bands):
-    # caption normalization happens exactly once, inside the same kernel
-    # that shingles, OPH-hashes and folds the LSH band keys — the previous
-    # shape paid two full JVM<->Python round trips (an ArrowEvalPython
-    # normalize stage into the persisted projection, then a MapInArrow
-    # signature stage back over it) and shipped a num_perm-long `minhash`
-    # array out of Python (~2 KB/row) that banding immediately discarded
-    # (verification recomputes shingles from candidate texts).  The
-    # persisted projection now carries (nid, image_id, txt_norm, phash,
-    # bands) and feeds all four consumers: banding (bands), Jaccard verify
-    # + containment (txt_norm), phash (phash).
-    slim = normalize_signatures_bands(
-        slim, text_col="caption", cfg=cfg, out_text_col="txt_norm"
-    )
-    if persist:
-        # slim feeds three detector branches (minhash, phash, containment) —
-        # persist AND materialize eagerly: the branches fan out inside one
-        # job, and a lazily-persisted subtree would be recomputed
-        # concurrently by each branch before the cache populates.  At
-        # cluster scale this is the Iceberg signature-checkpoint write (P13)
-        # instead of executor memory.
-        slim = slim.persist()
-        n_valid = slim.count()
-    else:
-        n_valid = None
+    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # data-derived partition floor for the candidate/verify hot paths
-    # (round-5, found by the 10x stress draw): the probe/pair/text hash-join
-    # BUILD sides are corpus-proportional, so at a fixed session partition
-    # count their per-task maps grow without bound — 6.5M rows x 32
-    # partitions exceeded the 512 MB memory grant inside containment's
-    # candidate join.  ~50k gated rows per partition keeps every build in
-    # the tens of MB; at bench scale the floor resolves to the session conf
-    # and plans are byte-identical.  On a real cluster the job ALSO sizes
-    # spark.sql.shuffle.partitions to the data (SCALE.md §partitioning);
-    # this floor makes the operators safe even when it doesn't.
-    hot_par = par if n_valid is None else max(par, n_valid // 50_000)
+    def signatures() -> DataFrame:
+        valid = gate_filter(images, gate_schema, metrics=gate_metrics)
+        # column pruning: only what dedup needs flows past the gate.  The
+        # string image_id is dictionary-encoded to a 64-bit hash for the hot
+        # path — bucket/gram/block explosions shuffle tens of rows per
+        # image, and a fixed-width long beats a 15-char string in every
+        # exchange and join.  (At 10^12 rows you would zipWithIndex against
+        # the Iceberg snapshot instead; xxhash64 collisions are ~n^2/2^64 —
+        # negligible at bench scale and detectable by the final re-join.)
+        slim = valid.select(
+            F.xxhash64("image_id").alias("nid"),
+            "image_id",
+            F.col("caption"),
+            "phash",
+        ).repartition(par)
+        # P2+P3+P4 in ONE Arrow crossing (minhash.normalize_signatures_bands):
+        # caption normalization happens exactly once, inside the same kernel
+        # that shingles, OPH-hashes and folds the LSH band keys — the previous
+        # shape paid two full JVM<->Python round trips (an ArrowEvalPython
+        # normalize stage into the persisted projection, then a MapInArrow
+        # signature stage back over it) and shipped a num_perm-long `minhash`
+        # array out of Python (~2 KB/row) that banding immediately discarded
+        # (verification recomputes shingles from candidate texts).  The
+        # projection carries (nid, image_id, txt_norm, phash, bands) and
+        # feeds all four consumers: banding (bands), Jaccard verify +
+        # containment (txt_norm), phash (phash).
+        return normalize_signatures_bands(
+            slim, text_col="caption", cfg=cfg, out_text_col="txt_norm"
+        )
 
+    cached: tuple = ()
     try:
-        # banding is a plain posexplode of the persisted projection's
-        # precomputed band keys (no signature stage exists anymore — see the
-        # fused kernel above)
-        buckets = band_buckets(slim, id_col="nid", cfg=cfg, bands_col="bands")
+        if ckpt is None:
+            # slim feeds three detector branches (minhash, phash,
+            # containment) — persist AND materialize eagerly: the branches
+            # fan out inside one job, and a lazily-persisted subtree would be
+            # recomputed concurrently by each branch before the cache
+            # populates.  The checkpointed run lands it in the signatures
+            # stage instead of executor memory.
+            slim = signatures().persist()
+            cached = (slim,)
+            n_valid = slim.count()
+        else:
+            slim, n_valid = landed("signatures", "image_id", signatures)
+
+        # data-derived partition floor for the candidate/verify hot paths
+        # (round-5, found by the 10x stress draw): the probe/pair/text
+        # hash-join BUILD sides are corpus-proportional, so at a fixed
+        # session partition count their per-task maps grow without bound —
+        # 6.5M rows x 32 partitions exceeded the 512 MB memory grant inside
+        # containment's candidate join.  ~50k gated rows per partition keeps
+        # every build in the tens of MB; at bench scale the floor resolves
+        # to the session conf and plans are byte-identical.  On a real
+        # cluster the job ALSO sizes spark.sql.shuffle.partitions to the
+        # data (SCALE.md §partitioning); this floor makes the operators safe
+        # even when it doesn't.
+        hot_par = max(par, n_valid // 50_000)
+        skew_metrics: dict = {}
         # registry-managed persists for the three detectors' shared subtrees
-        # (banded bucket rows, phash block rows, container gram rows): each is
-        # referenced by BOTH a size-count branch and a join branch, and without
-        # a materialization barrier Catalyst duplicates the whole upstream
-        # computation (see candidate_pairs); unpersisted right after the edge
-        # checkpoint materializes
+        # (banded bucket rows, phash block rows, container gram rows): each
+        # is referenced by BOTH a size-count branch and a join branch, and
+        # without a materialization barrier Catalyst duplicates the whole
+        # upstream computation (see candidate_pairs); unpersisted right
+        # after the edges materialize
         op_caches: list = []
-        # try/finally: the skew-metrics collect, verify kernel, and the eager
-        # edge checkpoint below can all raise — without the finally the
-        # registry's persisted bucket/block/gram subtrees would stay pinned for
-        # the life of the session (the exact leak the registry exists to avoid)
-        try:
+
+        def edges_of() -> DataFrame:
+            # banding is a plain posexplode of the projection's precomputed
+            # band keys (no signature stage exists — see the fused kernel)
+            buckets = band_buckets(slim, id_col="nid", cfg=cfg, bands_col="bands")
             if collect_metrics:
                 cands, skew = candidate_pairs(
                     buckets, cfg, with_metrics=True, cache_registry=op_caches,
                     num_partitions=hot_par,
                 )
-                skew_metrics = skew.as_dict()
+                skew_metrics.update(skew.as_dict())
             else:
                 cands = candidate_pairs(
                     buckets, cfg, cache_registry=op_caches, num_partitions=hot_par
                 )
-                skew_metrics = {}
             caption_edges = verify_jaccard_text(
                 cands, slim, id_col="nid", text_col="txt_norm", cfg=cfg,
                 assume_normalized=True, num_partitions=hot_par,
-            ).select(
-                "src", "dst", F.lit("caption").alias("kind")
             )
-
             # P10 union carries the kind as its PRIORITY INT (caption=0 <
             # phash=1 < substring=2), not the string: the per-pair dedup
             # below is then agg(min(int)) — a primitive-buffer HashAggregate
@@ -180,16 +196,16 @@ def dedup_pipeline(
             # struct min has no mutable-buffer implementation).  The string
             # kind is re-derived from the int after the agg; semantics
             # (keep first by priority, deterministically) are unchanged.
-            edge_parts = [caption_edges.select("src", "dst", F.lit(0).alias("pri"))]
+            edges = caption_edges.select("src", "dst", F.lit(0).alias("pri"))
             if use_phash:
-                edge_parts.append(
+                edges = edges.unionByName(
                     phash_pairs(slim, id_col="nid", cfg=cfg,
                                 cache_registry=op_caches, num_partitions=hot_par).select(
                         "src", "dst", F.lit(1).alias("pri")
                     )
                 )
             if use_containment:
-                edge_parts.append(
+                edges = edges.unionByName(
                     containment_pairs(
                         slim, id_col="nid", text_col="txt_norm", cfg=cfg,
                         assume_normalized=True, cache_registry=op_caches,
@@ -198,10 +214,7 @@ def dedup_pipeline(
                         "src", "dst", F.lit(2).alias("pri")
                     )
                 )
-            edges = edge_parts[0]
-            for e in edge_parts[1:]:
-                edges = edges.unionByName(e)
-            edges = (
+            return (
                 edges.groupBy("src", "dst").agg(F.min("pri").alias("pri"))
                 .select(
                     "src", "dst",
@@ -210,43 +223,57 @@ def dedup_pipeline(
                     .otherwise("substring").alias("kind"),
                 )
             )
-            # P10 materialization: CC symmetrizes edges as `edges UNION
-            # edges.swapped` — the edge subtree appears TWICE under that union,
-            # and Spark computes each union branch's lineage independently
-            # (exchange reuse does not cover the pandas-UDF candidate/verify/
-            # containment cascade), so without a cut here the entire detector
-            # cascade runs twice inside CC's first job (measured 2.7x the staged
-            # cost).  localCheckpoint in the sandbox; the Iceberg edge-table
-            # write at cluster scale.
-            edges = edges.localCheckpoint(eager=True)
+
+        # try/finally: the skew-metrics collect, verify kernel, and the edge
+        # materialization can all raise — without the finally the registry's
+        # persisted bucket/block/gram subtrees would stay pinned for the life
+        # of the session (the exact leak the registry exists to avoid)
+        try:
+            if ckpt is None:
+                # P10 materialization: CC symmetrizes edges as `edges UNION
+                # edges.swapped` — the edge subtree appears TWICE under that
+                # union, and Spark computes each union branch's lineage
+                # independently (exchange reuse does not cover the pandas-UDF
+                # candidate/verify/containment cascade), so without a cut
+                # here the entire detector cascade runs twice inside CC's
+                # first job (measured 2.7x the staged cost).
+                edges = edges_of().localCheckpoint(eager=True)
+                # a cheap scan of the just-checkpointed blocks
+                n_edges = edges.count()
+            else:
+                edges, n_edges = landed("edges", "src", edges_of)
         finally:
-            # the edge checkpoint was the bucket-row cache's last consumer — free
-            # it before CC iterates rather than holding it until cleanup()
+            # the edge materialization was the bucket-row cache's last
+            # consumer — free it before CC iterates rather than holding it
+            # until cleanup()
             for df in op_caches:
                 df.unpersist()
 
-        # CC shuffles only edge-scale data: size its partitioning to the edges
-        # (count is a cheap scan of the just-checkpointed blocks), not to the
-        # corpus — see connected_components(shuffle_partitions=...)
-        n_edges = edges.count()
+        # CC shuffles only edge-scale data: size its partitioning to the
+        # edges, not to the corpus — see connected_components(shuffle_partitions=...)
         cc_par = min(par, max(8, (n_edges + 249_999) // 250_000))
-        nid_labels = connected_components(
-            edges.select("src", "dst"),
-            vertices=slim.select("nid"),
-            max_iters=cfg.cc_max_iters,
-            shuffle_partitions=cc_par,
-        )
-        # map the numeric hot-path ids back to image_ids (component keeps a
-        # stable representative: the image_id of its min-nid member)
-        iddict = slim.select("nid", "image_id")
-        comp_names = iddict.select(
-            F.col("nid").alias("component"), F.col("image_id").alias("component_id")
-        )
-        labels = (
-            nid_labels.join(iddict, nid_labels.id == iddict.nid)
-            .join(comp_names, "component")
-            .select("image_id", F.col("component_id").alias("component"))
-        )
+
+        def labels_of() -> DataFrame:
+            nid_labels = connected_components(
+                edges.select("src", "dst"),
+                vertices=slim.select("nid"),
+                max_iters=cfg.cc_max_iters,
+                shuffle_partitions=cc_par,
+            )
+            # map the numeric hot-path ids back to image_ids (component
+            # keeps a stable representative: the image_id of its min-nid
+            # member)
+            iddict = slim.select("nid", "image_id")
+            comp_names = iddict.select(
+                F.col("nid").alias("component"), F.col("image_id").alias("component_id")
+            )
+            return (
+                nid_labels.join(iddict, nid_labels.id == iddict.nid)
+                .join(comp_names, "component")
+                .select("image_id", F.col("component_id").alias("component"))
+            )
+
+        labels = labels_of() if ckpt is None else landed("labels", "image_id", labels_of)[0]
         return PipelineResult(
             labels=labels,
             edges=edges,
@@ -254,18 +281,19 @@ def dedup_pipeline(
             metrics={
                 "skew": skew_metrics,
                 "config_hash": cfg.config_hash(),
-                # gate counters are final here: the eager slim persist above
-                # already ran the gate for every row
+                # gate counters are final here: the signatures materialization
+                # above already ran the gate for every row (none when a
+                # completed signatures stage was read back)
                 "gate": {
                     "backend": gate_backend,
                     **(gate_metrics.as_dict() if gate_metrics is not None else {}),
                 },
             },
-            _cached=(slim,) if persist else (),
+            _cached=cached,
         )
     except BaseException:
         # release the eager slim persist on ANY failure downstream —
         # otherwise an aborted run pins the projection for the session
-        if persist:
-            slim.unpersist()
+        for df in cached:
+            df.unpersist()
         raise

@@ -12,7 +12,13 @@ from pyspark.sql import functions as F
 
 from jsonschema_jl_spark.config import DedupConfig
 from jsonschema_jl_spark.datagen import generate_images
-from jsonschema_jl_spark.io.checkpoint import CheckpointManager, resumable_signatures
+from jsonschema_jl_spark.io.checkpoint import (
+    LAYOUT_VERSION,
+    CheckpointManager,
+    resumable_pipeline,
+)
+from jsonschema_jl_spark.operators import pipeline
+from jsonschema_jl_spark.operators.pipeline import dedup_pipeline
 
 CFG = DedupConfig()
 N = 500
@@ -24,11 +30,28 @@ def images(spark):
     return generate_images(spark, N, CFG, with_bytes=False, with_malformed=False)
 
 
+def _counted(monkeypatch, *names):
+    """Count the calls dedup_pipeline makes to its module-level operator
+    bindings `names`; returns {name: calls}."""
+    calls = dict.fromkeys(names, 0)
+    for name in names:
+        fn = getattr(pipeline, name)
+
+        def counted(*args, _fn=fn, _name=name, **kwargs):
+            calls[_name] += 1
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline, name, counted)
+    return calls
+
+
 def test_write_resume_and_metrics(spark, images, tmp_path):
     root = str(tmp_path / "ckpt")
     ckpt = CheckpointManager(root, CFG, input_desc="test-images")
-    sigs = resumable_signatures(spark, images, ckpt, CFG, n_buckets=NB)
+    resumable_pipeline(spark, images, ckpt, CFG, n_buckets=NB)
+    sigs = ckpt.read_stage(spark, "signatures")
     assert sigs.count() == N
+    assert sigs.columns == ["nid", "image_id", "txt_norm", "phash", "bands", "part_bucket"]
     m = ckpt.metrics()["signatures"]
     assert m["buckets_done"] == NB
     assert m["rows"] == N
@@ -47,8 +70,8 @@ def test_write_resume_and_metrics(spark, images, tmp_path):
 
     # resume: only the missing bucket is recomputed (others keep timestamps)
     before = {b: v["ts"] for b, v in man["buckets"].items()}
-    sigs2 = resumable_signatures(spark, images, ckpt, CFG, n_buckets=NB)
-    assert sigs2.count() == N
+    resumable_pipeline(spark, images, ckpt, CFG, n_buckets=NB)
+    assert ckpt.read_stage(spark, "signatures").count() == N
     man2 = json.load(open(mp))
     for b, ts in before.items():
         assert man2["buckets"][b]["ts"] == ts
@@ -63,10 +86,8 @@ def test_config_hash_isolation(spark, images, tmp_path):
     # the base dir also carries the on-disk layout version, so an engine
     # upgrade that changes a stage's stored columns (config_hash unchanged)
     # never resumes from an old-layout checkpoint
-    from jsonschema_jl_spark.io.checkpoint import LAYOUT_VERSION
-
     assert c1.base.endswith(f"_L{LAYOUT_VERSION}")
-    resumable_signatures(spark, images, c1, CFG, n_buckets=2)
+    resumable_pipeline(spark, images, c1, CFG, n_buckets=2)
     assert c1.stage_complete("signatures", 2)
     assert not c2.stage_complete("signatures", 2)
 
@@ -78,6 +99,36 @@ def test_bucketing_is_deterministic(spark, images, tmp_path):
     # no dup/dropped rows across buckets
     assert df.count() == N
     assert df.select("image_id").distinct().count() == N
+
+
+def _assert_exactly_once(df):
+    assert df.count() == df.select("image_id").distinct().count() == N
+
+
+def test_resume_with_more_buckets_restarts_stage(spark, images, tmp_path):
+    ckpt = CheckpointManager(str(tmp_path / "c"), CFG)
+    rows = images.select("image_id", "caption")
+    ckpt.write_stage(rows, "s", "image_id", n_buckets=4)
+    ckpt.write_stage(rows, "s", "image_id", n_buckets=8)
+    _assert_exactly_once(ckpt.read_stage(spark, "s"))
+    assert ckpt.read_manifest("s")["lineage"]["n_buckets"] == 8
+    assert ckpt.stage_complete("s", 8)
+    assert not ckpt.stage_complete("s", 4)
+
+
+def test_resume_with_fewer_buckets_after_partial_write(spark, images, tmp_path):
+    root = str(tmp_path / "c")
+    rows = images.select("image_id", "caption")
+    killing = _KillingCkpt(root, CFG, fail_stage="s", fail_after=5)
+    with pytest.raises(RuntimeError, match="mid-stage kill"):
+        killing.write_stage(rows, "s", "image_id", n_buckets=8)
+    ckpt = CheckpointManager(root, CFG)
+    assert len(ckpt.completed_buckets("s")) == 5
+    # 5 done buckets of 8 do not complete a 4-bucket stage
+    assert not ckpt.stage_complete("s", 4)
+    ckpt.write_stage(rows, "s", "image_id", n_buckets=4)
+    _assert_exactly_once(ckpt.read_stage(spark, "s"))
+    assert ckpt.completed_buckets("s") == {0, 1, 2, 3}
 
 
 class _KillingCkpt(CheckpointManager):
@@ -97,20 +148,36 @@ class _KillingCkpt(CheckpointManager):
                 raise RuntimeError("simulated mid-stage kill")
 
 
-def test_resume_after_midstage_kill_sf001_corpus(spark):
+def test_resume_after_midstage_kill_sf001_corpus(spark, monkeypatch):
     """North-rule resume evidence at the sf0.01 corpus (input_hint-shaped
     images derived from the driver documents parquet): kill the run midway
     through the edges stage, resume with a fresh manager, and require
     (a) identical cluster partition to the direct non-checkpointed
-    pipeline, (b) the completed signatures stage untouched by the resume,
-    (c) the edge buckets that committed before the kill skipped (their
-    manifest entries byte-identical)."""
+    pipeline, (b) the completed signatures stage untouched by the resume
+    and its kernel not run, (c) the edge buckets that committed before the
+    kill skipped (their manifest entries byte-identical).  A second resume
+    with only the labels stage deleted runs neither the kernel nor the
+    candidate generator and leaves both upstream manifests byte-identical."""
     import tempfile
     from collections import defaultdict
 
     from jsonschema_jl_spark.datagen.from_documents import images_from_documents
-    from jsonschema_jl_spark.io.checkpoint import resumable_pipeline
-    from jsonschema_jl_spark.operators.pipeline import dedup_pipeline
+
+    def partition(rows):
+        comp = defaultdict(set)
+        for r in rows:
+            comp[r.component].add(r.image_id)
+        return {frozenset(v) for v in comp.values()}
+
+    def manifest_bytes(ckpt, stage):
+        with open(os.path.join(ckpt.base, stage, "_manifest.json"), "rb") as fh:
+            return fh.read()
+
+    def counted_resume(ckpt):
+        with monkeypatch.context() as mp:
+            calls = _counted(mp, "normalize_signatures_bands", "candidate_pairs")
+            labels = partition(resumable_pipeline(spark, images, ckpt, CFG, n_buckets=NB).collect())
+        return labels, calls
 
     images = images_from_documents(spark, "/root/testdata/sf0.01").persist()
     images.count()
@@ -127,31 +194,33 @@ def test_resume_after_midstage_kill_sf001_corpus(spark):
         assert sum(1 for v in edges_before.values() if v.get("done")) == 2
         sig_manifest = ckpt.read_manifest("signatures")
 
-        labels = resumable_pipeline(spark, images, ckpt, CFG, n_buckets=NB)
-
-        def partition(rows):
-            comp = defaultdict(set)
-            for r in rows:
-                comp[r.component].add(r.image_id)
-            return {frozenset(v) for v in comp.values()}
+        resumed, calls = counted_resume(ckpt)
+        # the resume started at the edges stage: no gate or kernel pass
+        assert calls == {"normalize_signatures_bands": 0, "candidate_pairs": 1}
 
         direct = dedup_pipeline(images, CFG, collect_metrics=False)
-        assert partition(labels.collect()) == partition(direct.labels.collect())
+        expected = partition(direct.labels.collect())
         direct.cleanup()
+        assert resumed == expected
         # completed stages/buckets were skipped, not recomputed
         assert ckpt.read_manifest("signatures") == sig_manifest
         edges_after = ckpt.read_manifest("edges")["buckets"]
         for b, v in edges_before.items():
             if v.get("done"):
                 assert edges_after[b] == v
+
+        # a run killed in the labels stage resumes from the stored edges
+        upstream = {s: manifest_bytes(ckpt, s) for s in ("signatures", "edges")}
+        shutil.rmtree(os.path.join(ckpt.base, "labels"))
+        relabeled, calls = counted_resume(ckpt)
+        assert calls == {"normalize_signatures_bands": 0, "candidate_pairs": 0}
+        assert relabeled == expected
+        assert {s: manifest_bytes(ckpt, s) for s in upstream} == upstream
     images.unpersist()
 
 
 def test_resumable_pipeline_matches_direct_and_resumes(spark, tmp_path):
     from collections import defaultdict
-
-    from jsonschema_jl_spark.io.checkpoint import resumable_pipeline
-    from jsonschema_jl_spark.operators.pipeline import dedup_pipeline
 
     images = generate_images(spark, 600, CFG, with_bytes=False).persist()
     ckpt = CheckpointManager(str(tmp_path / "rp"), CFG, input_desc="n600")

@@ -29,6 +29,9 @@ SUBSET = [
     "emb_cosine_topk",
     "images_frame_sample",
     "audio_features",
+    # the flagship in memory and checkpointed: one oracle for both modes
+    "images_dedup_clusters",
+    "images_dedup_resumable",
 ]
 
 

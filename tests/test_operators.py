@@ -21,7 +21,7 @@ from jsonschema_jl_spark.operators.multimodal import (
 )
 from jsonschema_jl_spark.operators.similarity import cosine_topk, lsh_ann_pairs
 from jsonschema_jl_spark.operators.lsh import band_buckets, candidate_pairs, salted_candidate_pairs
-from jsonschema_jl_spark.operators.minhash import with_signatures
+from jsonschema_jl_spark.operators.minhash import normalize_signatures_bands, with_signatures
 from jsonschema_jl_spark.operators.substring import containment_pairs, suffix_array_containment
 
 CFG = DedupConfig()
@@ -241,8 +241,9 @@ def test_salted_pairs_equal_capped_union(spark):
               {"num_perm": 64, "num_bands": 8, "rows_per_band": 8}]
 )
 def test_kernel_bands_pair_parity(spark, shape):
-    """Kernel-computed band keys (band_keys_np via with_bands=True) must
-    yield the SAME candidate pair set as the JVM slice+xxhash64 path —
+    """The fused kernel's band keys (normalize_signatures_bands, the
+    pipeline hot path) must yield the SAME candidate pair set as the JVM
+    slice+xxhash64 path over with_signatures' minhash of the same rows —
     the bucket hash is an internal join key; grouping semantics are by
     band content, so the two formulations may differ only by 64-bit hash
     collisions (none at test scale).  Parametrized over banding shapes
@@ -252,7 +253,8 @@ def test_kernel_bands_pair_parity(spark, shape):
     cfg = CFG if shape is None else dataclasses.replace(CFG, **shape)
     images = generate_images(spark, 400, cfg, with_bytes=False, with_malformed=False)
     slim = images.select("image_id", "caption", "phash")
-    sigs = with_signatures(slim, cfg=cfg, keep_shingles=False, with_bands=True).persist()
+    bands = normalize_signatures_bands(slim, cfg=cfg).select("image_id", "bands")
+    sigs = with_signatures(slim, cfg=cfg, keep_shingles=False).join(bands, "image_id").persist()
     b_kernel = band_buckets(sigs, cfg=cfg, bands_col="bands")
     b_jvm = band_buckets(sigs, sig_col="minhash", cfg=cfg)
     pk = {(r.src, r.dst) for r in candidate_pairs(b_kernel, cfg).collect()}

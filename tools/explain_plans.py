@@ -30,7 +30,9 @@ from pyspark.sql import functions as F
 from jsonschema_jl_spark.config import DedupConfig
 from jsonschema_jl_spark.session import get_spark
 from jsonschema_jl_spark.gate.gate import apply_gate, gate_filter
-from jsonschema_jl_spark.operators.minhash import with_signatures, normalize_udf
+from jsonschema_jl_spark.operators.minhash import (
+    normalize_signatures_bands, normalize_udf, with_signatures,
+)
 from jsonschema_jl_spark.operators.lsh import band_buckets, candidate_pairs
 from jsonschema_jl_spark.operators.phash import phash_pairs
 from jsonschema_jl_spark.operators.substring import containment_pairs
@@ -159,8 +161,9 @@ def main() -> None:
     ))
 
     # 4. LSH candidate pairs: banding explode + ONE grouping shuffle + dedup
-    sigs = with_signatures(slim, text_col="txt_norm", cfg=CFG, keep_shingles=False,
-                           assume_normalized=True, with_bands=True)
+    sigs = normalize_signatures_bands(
+        part.select(F.xxhash64("p_partkey").alias("nid"), "p_name"), text_col="p_name", cfg=CFG
+    )
     buckets = band_buckets(sigs, id_col="nid", cfg=CFG, bands_col="bands")
     out.append(section(
         "LSH banding + candidate pairs (`band_buckets` → `candidate_pairs`)",
