@@ -106,55 +106,31 @@ def main() -> None:
       lambda: noop(band_buckets(slim, id_col="nid", cfg=CFG, bands_col="bands")))
 
     def run_cands():
-        caches: list = []
-        try:
-            buckets = band_buckets(slim, id_col="nid", cfg=CFG, bands_col="bands")
-            noop(candidate_pairs(buckets, CFG, cache_registry=caches,
-                                 num_partitions=hot_par))
-        finally:
-            for df in caches:
-                df.unpersist()
+        buckets = band_buckets(slim, id_col="nid", cfg=CFG, bands_col="bands")
+        noop(candidate_pairs(buckets, CFG, num_partitions=hot_par))
 
     t("candidate_pairs_noop", run_cands)
 
     def run_verify():
-        caches: list = []
-        try:
-            buckets = band_buckets(slim, id_col="nid", cfg=CFG, bands_col="bands")
-            cands = candidate_pairs(buckets, CFG, cache_registry=caches,
-                                    num_partitions=hot_par)
-            noop(verify_jaccard_text(
-                cands, slim, id_col="nid", text_col="txt_norm", cfg=CFG,
-                assume_normalized=True, num_partitions=hot_par,
-            ))
-        finally:
-            for df in caches:
-                df.unpersist()
+        buckets = band_buckets(slim, id_col="nid", cfg=CFG, bands_col="bands")
+        cands = candidate_pairs(buckets, CFG, num_partitions=hot_par)
+        noop(verify_jaccard_text(
+            cands, slim, id_col="nid", text_col="txt_norm", cfg=CFG,
+            assume_normalized=True, num_partitions=hot_par,
+        ))
 
     t("verify_noop", run_verify)
 
     def run_phash():
-        caches: list = []
-        try:
-            noop(phash_pairs(slim, id_col="nid", cfg=CFG,
-                             cache_registry=caches, num_partitions=hot_par))
-        finally:
-            for df in caches:
-                df.unpersist()
+        noop(phash_pairs(slim, id_col="nid", cfg=CFG, num_partitions=hot_par))
 
     t("phash_noop", run_phash)
 
     def run_containment():
-        caches: list = []
-        try:
-            noop(containment_pairs(
-                slim, id_col="nid", text_col="txt_norm", cfg=CFG,
-                assume_normalized=True, cache_registry=caches,
-                num_partitions=hot_par,
-            ))
-        finally:
-            for df in caches:
-                df.unpersist()
+        noop(containment_pairs(
+            slim, id_col="nid", text_col="txt_norm", cfg=CFG,
+            assume_normalized=True, num_partitions=hot_par,
+        ))
 
     t("containment_noop", run_containment)
     slim.unpersist()

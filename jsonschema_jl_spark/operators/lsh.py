@@ -5,27 +5,28 @@ Spark-first design:
     signature kernel emits them vectorized (minhash.band_keys_np), so the
     explode carries no per-row hashing; a JVM-side xxhash64-over-slices
     fallback serves callers holding bare signatures;
-  * candidate pairs come from a self-equi-join on the bucket key (the band
-    id is folded into the bucket hash, so `bucket` alone is the join key),
-    which AQE can skew-split; the join's shuffle partitioning on `bucket` is
-    reused from the size-filter aggregation, so the extra skew pass costs no
-    extra shuffle of the big side;
-  * skew handling (north rule, BASELINE.json:6): bucket sizes are measured
-    first; buckets above cfg.bucket_cap are excluded from pairing and
-    reported as metrics (count + dropped row mass).  Stop-shingle buckets at
-    web scale otherwise explode quadratically — a size-s bucket yields
-    s(s-1)/2 pairs, so a single 1M-row bucket would emit 5*10^11 pairs.
-    Capped mass is recall-accounted by the oracle harness at identical
-    config, and the phash/containment passes still cover capped rows.
+  * candidate pairs come from ONE exchange of the (id, bucket) rows on the
+    bucket key (the band id is folded into the bucket hash, so `bucket`
+    alone is the group key), paired where they land by the group-pairs
+    Arrow kernel (operators/group_pairs.py): sort by bucket, cut the runs,
+    emit every pair inside a run in bounded batches.  Nothing is persisted,
+    counted by a separate aggregate or collected into lists;
+  * skew handling (north rule, BASELINE.json:6): buckets above
+    cfg.bucket_cap are excluded from pairing by the kernel and reported as
+    metrics (count + dropped row mass, accumulated as the kernel runs).
+    Stop-shingle buckets at web scale otherwise explode quadratically — a
+    size-s bucket yields s(s-1)/2 pairs, so a single 1M-row bucket would
+    emit 5*10^11 pairs.  Capped mass is recall-accounted by the oracle
+    harness at identical config, and the phash/containment passes still
+    cover capped rows.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from jsonschema_jl_spark.config import DedupConfig, DEFAULT_CONFIG
+from jsonschema_jl_spark.operators.group_pairs import bucket_emitter, pair_groups
 
 
 def band_buckets(
@@ -63,10 +64,23 @@ def band_buckets(
     )
 
 
-@dataclass
 class SkewMetrics:
-    capped_buckets: int
-    capped_rows: int
+    """Buckets above cfg.bucket_cap and their rows, counted by the pairing
+    kernel as it runs (Spark accumulators: no extra action).  Read them
+    after the pairs materialize — before, they read 0 — and once per
+    kernel run: a recomputation of the pairs, or a retried task (the
+    GateMetrics caveat), adds again."""
+
+    def __init__(self, sc) -> None:
+        self.accumulators = (sc.accumulator(0), sc.accumulator(0))
+
+    @property
+    def capped_buckets(self) -> int:
+        return self.accumulators[0].value
+
+    @property
+    def capped_rows(self) -> int:
+        return self.accumulators[1].value
 
     def as_dict(self) -> dict:
         return {"capped_buckets": self.capped_buckets, "capped_rows": self.capped_rows}
@@ -74,94 +88,31 @@ class SkewMetrics:
 
 def candidate_pairs(
     buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG, with_metrics: bool = False,
-    cache_registry: list | None = None, num_partitions: int | None = None,
+    num_partitions: int | None = None,
 ):
     """Distinct (src, dst) candidate pairs (src < dst) from shared buckets.
 
-    ONE shuffle of the big side: the bucket rows are hash-partitioned once;
-    a per-bucket hash-aggregated count filters to rows in shared, non-capped
-    buckets FIRST (shuffled-hash join against the tiny survivor-bucket set,
-    reusing the same exchange), then collect_list + map-side nested-transform
-    pair expansion run on that (small) survivor set — no second exchange and
-    NO SORT anywhere (a count window would sort all rows x bands).
+    ONE exchange of the (id, bucket) rows, hash-partitioned on the bucket
+    into `num_partitions` (the pipeline derives it from the gated row
+    count, which bounds the rows one kernel task holds no matter how far
+    the input outgrows the session's shuffle-partition conf), then the
+    group-pairs kernel: buckets of one row or above cfg.bucket_cap emit
+    nothing, the rest emit every member pair in batches of at most 2^20.
+    `band` is projected off before the exchange — it is already folded
+    into the bucket hash, and at b bands these rows are the pipeline's
+    widest fixed-width shuffle.
 
-    Ordering matters twice at scale: (a) collect_list's object buffers are
-    ~10x costlier per row than scalar aggs, so list-building must see only
-    the shared-bucket minority, not all O(rows x bands) bucket rows; (b) a
-    giant stop-shingle bucket would otherwise materialize its entire
-    membership as one array before the cap could drop it — the row-level
-    pre-filter caps memory per task regardless of bucket skew.
-
-    This replaces the classic bucket self-join, which costs an extra
-    size-filter aggregation plus join exchanges of the full membership.
-
-    Returns df, or (df, SkewMetrics) when with_metrics=True (metrics trigger
-    one extra action over the per-bucket counts only)."""
-    # ONE exchange, ZERO sorts: hash-partition the bucket rows once; the
-    # per-bucket count (hash agg), the survivor filter (shuffled-hash join —
-    # SMJ would re-sort both sides), and the collect_list all reuse that
-    # partitioning.  The previous formulation used a count window, whose
-    # WindowExec must SORT all O(rows x bands) bucket rows inside each
-    # partition — measured as the single largest non-kernel cost at 25.6M
-    # bucket rows; hash aggregation needs no order.
-    #
-    # `rows` MUST be persisted for the sharing to actually happen: without
-    # it, Catalyst plans the count branch as partial-agg -> exchange of
-    # (bucket, n) — a DIFFERENT exchange from the raw-row one — so exchange
-    # reuse never fires and the whole upstream MinHash/banding subtree runs
-    # TWICE (event-log profile at 864k rows: two MapInArrow stages, 80s +
-    # 31s task-time, plus a redundant 286 MB partial-agg exchange).  The
-    # persisted bucket rows are ~0.8C of fixed-width longs (SCALE.md shuffle
-    # budget); at cluster scale this materialization is the banding slice of
-    # the P13 signature checkpoint.  Caller owns the unpersist via
-    # `cache_registry` (the pipeline unpersists after the edge checkpoint);
-    # with no registry the persist is skipped to avoid leaking caches in
-    # long-lived sessions (plan falls back to the double-compute).
-    # `num_partitions` sizes the bucket-row exchange to the DATA (the
-    # pipeline derives it from the gated row count): the explicit
-    # repartition's partitioning propagates through the size agg, the
-    # survivor hash join, and the collect_list — all downstream exchanges
-    # of this chain inherit it, which bounds per-task state no matter how
-    # far the input outgrows the session's shuffle-partition conf (the 10x
-    # stress draw failed exactly here-abouts before this floor existed)
-    par = num_partitions or int(
-        buckets.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    # band is metrics-only downstream of banding (the band id is already
-    # folded into the bucket hash) — project it off BEFORE the big exchange:
-    # at b bands the bucket rows are the pipeline's widest fixed-width
-    # shuffle, and the spare int is ~20% of its bytes
-    rows = buckets.select("id", "bucket").repartition(par, "bucket")
-    if cache_registry is not None:
-        rows = rows.persist()
-        cache_registry.append(rows)
-    counts = rows.groupBy("bucket").agg(F.count("*").alias("n"))
-    shared = counts.filter((F.col("n") > 1) & (F.col("n") <= cfg.bucket_cap)).drop("n")
-    ok_rows = rows.join(shared.hint("SHUFFLE_HASH"), "bucket")
-    grouped = ok_rows.groupBy("bucket").agg(F.collect_list("id").alias("ids"))
-    pairs = (
-        grouped.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) ->"
-                    " transform(slice(ids, i + 2, size(ids)), y ->"
-                    " struct(least(x, y) AS src, greatest(x, y) AS dst))))"
-                )
-            ).alias("p")
-        )
-        .select("p.src", "p.dst")
-        .dropDuplicates(["src", "dst"])
-    )
-    if not with_metrics:
-        return pairs
-    # reuse `counts` (same persisted bucket rows / same agg subtree) — a
-    # fresh buckets.groupBy here re-ran MinHash + banding a third time
-    capped = (
-        counts.filter(F.col("n") > cfg.bucket_cap)
-        .agg(F.count("*").alias("b"), F.coalesce(F.sum("n"), F.lit(0)).alias("r"))
-        .collect()[0]
-    )
-    return pairs, SkewMetrics(capped_buckets=capped["b"], capped_rows=int(capped["r"]))
+    Returns df, or (df, SkewMetrics) when with_metrics=True; the metrics
+    fill in as the pairs materialize (see SkewMetrics)."""
+    id_type = buckets.schema["id"].dataType
+    skew = SkewMetrics(buckets.sparkSession.sparkContext) if with_metrics else None
+    pairs = pair_groups(
+        buckets.select("id", "bucket"), ["bucket"], bucket_emitter,
+        T.StructType([T.StructField("src", id_type), T.StructField("dst", id_type)]),
+        cap=cfg.bucket_cap, num_partitions=num_partitions,
+        capped=skew.accumulators if skew is not None else None,
+    ).dropDuplicates(["src", "dst"])
+    return (pairs, skew) if with_metrics else pairs
 
 
 def salted_candidate_pairs(

@@ -1,22 +1,24 @@
 """phash Hamming-ball candidate generation + exact verification (P8).
 
-Pigeonhole block join: to find all pairs within Hamming distance r of a
-64-bit phash, split the 64 bits into r+1 disjoint blocks — any pair within
-distance r agrees exactly on at least one block (pigeonhole), so equi-joins
-on (block_id, block_bits) find every candidate with zero recall loss.
-Exact verify is native: bit_count(a.phash ^ b.phash) <= r (Spark 4
-`bit_count`, whole-stage codegen).
+Pigeonhole blocks: to find all pairs within Hamming distance r of a 64-bit
+phash, split the 64 bits into r+1 disjoint blocks — any pair within
+distance r agrees exactly on at least one block (pigeonhole), so grouping
+on (block_id, block_bits) finds every candidate with zero recall loss.
 
-At 10^12 rows each block join is a standard shuffle equi-join on a 64/(r+1)-
-bit key — well-distributed for real phashes; degenerate keys (e.g. the
-all-zero phash of blank images) are capped like LSH buckets.
+The block rows cross ONE exchange on (block, key) and are paired where
+they land by the group-pairs Arrow kernel (operators/group_pairs.py): each
+block's members pair up, and a numpy popcount of the XOR'd phashes keeps
+the pairs within the radius — the exact verify runs in the same batch that
+builds the pair.  Degenerate keys (e.g. the all-zero phash of blank
+images) are capped like LSH buckets.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from jsonschema_jl_spark.config import DedupConfig, DEFAULT_CONFIG
+from jsonschema_jl_spark.operators.group_pairs import block_emitter, pair_groups
 
 
 def phash_blocks(
@@ -42,63 +44,24 @@ def phash_blocks(
 def phash_pairs(
     df: DataFrame, id_col: str = "image_id", phash_col: str = "phash",
     cfg: DedupConfig = DEFAULT_CONFIG, block_cap: int = 10_000,
-    cache_registry: list | None = None, num_partitions: int | None = None,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """Distinct (src, dst, hamming) pairs with Hamming(phash) <= radius.
 
-    ONE exchange of the block rows, ZERO sorts — the same shape as
-    lsh.candidate_pairs: hash-partition (id, ph, block, key) once, filter
-    to shared non-capped blocks with a SHUFFLE_HASH join against the tiny
-    survivor set, then collect_list + map-side nested-transform expansion
-    emits each pair WITH both phashes (the payload is one 8-byte long per
-    member, so carrying it through the list costs nothing), and the native
-    bit_count verify runs inside the same stage.  This replaces the
-    two-sided membership self-join, which paid an extra exchange of the
-    full membership on each side.
-
-    With a cache_registry the block rows are repartitioned on the block
-    key and persisted so the size count and the collect_list share one
-    exchange (same partial-agg-exchange reuse failure as
-    lsh.candidate_pairs; see there); the caller unpersists."""
-    blocks = phash_blocks(df, id_col, phash_col, cfg)
-    par = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    if cache_registry is not None or num_partitions is not None:
-        # data-sized exchange (see lsh.candidate_pairs): the explicit
-        # partitioning propagates through the size agg, survivor join, and
-        # collect_list, bounding per-task hash-join builds at any scale
-        blocks = blocks.repartition(par, "block", "key")
-    if cache_registry is not None:
-        blocks = blocks.persist()
-        cache_registry.append(blocks)
-    sizes = blocks.groupBy("block", "key").agg(F.count("*").alias("n"))
-    ok = sizes.filter((F.col("n") > 1) & (F.col("n") <= block_cap)).drop("n")
-    member = blocks.join(ok.hint("SHUFFLE_HASH"), ["block", "key"])
-    grouped = member.groupBy("block", "key").agg(
-        F.collect_list(F.struct("id", "ph")).alias("ms")
-    )
-    # per-member pair expansion: posexplode the membership and emit one
-    # O(cap) slice per member — the flatten(transform(...)) single-array
-    # shape materializes all C(n,2) pair structs of a block as ONE array
-    # value, and at block_cap=10_000 a cap-sized degenerate block (e.g.
-    # blank-image phashes) would build a ~5e7-struct (~1+ GB) array in a
-    # single task row.  Member rows stream through the two Generates inside
-    # one codegen stage, so per-row state is O(cap), total work unchanged.
-    # (lsh.candidate_pairs keeps the single-array template: bucket_cap=64
-    # bounds it at 2,016 structs.)
-    return (
-        grouped.select(F.col("ms"), F.posexplode("ms").alias("i", "x"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(slice(ms, i + 2, size(ms)), y -> struct("
-                    "least(x.id, y.id) AS src, greatest(x.id, y.id) AS dst,"
-                    " bit_count(x.ph ^ y.ph) AS hamming))"
-                )
-            ).alias("p")
-        )
-        .select("p.src", "p.dst", "p.hamming")
-        .filter(F.col("hamming") <= F.lit(cfg.hamming_radius))
-        .dropDuplicates(["src", "dst"])
-    )
+    ONE exchange of the (id, ph, block, key) rows on (block, key) into
+    `num_partitions` (a data-sized floor, as in lsh.candidate_pairs), then
+    the group-pairs kernel: blocks of one row or above `block_cap` emit
+    nothing, the rest emit their member pairs in batches of at most 2^20,
+    each with its popcount Hamming distance, kept when within
+    cfg.hamming_radius.  A null phash never pairs (its distance is null),
+    so its rows are dropped before the exchange."""
+    blocks = phash_blocks(df, id_col, phash_col, cfg).filter(F.col("ph").isNotNull())
+    id_type = blocks.schema["id"].dataType
+    return pair_groups(
+        blocks, ["block", "key"], block_emitter(cfg.hamming_radius),
+        T.StructType([
+            T.StructField("src", id_type), T.StructField("dst", id_type),
+            T.StructField("hamming", T.IntegerType()),
+        ]),
+        cap=block_cap, num_partitions=num_partitions,
+    ).dropDuplicates(["src", "dst"])

@@ -161,29 +161,21 @@ def dedup_pipeline(
         # data (SCALE.md §partitioning); this floor makes the operators safe
         # even when it doesn't.
         hot_par = max(par, n_valid // 50_000)
-        skew_metrics: dict = {}
-        # registry-managed persists for the three detectors' shared subtrees
-        # (banded bucket rows, phash block rows, container gram rows): each
-        # is referenced by BOTH a size-count branch and a join branch, and
-        # without a materialization barrier Catalyst duplicates the whole
-        # upstream computation (see candidate_pairs); unpersisted right
-        # after the edges materialize
-        op_caches: list = []
+        # the LSH capped-mass accumulators: final only once the edges have
+        # materialized (see lsh.SkewMetrics)
+        skew: list = []
 
         def edges_of() -> DataFrame:
             # banding is a plain posexplode of the projection's precomputed
             # band keys (no signature stage exists — see the fused kernel)
             buckets = band_buckets(slim, id_col="nid", cfg=cfg, bands_col="bands")
             if collect_metrics:
-                cands, skew = candidate_pairs(
-                    buckets, cfg, with_metrics=True, cache_registry=op_caches,
-                    num_partitions=hot_par,
+                cands, metrics = candidate_pairs(
+                    buckets, cfg, with_metrics=True, num_partitions=hot_par
                 )
-                skew_metrics.update(skew.as_dict())
+                skew.append(metrics)
             else:
-                cands = candidate_pairs(
-                    buckets, cfg, cache_registry=op_caches, num_partitions=hot_par
-                )
+                cands = candidate_pairs(buckets, cfg, num_partitions=hot_par)
             caption_edges = verify_jaccard_text(
                 cands, slim, id_col="nid", text_col="txt_norm", cfg=cfg,
                 assume_normalized=True, num_partitions=hot_par,
@@ -199,8 +191,7 @@ def dedup_pipeline(
             edges = caption_edges.select("src", "dst", F.lit(0).alias("pri"))
             if use_phash:
                 edges = edges.unionByName(
-                    phash_pairs(slim, id_col="nid", cfg=cfg,
-                                cache_registry=op_caches, num_partitions=hot_par).select(
+                    phash_pairs(slim, id_col="nid", cfg=cfg, num_partitions=hot_par).select(
                         "src", "dst", F.lit(1).alias("pri")
                     )
                 )
@@ -208,8 +199,7 @@ def dedup_pipeline(
                 edges = edges.unionByName(
                     containment_pairs(
                         slim, id_col="nid", text_col="txt_norm", cfg=cfg,
-                        assume_normalized=True, cache_registry=op_caches,
-                        num_partitions=hot_par,
+                        assume_normalized=True, num_partitions=hot_par,
                     ).select(
                         "src", "dst", F.lit(2).alias("pri")
                     )
@@ -224,30 +214,22 @@ def dedup_pipeline(
                 )
             )
 
-        # try/finally: the skew-metrics collect, verify kernel, and the edge
-        # materialization can all raise — without the finally the registry's
-        # persisted bucket/block/gram subtrees would stay pinned for the life
-        # of the session (the exact leak the registry exists to avoid)
-        try:
-            if ckpt is None:
-                # P10 materialization: CC symmetrizes edges as `edges UNION
-                # edges.swapped` — the edge subtree appears TWICE under that
-                # union, and Spark computes each union branch's lineage
-                # independently (exchange reuse does not cover the pandas-UDF
-                # candidate/verify/containment cascade), so without a cut
-                # here the entire detector cascade runs twice inside CC's
-                # first job (measured 2.7x the staged cost).
-                edges = edges_of().localCheckpoint(eager=True)
-                # a cheap scan of the just-checkpointed blocks
-                n_edges = edges.count()
-            else:
-                edges, n_edges = landed("edges", "src", edges_of)
-        finally:
-            # the edge materialization was the bucket-row cache's last
-            # consumer — free it before CC iterates rather than holding it
-            # until cleanup()
-            for df in op_caches:
-                df.unpersist()
+        if ckpt is None:
+            # P10 materialization: CC symmetrizes edges as `edges UNION
+            # edges.swapped` — the edge subtree appears TWICE under that
+            # union, and Spark computes each union branch's lineage
+            # independently (exchange reuse does not cover the Python
+            # candidate/verify/containment cascade), so without a cut here
+            # the entire detector cascade runs twice inside CC's first job
+            # (measured 2.7x the staged cost).
+            edges = edges_of().localCheckpoint(eager=True)
+            # a cheap scan of the just-checkpointed blocks
+            n_edges = edges.count()
+        else:
+            edges, n_edges = landed("edges", "src", edges_of)
+        # the detector kernels ran exactly once, inside the materialization
+        # above (none ran when a completed edges stage was read back)
+        skew_metrics = skew[0].as_dict() if skew else {}
 
         # CC shuffles only edge-scale data: size its partitioning to the
         # edges, not to the corpus — see connected_components(shuffle_partitions=...)

@@ -170,9 +170,8 @@ def lsh_ann_pairs(
     no vector ever crosses the candidate-generation shuffles: the exploded
     bucket rows carry only (id, table, bucket) — the key computation reads
     `vec` map-side and projects it off before the exchange — candidate id
-    pairs come from the same one-exchange hash-agg + SHUFFLE_HASH survivor
-    join + collect_list nested-transform expansion as the MinHash path
-    (lsh.candidate_pairs), and the exact-cosine verify re-fetches vectors
+    pairs come from a one-exchange hash-agg + SHUFFLE_HASH survivor join +
+    collect_list nested-transform expansion, and the exact-cosine verify re-fetches vectors
     for the (tiny) candidate set by two narrow id joins (the
     verify.verify_jaccard_text pattern).  With a `cache_registry` the
     bucket rows are repartitioned on the bucket key and persisted so the
@@ -222,9 +221,7 @@ def lsh_ann_pairs(
     # builds up to ~2M two-long structs (~tens of MB) in one row, the exact
     # per-task memory blow-up class the stress work eliminates.  The rows
     # stream through the Generates inside one codegen stage, so the full
-    # C(n,2) set never materializes at once.  (lsh.candidate_pairs keeps the
-    # single-array shape: its bucket_cap=64 bounds the array at 2,016
-    # structs.)
+    # C(n,2) set never materializes at once.
     pairs = (
         grouped.select(F.col("ids"), F.posexplode("ids").alias("i", "x"))
         .select(
@@ -393,8 +390,7 @@ def ngram_token_pairs(
     projections — the earlier formulation inlined the split expression into
     both size() and slice() and leaned on codegen CSE across a lambda
     boundary to dedup it.  Pair generation is the one-exchange
-    collect_list expansion (lsh.candidate_pairs shape) instead of the
-    two-sided membership self-join; the shared-gram count falls out of a
+    collect_list expansion instead of the two-sided membership self-join; the shared-gram count falls out of a
     groupBy over the expanded pairs.  With a cache_registry the gram rows
     are repartitioned on the gram key and persisted so the anchor-size
     count and the collect_list share one exchange; the caller unpersists.

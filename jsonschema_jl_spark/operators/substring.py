@@ -2,15 +2,19 @@
 
 Two implementations of "caption A is an exact substring of caption B":
 
-1. `containment_pairs` (primary, shuffle-friendly): anchor-gram join.
+1. `containment_pairs` (primary, shuffle-friendly): anchor-gram grouping.
    A ⊆ B implies A's first g characters occur as some g-gram of B.  So:
-   explode every document's distinct g-gram hashes (O(total_chars) longs),
-   equi-join against the g-char *prefix* hash of each candidate contained
-   caption, then verify natively with instr(B, A) > 0.  This is the
-   suffix-array idea re-expressed as a distributed hash join: the anchor
-   gram plays the role of the suffix-array lookup of A's prefix among B's
+   explode every document's strided g-gram hashes (O(total_chars / stride)
+   longs) and each candidate contained caption's leading g-gram hashes,
+   exchange both ONCE on the gram hash, and pair probes with grams inside
+   each anchor group with the group-pairs Arrow kernel
+   (operators/group_pairs.py) — the list-crosscutting of LCJoin applied per
+   group.  Each kept pair carries the exact alignment offset, which a
+   native hash verify and an exact string confirm check.  This is the
+   suffix-array idea re-expressed as distributed grouping: the anchor gram
+   plays the role of the suffix-array lookup of A's prefix among B's
    suffixes, with exact verification replacing the LCP walk.  No quadratic
-   blow-up, no global sort, fully JVM-side.
+   blow-up, no global sort.
 
 2. `suffix_array_containment_partition` (reference-style kernel): a
    per-partition suffix array built in numpy inside applyInPandas after
@@ -25,9 +29,10 @@ import math
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from jsonschema_jl_spark.config import DedupConfig, DEFAULT_CONFIG
+from jsonschema_jl_spark.operators.group_pairs import anchor_emitter, pair_groups
 from jsonschema_jl_spark.operators.minhash import normalize_text, normalize_udf
 
 
@@ -38,7 +43,6 @@ def containment_pairs(
     cfg: DedupConfig = DEFAULT_CONFIG,
     anchor_cap: int = 10_000,
     assume_normalized: bool = False,
-    cache_registry: list | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """(src, dst) with normalized src caption a strict substring of dst's.
@@ -78,79 +82,46 @@ def containment_pairs(
     # (probe text never moves), and only the hash-matched minority fetches
     # the probe text for the exact string-equality confirm — containment is
     # EXACT, never hash-trusted.
+    # The probe and gram keys are hashed by a plain projection after an
+    # explode of the positions (no lambda), and both sides share one row
+    # shape so ONE exchange on the key brings an anchor's probes and grams
+    # together.  A gram row's h1 is a 0 sentinel, never null: pyarrow turns
+    # a nullable int64 column holding nulls into float64, losing hash bits.
+    gram_key = F.expr(f"xxhash64(substr(txt, pos, {g}))")
     probe = base.select(
-        "id",
-        F.length("txt").alias("len"),
-        F.xxhash64("txt").alias("h1"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, {s}), i -> xxhash64(substr(txt, i, {g})))"
-            )
-        ).alias("p0", "key"),
-    ).withColumn("p", F.col("p0") + 1).drop("p0")
+        "id", "txt", F.length("txt").alias("len"), F.xxhash64("txt").alias("h1"),
+        F.explode(F.sequence(F.lit(1), F.lit(s))).alias("pos"),
+    ).select(
+        gram_key.alias("key"), "id", "len", "pos", "h1", F.lit(False).alias("is_gram")
+    )
     grams = base.select(
-        F.col("id").alias("id_b"),
-        F.length("txt").alias("len_b"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, greatest(length(txt) - {g - 1}, 1), {s}),"
-                f" i -> xxhash64(substr(txt, i, {g})))"
-            )
-        ).alias("gpos", "key"),
-    ).withColumn("pos_b", F.col("gpos") * s + 1).drop("gpos")
-    # cap degenerate anchors (e.g. a ubiquitous phrase) like LSH buckets.
-    # All four joins below carry SHUFFLE_HASH hints on their smaller side:
-    # the default sort-merge strategy would SORT the multi-million-row gram
-    # and text relations at every join, and hash joins need no order — at
-    # bench scale the sorts were the dominant non-kernel cost of this pass.
-    #
-    # Like the LSH bucket rows (lsh.py), the gram explode is referenced by
-    # BOTH the anchor-size count and the candidate join; without a
-    # materialization barrier Catalyst plans the count branch as its own
-    # partial-agg exchange and the whole strided-gram explode (one
-    # substr+xxhash64 pass over every container position — 22M rows at the
-    # 864k-row bench) runs twice.  Caller owns the unpersist via
-    # cache_registry; with no registry the old double-compute plan stands.
-    # `num_partitions` sizes the hash-join exchanges to the DATA: the probe
-    # relation (s anchor keys PER DOCUMENT) is the build side of the
-    # candidate join and grows linearly with the corpus — at a fixed
-    # session partition count its per-task hash map grows unboundedly (the
-    # 10x stress draw failed HERE: "Can't acquire 536870912 bytes memory to
-    # build hash relation" at 6.5M rows x 32 partitions).  Repartitioning
-    # both join inputs on the join key at a data-derived count bounds every
-    # build; at bench scale num_partitions equals the session conf and the
-    # plans are unchanged.
-    if num_partitions is not None:
-        probe = probe.repartition(num_partitions, "key")
-        grams = grams.repartition(num_partitions, "key")
-    if cache_registry is not None:
-        grams = grams.persist()
-        cache_registry.append(grams)
-    sizes = grams.groupBy("key").agg(F.count("*").alias("n"))
-    # Cap filter as a BROADCAST ANTI-join against the HOT anchors, not an
-    # inner join against the survivors: the survivor set (n <= cap) is
-    # corpus-proportional — at 6.5M docs it is ~100M+ distinct anchors, and
-    # building it as a SHUFFLE_HASH hash relation blew the per-task memory
-    # grant in the 10x stress draw ("Can't acquire 536870912 bytes").  The
-    # HOT set (n > cap) is bounded by total_gram_rows / cap BY CONSTRUCTION
-    # (<= ~18k keys at 175M gram rows, cap 10k) — broadcastable at ANY
-    # corpus size, and the anti-join is map-side: one fewer shuffle of the
-    # multi-hundred-million-row gram relation.
-    hot = sizes.filter(F.col("n") > anchor_cap).drop("n")
-    grams = grams.join(F.broadcast(hot), "key", "left_anti")
-    # candidates: fixed-width rows (id, id_b, o, len, h1) — the alignment
-    # offset is DERIVED, so the verify checks one exact position, not an
-    # O(len_a * len_b) instr scan
-    cand = (
-        probe.hint("SHUFFLE_HASH").join(grams, "key")
-        .withColumn("o", F.col("pos_b") - F.col("p") + 1)
-        .filter(
-            (F.col("id") != F.col("id_b"))
-            & (F.col("len") < F.col("len_b"))
-            & (F.col("o") >= 1)
-            & (F.col("o") + F.col("len") - 1 <= F.col("len_b"))
-        )
-        .select("id", "id_b", "o", "len", "h1")
+        "id", "txt", F.length("txt").alias("len"),
+        F.explode(
+            F.sequence(F.lit(1), F.greatest(F.length("txt") - (g - 1), F.lit(1)), F.lit(s))
+        ).alias("pos"),
+    ).select(
+        gram_key.alias("key"), "id", "len", "pos", F.lit(0).cast("long").alias("h1"),
+        F.lit(True).alias("is_gram"),
+    )
+    # candidates: one anchor group pairs its probes (p = pos) with its grams
+    # (pos_b = pos) — anchors whose gram count is above anchor_cap (e.g. a
+    # ubiquitous phrase) emit nothing — and keeps a pair only if the derived
+    # offset o = pos_b - p + 1 places the shorter probe inside its container
+    # (id != id_b).  Rows stay FIXED-WIDTH (id, id_b, o, len, h1): on
+    # window-sharing corpora the candidate count grows ~quadratically with
+    # the corpus (1.29e9 candidates from 6.5M template-generated captions in
+    # the 10x stress draw), so texts never ride the candidates.  The
+    # exchange is sized to the DATA by `num_partitions`: an anchor group's
+    # rows are one task's state.
+    id_type = base.schema["id"].dataType
+    cand = pair_groups(
+        probe.unionByName(grams), ["key"], anchor_emitter,
+        T.StructType([
+            T.StructField("id", id_type), T.StructField("id_b", id_type),
+            T.StructField("o", T.IntegerType()), T.StructField("len", T.IntegerType()),
+            T.StructField("h1", T.LongType()),
+        ]),
+        cap=anchor_cap, num_partitions=num_partitions, gram_col="is_gram",
     )
     b = base.select(F.col("id").alias("id_b2"), F.col("txt").alias("txt_b"))
     a = base.select(F.col("id"), F.col("txt"))

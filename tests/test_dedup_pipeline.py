@@ -82,6 +82,39 @@ def test_no_cross_kind_contamination(result, spark):
     assert {"caption", "phash", "substring"} <= kinds
 
 
+def test_skew_metrics_final_after_edges(images, spark):
+    """metrics["skew"] is read once the edges have materialized: with a
+    bucket_cap small enough to cap planted groups' buckets it must equal a
+    JVM groupBy("bucket").count() over the run's own band keys (read too
+    early the accumulators give 0; read after a second kernel run they
+    double).  The detectors persist nothing, so after cleanup() no cached
+    RDD of the run is left."""
+    import dataclasses
+
+    from jsonschema_jl_spark.operators.lsh import band_buckets
+
+    # planted groups are pairs here: cap 1 caps every shared bucket
+    cfg = dataclasses.replace(CFG, bucket_cap=1)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    res = dedup_pipeline(images, cfg)
+    try:
+        buckets = band_buckets(res.signatures, id_col="nid", cfg=cfg, bands_col="bands")
+        ref = (
+            buckets.groupBy("bucket").count().filter(F.col("count") > cfg.bucket_cap)
+            .agg(F.count("*").alias("b"), F.sum("count").alias("r")).collect()[0]
+        )
+        assert ref["b"] > 0
+        assert res.metrics["skew"] == {"capped_buckets": ref["b"], "capped_rows": ref["r"]}
+        assert res.labels.count() == N_ROWS
+    finally:
+        res.cleanup()
+    # what the run leaves registered is only the local-checkpoint blocks of
+    # its lineage cuts (edges, CC rounds), which Spark's ContextCleaner owns
+    left = [v.rdd() for k, v in jsc.getPersistentRDDs().items() if k not in before]
+    assert all(r.isCheckpointed() for r in left)
+
+
 def test_determinism_across_runs(images):
     r1 = dedup_pipeline(images, CFG, use_phash=False, use_containment=False)
     r2 = dedup_pipeline(images, CFG, use_phash=False, use_containment=False)

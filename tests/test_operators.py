@@ -21,7 +21,7 @@ from jsonschema_jl_spark.operators.multimodal import (
 )
 from jsonschema_jl_spark.operators.similarity import cosine_topk, lsh_ann_pairs
 from jsonschema_jl_spark.operators.lsh import band_buckets, candidate_pairs, salted_candidate_pairs
-from jsonschema_jl_spark.operators.minhash import normalize_signatures_bands, with_signatures
+from jsonschema_jl_spark.operators.minhash import normalize_signatures_bands, normalize_udf, with_signatures
 from jsonschema_jl_spark.operators.substring import containment_pairs, suffix_array_containment
 
 CFG = DedupConfig()
@@ -371,28 +371,166 @@ def test_simhash_votes_kernel_edge_segments():
     assert out2[0] == 0 and out2[1] == 0
 
 
-def test_candidate_pairs_cache_registry(spark):
-    """With a cache_registry the banded bucket rows are persisted (one
-    MinHash/banding computation shared by the count and pair branches) and
-    ownership of the unpersist moves to the caller; results are identical
-    to the registry-less plan."""
-    from pyspark.sql import functions as F
+def _id_kinds(df, kind: str):
+    """The id column as the detectors see it: xxhash64 longs (the pipeline's
+    nid) or the raw strings."""
+    ids = F.xxhash64("image_id") if kind == "long" else F.col("image_id")
+    return df.withColumn("image_id", ids)
 
+
+def _pair_set(df, cols=("src", "dst")) -> set:
+    return {tuple(r[c] for c in cols) for r in df.collect()}
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_candidate_pairs_matches_jvm_reference(spark, kind):
+    """The group-pairs kernel against the JVM formulation it replaced (size
+    count, survivor join, collect_list, nested-transform expansion), with a
+    bucket_cap that caps the 6-member caption groups and keeps the 5-member
+    ones; the kernel's capped mass must equal a groupBy("bucket").count(),
+    read after the pairs materialize."""
+    import dataclasses
+
+    cfg = dataclasses.replace(CFG, bucket_cap=5)
     texts = [(f"id{i:02d}", f"caption text shared prefix {i % 7}") for i in range(40)]
-    df = spark.createDataFrame(texts, "image_id string, caption string")
-    sigs = with_signatures(df, cfg=CFG, keep_shingles=False)
-    buckets = band_buckets(sigs, cfg=CFG)
-    reg: list = []
-    pairs_cached = candidate_pairs(buckets, CFG, cache_registry=reg)
-    got = {(r.src, r.dst) for r in pairs_cached.collect()}
-    assert len(reg) == 1 and reg[0].is_cached
-    plain = {(r.src, r.dst) for r in candidate_pairs(buckets, CFG).collect()}
-    assert got == plain
-    # metrics branch reuses the same counts aggregate
-    _, skew = candidate_pairs(buckets, CFG, with_metrics=True, cache_registry=reg)
-    assert skew.capped_rows >= 0
-    for cached in reg:
-        cached.unpersist()
+    texts += [(f"u{i:02d}", f"unique caption number {i} with its own words") for i in range(20)]
+    df = _id_kinds(spark.createDataFrame(texts, "image_id string, caption string"), kind)
+    sigs = with_signatures(df, cfg=cfg, keep_shingles=False)
+    buckets = band_buckets(sigs, cfg=cfg).persist()
+    pairs, skew = candidate_pairs(buckets, cfg, with_metrics=True)
+    got = _pair_set(pairs)
+
+    # reference: the pre-kernel one-exchange JVM shape, inline
+    counts = buckets.groupBy("bucket").count()
+    ok = counts.filter((F.col("count") > 1) & (F.col("count") <= cfg.bucket_cap)).drop("count")
+    grouped = buckets.join(ok, "bucket").groupBy("bucket").agg(F.collect_list("id").alias("ids"))
+    want = _pair_set(
+        grouped.select(F.explode(F.expr(
+            "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids)),"
+            " y -> struct(least(x, y) AS src, greatest(x, y) AS dst))))"
+        )).alias("p")).select("p.src", "p.dst").dropDuplicates(["src", "dst"])
+    )
+    capped = counts.filter(F.col("count") > cfg.bucket_cap).agg(
+        F.count("*").alias("b"), F.sum("count").alias("r")
+    ).collect()[0]
+    assert got == want and len(got) > 0
+    assert (skew.capped_buckets, skew.capped_rows) == (capped["b"], capped["r"])
+    # the cap bit: buckets were capped and their pairs are gone
+    assert capped["b"] > 0
+    assert got < _pair_set(candidate_pairs(buckets, dataclasses.replace(cfg, bucket_cap=64)))
+    buckets.unpersist()
+
+
+def _phash_frame(spark, kind: str):
+    """60 images whose phashes form clusters: exact repeats (degenerate
+    blocks) and 1-7 bit variants of a few bases, plus random ones."""
+    rng = np.random.default_rng(23)
+    rows = []
+    for c in range(6):
+        base = int(rng.integers(-(1 << 63), (1 << 63) - 1))
+        for j in range(8):
+            flips = rng.choice(64, size=j % 8, replace=False)
+            ph = base
+            for bit in flips:
+                ph ^= 1 << int(bit)
+            ph = (ph + (1 << 63)) % (1 << 64) - (1 << 63)
+            rows.append((f"img{c}_{j}", ph))
+        rows.append((f"img{c}_rep", base))
+    rows += [(f"rnd{i}", int(rng.integers(-(1 << 63), (1 << 63) - 1))) for i in range(6)]
+    return _id_kinds(spark.createDataFrame(rows, "image_id string, phash long"), kind)
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+@pytest.mark.parametrize("shape", [{"block_cap": 2}, {"hamming_radius": 6}])
+def test_phash_pairs_matches_jvm_reference(spark, kind, shape):
+    """phash_pairs against the JVM block-size count + collect_list
+    expansion + bit_count verify it replaced, with a block cap that drops
+    repeated phashes' blocks and at a wide radius (7 blocks of 9 bits)."""
+    import dataclasses
+
+    from jsonschema_jl_spark.operators.phash import phash_blocks, phash_pairs
+
+    cfg = dataclasses.replace(CFG, hamming_radius=shape.get("hamming_radius", CFG.hamming_radius))
+    block_cap = shape.get("block_cap", 10_000)
+    df = _phash_frame(spark, kind)
+    got = _pair_set(phash_pairs(df, cfg=cfg, block_cap=block_cap), ("src", "dst", "hamming"))
+
+    blocks = phash_blocks(df, cfg=cfg)
+    sizes = blocks.groupBy("block", "key").agg(F.count("*").alias("n"))
+    ok = sizes.filter((F.col("n") > 1) & (F.col("n") <= block_cap)).drop("n")
+    grouped = blocks.join(ok, ["block", "key"]).groupBy("block", "key").agg(
+        F.collect_list(F.struct("id", "ph")).alias("ms")
+    )
+    want = _pair_set(
+        grouped.select(F.col("ms"), F.posexplode("ms").alias("i", "x"))
+        .select(F.explode(F.expr(
+            "transform(slice(ms, i + 2, size(ms)), y -> struct("
+            "least(x.id, y.id) AS src, greatest(x.id, y.id) AS dst,"
+            " bit_count(x.ph ^ y.ph) AS hamming))"
+        )).alias("p"))
+        .select("p.src", "p.dst", "p.hamming")
+        .filter(F.col("hamming") <= F.lit(cfg.hamming_radius))
+        .dropDuplicates(["src", "dst"]),
+        ("src", "dst", "hamming"),
+    )
+    assert got == want and len(got) > 0
+    if "block_cap" in shape:
+        # the cap bit: the uncapped pair set is strictly larger
+        assert got < _pair_set(phash_pairs(df, cfg=cfg), ("src", "dst", "hamming"))
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_containment_pairs_matches_jvm_reference(spark, kind):
+    """containment_pairs against the JVM anchor formulation it replaced
+    (lambda-hashed probe/gram explodes, broadcast anti-join of hot anchors,
+    SHUFFLE_HASH candidate join) at anchor_cap=3, which caps template
+    phrases; the hash-verify and exact-confirm joins are shared."""
+    images = generate_images(spark, 300, CFG, with_bytes=False, with_malformed=False)
+    # six captions opening with one phrase make its leading anchor hot
+    hot_rows = [(f"hot{k}", f"ubiquitous anchor phrase number {k} and more words") for k in range(6)]
+    hot_rows.append(("hotprobe", "ubiquitous anchor phrase"))
+    slim = _id_kinds(
+        images.select("image_id", "caption")
+        .unionByName(spark.createDataFrame(hot_rows, "image_id string, caption string")),
+        kind,
+    )
+    got = _pair_set(containment_pairs(slim, cfg=CFG, anchor_cap=3))
+
+    g, s = CFG.anchor_gram, CFG.anchor_stride
+    base = slim.select(F.col("image_id").alias("id"), normalize_udf(F.col("caption")).alias("txt")).filter(
+        F.length("txt") >= CFG.min_contained_len
+    )
+    probe = base.select(
+        "id", F.length("txt").alias("len"), F.xxhash64("txt").alias("h1"),
+        F.posexplode(F.expr(f"transform(sequence(1, {s}), i -> xxhash64(substr(txt, i, {g})))"))
+        .alias("p0", "key"),
+    ).withColumn("p", F.col("p0") + 1)
+    grams = base.select(
+        F.col("id").alias("id_b"), F.length("txt").alias("len_b"),
+        F.posexplode(F.expr(
+            f"transform(sequence(1, greatest(length(txt) - {g - 1}, 1), {s}),"
+            f" i -> xxhash64(substr(txt, i, {g})))"
+        )).alias("gpos", "key"),
+    ).withColumn("pos_b", F.col("gpos") * s + 1)
+    hot = grams.groupBy("key").count().filter(F.col("count") > 3).drop("count")
+    cand = (
+        probe.join(grams.join(F.broadcast(hot), "key", "left_anti"), "key")
+        .withColumn("o", F.col("pos_b") - F.col("p") + 1)
+        .filter((F.col("id") != F.col("id_b")) & (F.col("len") < F.col("len_b"))
+                & (F.col("o") >= 1) & (F.col("o") + F.col("len") - 1 <= F.col("len_b")))
+    )
+    b = base.select(F.col("id").alias("id_b"), F.col("txt").alias("txt_b"))
+    want = _pair_set(
+        cand.join(b, "id_b").join(base, "id")
+        .filter(F.expr("xxhash64(substring(txt_b, o, len))") == F.col("h1"))
+        .filter(F.expr("substring(txt_b, o, len)") == F.col("txt"))
+        .select(F.col("id").alias("src"), F.col("id_b").alias("dst"))
+        .dropDuplicates(["src", "dst"])
+    )
+    assert got == want and len(got) > 0
+    # the cap bit: the phrase's containments are found only uncapped
+    assert hot.count() > 0
+    assert got < _pair_set(containment_pairs(slim, cfg=CFG))
 
 
 def test_signs_kernel_parity_dim256(spark):

@@ -170,11 +170,13 @@ def main() -> None:
         "Banding is a plain posexplode of KERNEL-computed bucket keys (the\n"
         "signature kernel emits them vectorized, minhash.band_keys_np — the\n"
         "former per-row JVM slice+xxhash64 expressions measured 147 s CPU per\n"
-        "108k rows). Pair generation is groupBy(bucket) + map-side nested\n"
-        "`transform` expansion — ONE shuffle keyed by bucket plus the final\n"
-        "(src,dst) dedup shuffle; no bucket self-join, so bucket membership\n"
-        "lists cross the wire exactly once. The bucket cap bounds the\n"
-        "quadratic expansion per group (skew, P6).",
+        "108k rows). Pair generation is ONE exchange of the (id, bucket)\n"
+        "rows on the bucket key plus one MapInArrow — the group-pairs kernel\n"
+        "sorts each partition by bucket and emits every pair inside a run in\n"
+        "batches of at most 2^20 — then the final (src,dst) dedup shuffle.\n"
+        "No persisted exchange, size-count aggregate, survivor join or\n"
+        "collect_list. The bucket cap bounds the quadratic expansion per\n"
+        "group (skew, P6) and its dropped mass is counted by accumulators.",
         candidate_pairs(buckets, CFG),
     ))
 
@@ -182,12 +184,11 @@ def main() -> None:
     out.append(section(
         "phash Hamming pairs (`phash_pairs`, pigeonhole blocks)",
         "r+1 block keys per row via native bit ops; pair generation is the\n"
-        "same one-exchange shape as LSH (round-5): hash agg block sizes,\n"
-        "SHUFFLE_HASH survivor join, collect_list of (id, ph) structs, then\n"
-        "map-side nested-transform expansion computing the exact Hamming\n"
-        "verify (`bit_count(x.ph ^ y.ph)`) inside the SAME stage — the\n"
-        "two-sided membership self-join and its extra exchange are gone; no\n"
-        "Python anywhere.",
+        "same one-exchange shape as LSH: the block rows cross ONE exchange on\n"
+        "(block, key) and the group-pairs MapInArrow pairs each block's\n"
+        "members, keeping a pair when a numpy popcount of the XOR'd phashes\n"
+        "is within the radius — the exact verify runs in the batch that\n"
+        "builds the pair.",
         phash_pairs(part.select(F.col("p_partkey").alias("id"),
                                 F.xxhash64("p_name").alias("phash")),
                     id_col="id", phash_col="phash", cfg=CFG),
@@ -226,17 +227,17 @@ def main() -> None:
     # 6. containment: sparse-anchor equi-join, texts re-fetched narrowly
     out.append(section(
         "Exact-substring containment (`containment_pairs`, sparse anchors)",
-        "Round-5 shape (driven by the 10x stress draw): candidate rows are\n"
-        "FIXED-WIDTH (id, id_b, offset, len, h1) through every exchange —\n"
-        "both explodes carry positions, the probe carries a full-text\n"
-        "xxhash64, and the verify recomputes the hash of the container's\n"
-        "substring AT THE DERIVED OFFSET (one corpus-sized text exchange\n"
-        "total; probe text never moves; no O(len*len) instr scan).  Only the\n"
-        "hash-matched minority fetches the probe text for the exact\n"
-        "string-equality confirm, so the result never depends on a hash.\n"
-        "The anchor cap is a BROADCAST anti-join against the hot keys\n"
-        "(bounded by rows/cap by construction); hash-join builds are text\n"
-        "relations, never candidates.",
+        "Probe and strided gram rows share one fixed-width shape (key, id,\n"
+        "len, pos, h1), hashed by a plain projection after an explode, and\n"
+        "cross ONE exchange on the anchor key; the group-pairs MapInArrow\n"
+        "pairs each anchor's probes with its grams, drops anchors above the\n"
+        "cap, and keeps a pair only when the derived offset places the\n"
+        "shorter probe inside the container. The verify recomputes the\n"
+        "hash of the container's substring AT THAT OFFSET (one corpus-sized\n"
+        "text exchange; probe text never moves); only the hash-matched\n"
+        "minority fetches the probe text for the exact string-equality\n"
+        "confirm, so the result never depends on a hash. Hash-join builds\n"
+        "are text relations, never candidates.",
         containment_pairs(docs, id_col="doc_id", text_col="txt", cfg=CFG,
                           assume_normalized=True),
     ))
