@@ -91,14 +91,10 @@ def q_gate_events_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_gate_events_dynamic_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME dynamic gate verdict through the round-5 zero-Python variant
-    backend (gate/dynamic_native.py): try_parse_json + variant keyword
-    predicates in Catalyst, walk lane only for variant-refused rows.
-    Verdict-only by contract, so the query returns the kept event_ids."""
-    out = gate_filter(
-        _events(spark, sf_dir), _EVENTS_DYN_SCHEMA, json_col="props",
-        dynamic_native=True,
-    )
+    """The same dynamic gate verdict through `gate_filter` (the columnar
+    screen with the exact walk behind it).  Verdict-only by contract, so
+    the query returns the kept event_ids."""
+    out = gate_filter(_events(spark, sf_dir), _EVENTS_DYN_SCHEMA, json_col="props")
     return out.select("event_id")
 
 

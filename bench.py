@@ -193,13 +193,9 @@ def run_pipeline(spark, path: str, deadline_main: float | None = None) -> tuple[
                 best, gm = dt, g
         timings["gate_dynamic_filter"] = best
         timings["gate_dynamic_screen_rate"] = gm.as_dict()["screen_rate"]
-        # round-5 zero-Python variant backend on the same shape (opt-in;
-        # the screen stays the CPU-optimal default — see gate_filter's
-        # docstring for the measured tradeoff)
+        # frozen key: the same screen pass as gate_dynamic_filter, unmetered
         timings["gate_dynamic_native"] = _min_of_2(
-            lambda: gate_filter(
-                ev, dyn_schema, json_col="props", dynamic_native=True
-            ).count()
+            lambda: gate_filter(ev, dyn_schema, json_col="props").count()
         )
         # screened-combo shape (union type list, multipleOf, scalar oneOf,
         # top-level anyOf/not — the round-4 screen extensions): regressions

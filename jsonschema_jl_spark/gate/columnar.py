@@ -81,6 +81,10 @@ class _EXTRAS:
     pass
 # multipleOf's isapprox tolerance, exactly the walk's (validator._multiple_of)
 _MULT_RTOL = 1.4901161193847656e-08  # sqrt(float64 eps)
+# batches holding a document nested deeper than this walk instead: the walk
+# fails such rows closed past the recursion limit, so the screen must not
+# vouch for them in one batch while another batch rejects them
+_MAX_SCREEN_DEPTH = 128
 _ALLOWED_KW = {
     "type", "minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum",
     "minLength", "maxLength", "pattern", "enum", "const", "multipleOf",
@@ -1021,7 +1025,7 @@ def screen_batch(
         )
     except Exception:
         return None
-    if tbl.num_rows != idx.size:
+    if tbl.num_rows != idx.size or _nests_deeper(tbl.schema, _MAX_SCREEN_DEPTH):
         return None
 
     if isinstance(plan, tuple) and plan and plan[0] == "top":
@@ -1088,6 +1092,23 @@ def screen_batch(
     out[idx] = ok
     inv_out[idx] = inv
     return out, inv_out
+
+
+def _nests_deeper(schema, limit: int) -> bool:
+    """Whether the parsed batch's inferred type nests more than `limit`
+    levels (iterative: the type can be as deep as the document)."""
+    import pyarrow as pa
+
+    stack = [(f.type, 1) for f in schema]
+    while stack:
+        t, d = stack.pop()
+        if d > limit:
+            return True
+        if pa.types.is_struct(t):
+            stack.extend((t.field(i).type, d + 1) for i in range(t.num_fields))
+        elif pa.types.is_list(t):
+            stack.append((t.value_type, d + 1))
+    return False
 
 
 def _plan_masks(

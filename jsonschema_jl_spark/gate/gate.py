@@ -66,6 +66,10 @@ _SCREEN_ISSUE = {
 }
 
 
+def _json_issue(raw: Any, value: str) -> dict:
+    return {"path": "", "instance": str(raw)[:256], "reason": "json", "value": value}
+
+
 class GateMetrics:
     """Screen/walk coverage counters for the dynamic (UDF-backed) gate.
 
@@ -154,18 +158,16 @@ def _gate_rows(
             metrics.walked.add(int(len(walk_idx)))
     for i in walk_idx:
         raw = vals[i]
-        if raw is None:
-            rec = _issue_record(None, schema_data)
-        else:
-            try:
-                rec = _issue_record(json.loads(raw), schema_data)
-            except (json.JSONDecodeError, TypeError):
-                rec = {
-                    "path": "",
-                    "instance": str(raw)[:256],
-                    "reason": "json",
-                    "value": "malformed JSON",
-                }
+        try:
+            rec = _issue_record(
+                None if raw is None else json.loads(raw), schema_data
+            )
+        except (json.JSONDecodeError, TypeError):
+            rec = _json_issue(raw, "malformed JSON")
+        except RecursionError:
+            # parsing or walking a document nested past the interpreter's
+            # recursion limit: fail closed on this row, not the whole task
+            rec = _json_issue(raw, "nesting depth beyond the recursion limit")
         if rec is not None:
             for f in _ISSUE_FIELDS:
                 cols[f][i] = rec[f]
@@ -257,52 +259,13 @@ def gate_filter(
 ) -> DataFrame:
     """Keep only valid rows.  Native schemas become plain pushdown-capable
     predicates; residual schemas get a native necessary-condition prefilter
-    before the pandas-UDF verdict.
+    before the pandas-UDF verdict.  Dynamic mode (`json_col`) always runs
+    the columnar screen with the exact dict walk behind it, so `metrics`
+    reports the corpus-wide screen/walk split on every call.
 
-    Dynamic mode (`json_col`): `dynamic_native=True` opts into the
-    zero-Python variant backend (gate/dynamic_native.py) for flat scalar
-    object schemas — `try_parse_json` + variant keyword predicates entirely
-    in Catalyst, with only variant-refused rows (malformed / duplicate-key
-    JSON, >2^53 integers under comparisons) routed to the exact walk UDF.
-    It is an OPT-IN, not the default, on measurement: JVM variant parse
-    runs ~3 us/row/core vs ~1.5 us/row/core for the pyarrow screen's
-    simdjson-class read_json.  On the benchmark's 200k flat docs
-    (`perfbench/run.py --workload json_gate --trace 1`, local[4], median
-    of seeds 21-23) the screen pass (`gate.flat_screen_wall_s`) takes
-    0.39 s and the variant pass (`gate.flat_native_wall_s`) 1.28 s; before
-    Python workers stopped re-reading pyspark.zip's directory every task
-    (zipcache.py) they took 0.63 s and 1.59 s.  So the screen path is
-    CPU-optimal whenever it covers the schema; the variant path is the
-    choice when Python workers are unwanted (no IPC, no python worker
-    memory, plan composability) and is the only dynamic backend that
-    judges absent-vs-null exactly.
-
-    `metrics` caveat under `dynamic_native=True`: the counters are threaded
-    only into the refused-row WALK lane (the native lane has no Python
-    stage to count), so rows/screen_rate describe the variant-refused
-    minority — typically a handful of malformed/huge-integer rows — NOT
-    the corpus-wide screen/walk split the default dynamic path reports.
-    Read them as "what the residual lane did", or count the native lane
-    separately (e.g. a filter-count on the returned frame)."""
+    `dynamic_native` selects nothing: it is kept so existing callers run."""
     if not isinstance(schema, Schema):
         schema = Schema(schema)
-    if json_col is not None and dynamic_native:
-        from jsonschema_jl_spark.gate.dynamic_native import (
-            gate_filter_native,
-            plan_dynamic,
-        )
-
-        plan = plan_dynamic(schema.data)
-        if plan is not None:
-            sch = schema
-
-            def walk_filter(sub_df: DataFrame, walk_col: str) -> DataFrame:
-                return gate_filter(
-                    sub_df, sch, json_col=walk_col, metrics=metrics,
-                    dynamic_native=False,
-                )
-
-            return gate_filter_native(df, plan, json_col, walk_filter)
     if json_col is None:
         try:
             checks = compile_native_checks(schema, df.schema)

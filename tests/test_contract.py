@@ -21,6 +21,7 @@ SF_DIR = "/root/testdata/sf0.001"
 SUBSET = [
     "gate_part_typed",
     "gate_events_dynamic",
+    "gate_events_dynamic_native",
     "gate_screened_combo",
     "doc_exact_dedup",
     "doc_simhash",

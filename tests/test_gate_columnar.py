@@ -4,8 +4,10 @@ pure pandas/pyarrow, exercised exactly as the pandas UDF calls it)."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import random
+import sys
 
 import numpy as np
 import pandas as pd
@@ -1318,6 +1320,79 @@ def test_cyclic_schema_plans_fall_back():
     assert plan_screen_conj({"allOf": [sub]}) is None
 
 
+@contextlib.contextmanager
+def _recursion_limit(limit):
+    """Pin the interpreter's recursion limit (a fresh worker's default) so
+    "too deep" does not depend on what else raised it in this process."""
+    old = sys.getrecursionlimit()
+    sys.setrecursionlimit(limit)
+    try:
+        yield
+    finally:
+        sys.setrecursionlimit(old)
+
+
+def test_screen_refuses_deeply_nested_batches():
+    """A batch whose parsed type nests past the screen's depth bound walks
+    whole: the walk fails rows past the recursion limit closed, and the
+    screen must not keep such a row valid in a batch of its own."""
+    schema = Schema({"type": "object", "properties": {"k": {"type": "array"}}})
+    plan = plan_screen(schema.data)
+
+    def nested(depth):
+        return pd.Series(['{"k": ' + "[" * depth + "]" * depth + "}", '{"k": []}'])
+
+    assert screen_batch(nested(100), plan) is not None
+    assert screen_batch(nested(200), plan) is None
+    with _recursion_limit(1000):
+        out = _gate_rows(nested(5000), schema.data, plan, verdict_only=True)
+    assert list(out["reason"]) == ["json", None]
+
+
+def test_nests_deeper_bound_counts_every_level():
+    """`_nests_deeper` counts each field, list and leaf type as one level,
+    and walks an arbitrarily deep type without recursing."""
+    import pyarrow as pa
+
+    from jsonschema_jl_spark.gate.columnar import _MAX_SCREEN_DEPTH, _nests_deeper
+
+    def lists(n):  # field k: n nested lists around a null leaf = n + 1 levels
+        t = pa.null()
+        for _ in range(n):
+            t = pa.list_(t)
+        return pa.schema([("k", t)])
+
+    def structs(n):  # field k: n nested one-field structs, then an int leaf
+        t = pa.int64()
+        for _ in range(n):
+            t = pa.struct([("x", t)])
+        return pa.schema([("k", t), ("flat", pa.string())])
+
+    assert not _nests_deeper(lists(2), 3) and _nests_deeper(lists(3), 3)
+    assert not _nests_deeper(structs(2), 3) and _nests_deeper(structs(3), 3)
+    lim = _MAX_SCREEN_DEPTH
+    assert not _nests_deeper(lists(lim - 1), lim)
+    assert _nests_deeper(lists(lim), lim)
+    assert _nests_deeper(lists(3000), lim)
+    assert not _nests_deeper(pa.schema([]), 1)
+
+
+def test_walk_recursion_error_fails_only_its_row():
+    """Without a screen plan, a document that parses but recurses the walk
+    past the interpreter's limit (recursive `$ref`) gets a `json` issue in
+    full-detail mode, and its batchmates keep their exact verdicts."""
+    schema = Schema({
+        "definitions": {"a": {"type": "array", "items": {"$ref": "#/definitions/a"}}},
+        "type": "object",
+        "properties": {"k": {"$ref": "#/definitions/a"}},
+    })
+    deep = '{"k": ' + "[" * 700 + "]" * 700 + "}"
+    with _recursion_limit(1000):
+        out = _gate_rows(pd.Series([deep, '{"k": [[]]}', '{"k": 5}']), schema.data, None)
+    assert list(out["reason"]) == ["json", None, "type"]
+    assert "nesting depth" in out["value"][0]
+
+
 def test_screen_dependencies_both_forms():
     dep_keys = {"type": "object", "dependencies": {"b": ["a"]}}
     data = Schema(dep_keys).data
@@ -1402,6 +1477,62 @@ def test_gate_metrics_accumulators(spark):
     d3 = m3.as_dict()
     assert d3["walked"] >= 8 and d3["fallback_rows"] == d3["walked"]
     assert d3["screened_valid"] + d3["screened_invalid"] + d3["walked"] == 208
+
+
+def test_dynamic_native_keyword_selects_nothing(spark):
+    """`gate_filter(dynamic_native=True)` runs the same screen + walk as the
+    default call: same kept rows, and GateMetrics counts every row."""
+    from jsonschema_jl_spark.gate.gate import GateMetrics, gate_filter
+
+    clean = spark.createDataFrame(
+        [(json.dumps({"k": k}),) for k in range(200)], "props string"
+    )
+    runs = []
+    for flag in (False, True):
+        m = GateMetrics(spark)
+        kept = sorted(
+            r.props
+            for r in gate_filter(
+                clean, FLAT, json_col="props", metrics=m, dynamic_native=flag
+            ).collect()
+        )
+        runs.append((kept, m.as_dict()))
+    assert runs[0] == runs[1]
+    kept, d = runs[1]
+    assert len(kept) == 81
+    assert d["screened_valid"] + d["screened_invalid"] + d["walked"] == 200
+
+
+def test_dup_keys_and_huge_ints_walk_exactly(spark):
+    """Batches the screen cannot vouch for (duplicate keys, integers above
+    2^53) walk: duplicate keys resolve last-wins, and 2^53+1 is judged as
+    the exact integer, not as its float64 neighbour 2^53."""
+    from jsonschema_jl_spark.gate.gate import GateMetrics, gate_filter
+
+    cap = {"type": "object", "properties": {"k": {"type": "integer", "maximum": 2**53}}}
+    cases = [
+        # (schema, rows, kept ids, ids the screen refuses even alone)
+        (FLAT, [(1, '{"k": 9, "k": 50}'),        # dup keys, last-wins valid
+                (2, '{"k": 50, "k": 9}'),        # dup keys, last-wins invalid
+                (3, '{"k": 50}')], {1, 3}, {1, 2}),
+        (cap, [(1, '{"k": 9007199254740993}'),   # 2^53+1: above the cap
+               (2, '{"k": 9007199254740992}'),   # 2^53: at the cap
+               (3, '{"k": -9007199254740993}')], {2, 3}, {1, 3}),
+    ]
+    for schema, rows, expect, refused in cases:
+        df = spark.createDataFrame(rows, "id long, js string").repartition(1)
+        m = GateMetrics(spark)
+        kept = {r.id for r in gate_filter(df, schema, json_col="js", metrics=m).collect()}
+        assert kept == expect, (schema, kept)
+        # each refused row walks even when Spark hands it over alone
+        plan = plan_screen(Schema(schema).data)
+        assert plan is not None
+        for i, js in rows:
+            if i in refused:
+                assert screen_batch(pd.Series([js]), plan) is None, js
+        d = m.as_dict()
+        assert d["walked"] >= 2, (schema, d)
+        assert d["screened_valid"] + d["screened_invalid"] + d["walked"] == 3, d
 
 
 # ---------------------------------------------------------------------------

@@ -279,25 +279,6 @@ def main() -> None:
         gate_filter(events, EVENTS_DYN_SCHEMA, json_col="props"),
     ))
 
-    # 10. dynamic gate, zero-Python variant backend (opt-in, round-5):
-    #     the native branch has NO Python node at all; the single
-    #     ArrowEvalPython in the union is the walk lane, gated behind the
-    #     variant-refused filter (malformed/dup-key/huge rows only).
-    out.append(section(
-        "Dynamic gate, native variant backend (`gate_filter(dynamic_native=True)`)",
-        "try_parse_json + variant keyword predicates entirely in Catalyst —\n"
-        "two Generate barriers pin the parse and the per-property extraction\n"
-        "struct to one evaluation each. The only ArrowEvalPython node sits\n"
-        "in the union's walk lane BEHIND the variant-refused filter (its\n"
-        "input expression is pinned to the Generate output so the UDF cannot\n"
-        "sink to the scan); on a clean corpus that lane is empty and no\n"
-        "Python worker ever starts. Opt-in: the pyarrow screen (§9) remains\n"
-        "the CPU-optimal default — see gate/dynamic_native.py for measured\n"
-        "numbers.",
-        gate_filter(events, EVENTS_DYN_SCHEMA, json_col="props",
-                    dynamic_native=True),
-    ))
-
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                            "PLANS.md"), "w", encoding="utf-8") as fh:
         fh.write("\n".join(out))
