@@ -10,8 +10,8 @@ one-level object schema), one-level nested `properties` (fields may be
 arrays of scalars), object-level `additionalProperties` /
 `patternProperties` / `propertyNames` / `minProperties` / `maxProperties`
 / `dependencies` (the parsed column set is the key universe), and top-level allOf/anyOf/oneOf/not/if-then-else of such
-schemas, all evaluated over ONE parse — this module screens whole Arrow
-batches columnar-ly:
+schemas, all evaluated over ONE parse — this module screens Arrow batches
+columnar-ly:
 
   1. the batch's JSON texts are parsed ONCE by pyarrow.json.read_json
      (C++, simdjson-class throughput) into a columnar table;
@@ -40,11 +40,24 @@ the conformance suite + differential fuzz (tests/test_gate_*) and the
 dedicated screen-vs-walk differentials (tests/test_gate_columnar.py, both
 modes) guard.
 
+The screen decides rows, not batches.  A row that breaks the batch's parse
+is isolated (a per-row stdlib-scanner probe, then one re-parse of the
+rest), a row holding a number float64 cannot carry exactly leaves the
+parsed table, and both walk alone while their batchmates stay screened.
+A row whose raw text holds no `null` literal (the literal has no escaped
+form) has no explicit null, so each of its null top-level cells is an
+absent key: an optional property is satisfied, a required one fails.
+
 Known pyarrow.json behaviors relied on (probed on pyarrow 16, see tests):
-  * duplicate keys, mixed-type columns, non-object rows, >double numbers,
-    blank interior lines -> batch-level ArrowInvalid => full fallback;
-  * ints beyond int64 silently become double => the +-2^53 magnitude gate
-    refuses to screen such columns;
+  * duplicate keys, mixed-type columns, non-object rows, malformed text,
+    blank interior lines -> batch-level ArrowInvalid => rows the stdlib
+    scanner rejects walk and the rest parse again; a re-parse that still
+    fails (duplicate keys, mixed-type columns) walks the whole batch;
+  * ints beyond int64 silently become double, as do all ints of a column
+    holding any double; NaN/Infinity parse to non-finite doubles => rows
+    with a number beyond +-2^53 (ints) or from 2^53 up (doubles, where
+    2^53+1 has rounded to 2^53), or non-finite, in a column the plan
+    reads, are filtered out and walk;
   * ISO-date-like strings are inferred as timestamp => the original JSON
     value WAS a string, so type/length/pattern can't be judged from the
     inferred column => fallback;
@@ -59,6 +72,7 @@ Known pyarrow.json behaviors relied on (probed on pyarrow 16, see tests):
 from __future__ import annotations
 
 import io
+import json
 import re
 from typing import Any
 
@@ -274,8 +288,10 @@ def _deep_value_ambiguous(v: Any) -> bool:
     """Must this parsed cell walk?  A dict value of None ANYWHERE is
     absent-OR-explicit-null (pyarrow struct columns carry the union of keys
     across rows), and an int beyond 2^53 would collide with a distinct
-    entry after the canonical key's float encoding.  Floats of any
-    magnitude are fine — the walk's json_equal compares the same float64."""
+    entry after the canonical key's float encoding.  Floats are fine: the
+    walk's json_equal compares the same float64, and screen_batch has
+    already sent rows with a double from 2^53 up (possibly a rounded JSON
+    integer) to the walk."""
     if isinstance(v, bool) or v is None or isinstance(v, str):
         return False
     if isinstance(v, float):
@@ -638,7 +654,9 @@ def _scalar_masks(
 
     if is_num and arrf is None:
         # exact-integer range gate: ints beyond 2^53 (or doubles pyarrow
-        # silently demoted huge JSON ints into) can't be compared exactly
+        # silently demoted huge JSON ints into) can't be compared exactly.
+        # screen_batch filters such rows out first (_inexact_rows), so this
+        # refusal is only the safety net
         mm = pc.min_max(arr).as_py()
         if mm["min"] is not None and (
             abs(mm["min"]) > _MAX_EXACT or abs(mm["max"]) > _MAX_EXACT
@@ -887,7 +905,8 @@ def _array_masks(
         # primitive elements only: nested lists/dicts are unhashable for
         # the dup scan, and timestamp-inferred elements would equate
         # distinct source strings; ints beyond 2^53 would collide after
-        # the pandas float upcast of a nullable int column
+        # the pandas float upcast of a nullable int column (screen_batch
+        # filters such rows out first, so this refusal is the safety net)
         if not (
             pa.types.is_floating(et) or pa.types.is_string(et)
             or pa.types.is_large_string(et) or pa.types.is_boolean(et)
@@ -977,6 +996,13 @@ def screen_batch(
     issue detail — consume it only where the verdict alone suffices
     (gate_filter).
 
+    The screen decides rows, not batches: a row pyarrow cannot parse
+    (_parse_isolating) or holding, in a column the plan reads
+    (_read_columns), a number beyond float64's exact range (_inexact_rows)
+    walks alone while its batchmates stay screened.  The
+    whole batch walks only when the parse cannot be isolated, the parsed
+    type nests past _MAX_SCREEN_DEPTH, or a planned column forces it.
+
     `plan` is a single property-plan dict, a LIST of them — an allOf
     conjunction (plan_screen_conj): the batch parses once, every member
     plan evaluates over the same parsed table, and the masks combine as
@@ -987,7 +1013,6 @@ def screen_batch(
     mask directions of its member plans (see plan_screen_conj's table);
     any ambiguity leaves both bits clear (the row walks)."""
     import pyarrow as pa
-    from pyarrow import json as pajson
 
     n = len(raws)
     vals = raws.to_numpy(dtype=object)
@@ -1008,25 +1033,40 @@ def screen_batch(
     )
     out = np.zeros(n, dtype=bool)
     inv_out = np.zeros(n, dtype=bool)
-    idx = np.flatnonzero(screenable)
+    parsed = _parse_isolating(vals, np.flatnonzero(screenable))
+    if parsed is None:
+        return None
+    tbl, idx = parsed
     if idx.size == 0:
         return out, inv_out
-    try:
-        blob = "\n".join(vals[i] for i in idx).encode("utf-8")
-        tbl = pajson.read_json(
-            io.BytesIO(blob),
-            # use_threads=False: Spark's forked python workers inherit a
-            # parent-process pyarrow thread pool that is unusable post-fork
-            # (worker crash, observed as executor EOFException); the batch
-            # is one task's slice anyway, so intra-read parallelism would
-            # only fight the executor's task parallelism
-            read_options=pajson.ReadOptions(use_threads=False),
-            parse_options=pajson.ParseOptions(newlines_in_values=False),
-        )
-    except Exception:
-        return None
     if tbl.num_rows != idx.size or _nests_deeper(tbl.schema, _MAX_SCREEN_DEPTH):
         return None
+    # rows holding, in a column the plan reads, a number float64 cannot
+    # carry exactly leave the table and walk; their batchmates stay on the
+    # screen.  Unread columns are never judged, so they are not scanned.
+    read = _read_columns(plan)
+    try:
+        inexact = np.zeros(idx.size, dtype=bool)
+        for name in tbl.schema.names:
+            if read is not None and name not in read:
+                continue
+            m = _inexact_rows(tbl.column(name).combine_chunks())
+            if m is None:
+                return None
+            inexact |= m
+        if inexact.any():
+            tbl = tbl.filter(pa.array(~inexact))
+            idx = idx[~inexact]
+    except Exception:
+        return None  # a structurally invalid parsed column (see _plan_masks)
+    if idx.size == 0:
+        return out, inv_out
+    # JSON's `null` literal has no escaped form, so a row whose text holds
+    # no "null" has no explicit null anywhere: each of its null top-level
+    # cells is an absent key
+    null_free = np.fromiter(
+        ("null" not in v for v in vals[idx].tolist()), dtype=bool, count=idx.size
+    )
 
     if isinstance(plan, tuple) and plan and plan[0] == "top":
         _, conj, ops = plan
@@ -1036,7 +1076,7 @@ def screen_batch(
     ok = np.ones(idx.size, dtype=bool)
     inv = np.zeros(idx.size, dtype=bool)
     for p in conj:
-        res = _plan_masks(tbl, p, idx.size)
+        res = _plan_masks(tbl, p, idx.size, null_free)
         if res is None:
             return None
         ok &= res[0]
@@ -1046,7 +1086,7 @@ def screen_batch(
         if kind in ("anyOf", "oneOf"):
             pairs = []
             for p in op[1]:
-                r = _plan_masks(tbl, p, idx.size)
+                r = _plan_masks(tbl, p, idx.size, null_free)
                 if r is None:
                     return None
                 pairs.append(r)
@@ -1061,14 +1101,14 @@ def screen_batch(
                 ok &= (n_ok == 1) & (n_inv == len(pairs) - 1)
                 inv |= (n_ok >= 2) | invm.all(axis=0)
         elif kind == "not":
-            r = _plan_masks(tbl, op[1], idx.size)
+            r = _plan_masks(tbl, op[1], idx.size, null_free)
             if r is None:
                 return None
             ok &= r[1]
             inv |= r[0]
         else:  # ("ite", if, then, else)
             _, p_if, p_then, p_else = op
-            rif = _plan_masks(tbl, p_if, idx.size)
+            rif = _plan_masks(tbl, p_if, idx.size, null_free)
             if rif is None:
                 return None
             ok_if, inv_if = rif
@@ -1077,12 +1117,12 @@ def screen_batch(
             ok_then, inv_then = (ones, zeros)
             ok_else, inv_else = (ones, zeros)
             if p_then is not None:
-                r = _plan_masks(tbl, p_then, idx.size)
+                r = _plan_masks(tbl, p_then, idx.size, null_free)
                 if r is None:
                     return None
                 ok_then, inv_then = r
             if p_else is not None:
-                r = _plan_masks(tbl, p_else, idx.size)
+                r = _plan_masks(tbl, p_else, idx.size, null_free)
                 if r is None:
                     return None
                 ok_else, inv_else = r
@@ -1092,6 +1132,144 @@ def screen_batch(
     out[idx] = ok
     inv_out[idx] = inv
     return out, inv_out
+
+
+def _read_rows(vals: np.ndarray, idx: np.ndarray):
+    """pyarrow's parse of rows `idx` of `vals` as one JSON-lines blob, or
+    None when the reader raises."""
+    from pyarrow import json as pajson
+
+    try:
+        blob = "\n".join(vals[idx].tolist()).encode("utf-8")
+        return pajson.read_json(
+            io.BytesIO(blob),
+            # use_threads=False: Spark's forked python workers inherit a
+            # parent-process pyarrow thread pool that is unusable post-fork
+            # (worker crash, observed as executor EOFException); the batch
+            # is one task's slice anyway, so intra-read parallelism would
+            # only fight the executor's task parallelism
+            read_options=pajson.ReadOptions(use_threads=False),
+            parse_options=pajson.ParseOptions(newlines_in_values=False),
+        )
+    except Exception:
+        return None
+
+
+def _raise_constant(name: str):
+    raise ValueError(f"{name} is not JSON")
+
+
+# the stdlib's C scanner, one call per document; NaN/Infinity are not JSON,
+# so rows carrying them walk instead of being vouched for by a re-parse
+_SCAN_ONCE = json.JSONDecoder(parse_constant=_raise_constant).scan_once
+
+
+def _probe_ok(v: str) -> bool:
+    """Does the stdlib scanner read `v` as exactly one JSON document (the
+    walk's json.loads verdict, without json.loads' wrapper and its
+    whitespace and extra-data handling; the object is still built)?"""
+    start = len(v) - len(v.lstrip(" \t"))
+    try:
+        _, end = _SCAN_ONCE(v, start)
+        v.encode("utf-8")  # a lone surrogate would fail the blob's encode
+    except (StopIteration, ValueError, RecursionError):
+        # no value at `start`; malformed text, a constant, the int digit
+        # limit or an unencodable surrogate; nesting past the recursion limit
+        return False
+    return not v[end:].strip(" \t")
+
+
+def _parse_isolating(vals: np.ndarray, idx: np.ndarray):
+    """Parse rows `idx` with pyarrow once, isolating rows that break the
+    parse: (table, idx of the rows it holds), or None when the batch cannot
+    be isolated.  When the batch's parse fails, every row is probed once
+    with the stdlib scanner; rows it rejects walk, the rest parse again.  A
+    re-parse that still fails (the two parsers disagree on duplicate keys
+    and on a column whose type changes between rows) walks the whole batch,
+    so a row is kept only when pyarrow parsed it."""
+    if idx.size == 0:
+        return None, idx
+    tbl = _read_rows(vals, idx)
+    if tbl is not None:
+        return tbl, idx
+    idx = idx[np.fromiter(map(_probe_ok, vals[idx].tolist()), dtype=bool, count=idx.size)]
+    if idx.size == 0:
+        return None, idx
+    tbl = _read_rows(vals, idx)
+    return None if tbl is None else (tbl, idx)
+
+
+def _read_columns(plan: dict | list | tuple) -> set | None:
+    """Top-level column names whose values some member plan of `plan`
+    judges (nested fields live under them); None when a patternProperties
+    or schema-form additionalProperties subschema may judge any column.
+    The other object-level extras read only column names and null cells."""
+    if isinstance(plan, tuple) and plan and plan[0] == "top":
+        _, conj, ops = plan
+        plans = list(conj)
+        for op in ops:
+            if op[0] in ("anyOf", "oneOf"):
+                plans += op[1]
+            else:  # ("not", p) / ("ite", if, then, else)
+                plans += [p for p in op[1:] if p is not None]
+    else:
+        plans = list(plan) if isinstance(plan, list) else [plan]
+    names: set = set()
+    while plans:
+        p = plans.pop()
+        names.update(k for k in p if k is not _EXTRAS)
+        extras = p.get(_EXTRAS)
+        if extras is not None:
+            if extras["patterns"] or isinstance(extras["additional"], dict):
+                return None
+            plans += [d for _, (kind, d) in extras["deps"] if kind == "schema"]
+    return names
+
+
+def _inexact_rows(arr) -> np.ndarray | None:
+    """Per-row mask of the rows of `arr` holding, at any depth (struct
+    fields, list values), a number the float64 kernels cannot judge
+    exactly.  None for a type not covered (the batch walks).  Integers
+    compare as integers (a cast to float64 raises on a value such as
+    2^53+64): beyond ±2^53 is inexact.  A double is inexact from 2^53 up,
+    and when not finite: a JSON integer 2^53+1 in a column that some other
+    row made double reads as 2^53 exactly."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    m = len(arr)
+    t = arr.type
+    if pa.types.is_integer(t):
+        mm = pc.min_max(arr).as_py()
+        if mm["min"] is None or (mm["min"] >= -_MAX_EXACT and mm["max"] <= _MAX_EXACT):
+            return np.zeros(m, dtype=bool)
+        return _to_np(pc.or_(pc.greater(arr, _MAX_EXACT), pc.less(arr, -_MAX_EXACT)))
+    if pa.types.is_floating(t):
+        return _to_np(pc.invert(pc.less(pc.abs(arr), float(_MAX_EXACT))))
+    if pa.types.is_struct(t):
+        out = np.zeros(m, dtype=bool)
+        for i in range(t.num_fields):
+            sub = _inexact_rows(pc.struct_field(arr, [i]))
+            if sub is None:
+                return None
+            out |= sub
+        return out
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        vals = pc.list_flatten(arr)  # skips null slots, matching fill_null(0)
+        counts = pc.list_value_length(arr).fill_null(0).to_numpy(
+            zero_copy_only=False
+        ).astype(np.int64)
+        if int(counts.sum()) != len(vals):
+            return None  # the same alignment probe as _array_masks
+        sub = _inexact_rows(vals)
+        if sub is None:
+            return None
+        rows = np.repeat(np.arange(m, dtype=np.int64), counts)
+        return np.bincount(rows[sub], minlength=m) > 0
+    if pa.types.is_null(t) or pa.types.is_boolean(t) or pa.types.is_string(t) \
+            or pa.types.is_large_string(t) or _has_temporal(t):
+        return np.zeros(m, dtype=bool)
+    return None
 
 
 def _nests_deeper(schema, limit: int) -> bool:
@@ -1112,13 +1290,17 @@ def _nests_deeper(schema, limit: int) -> bool:
 
 
 def _plan_masks(
-    tbl, plan: dict, size: int
+    tbl, plan: dict, size: int, null_free: np.ndarray | None = None
 ) -> tuple[np.ndarray, np.ndarray] | None:
     """(ok, inv) masks for ONE property-plan over the parsed batch table;
     None when any planned column forces the whole batch to the walk.
+    `null_free` marks rows whose text holds no `null` literal: a null
+    top-level cell there is proven an absent key, which satisfies an
+    optional property and definitively fails a required one.
     Per-plan disjointness holds: every inv bit is paired with an ok clear
     (bad clears ok; a required+null_invalid null clears ok via null_ok
-    being False by construction in plan_screen)."""
+    being False by construction in plan_screen; a proven-absent required
+    cell clears ok explicitly)."""
     import pyarrow as pa
 
     ok = np.ones(size, dtype=bool)
@@ -1174,6 +1356,12 @@ def _plan_masks(
                 bad, amb = res
         except Exception:
             return None
+        if null_free is not None:
+            absent = nullm & null_free
+            if required:
+                inv |= absent
+                ok &= ~absent
+            nullm = nullm & ~null_free  # cells still absent-OR-null
         if not null_ok:
             ok &= ~nullm
         if required and null_invalid:

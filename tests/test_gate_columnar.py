@@ -5,7 +5,9 @@ pure pandas/pyarrow, exercised exactly as the pandas UDF calls it)."""
 from __future__ import annotations
 
 import contextlib
+import importlib.util
 import json
+import os
 import random
 import sys
 
@@ -441,9 +443,13 @@ def test_screen_array_crafted_verdicts():
         assert masks is not None, row
         valid, invalid = masks
         assert valid.all() == want and invalid.all() == (not want), row
-    # a row whose list mixes element types aborts the parse -> full fallback
-    s = pd.Series([json.dumps({"tags": ["ab", 3]})], dtype=object)
+    # a row whose list mixes element types passes the per-row probe but
+    # still aborts pyarrow's re-parse -> the whole batch walks
+    mixed = json.dumps({"tags": ["ab", 3]})
+    s = pd.Series([mixed, json.dumps({"tags": ["ab", "cd"]})], dtype=object)
     assert screen_batch(s, plan) is None
+    assert _issue_record(json.loads(mixed), data) is not None
+    assert list(_gate_rows(s, data, plan)["reason"].isna()) == [False, True]
     # required `tags` entirely absent from the batch: column absence proves
     # key absence -> definitive required failure
     s = pd.Series([json.dumps({"nums": [1, 2]})] * 4, dtype=object)
@@ -771,16 +777,19 @@ def test_screen_ite_top_level_crafted_verdicts():
             assert valid.all() and not invalid.any(), row
         else:
             assert not valid.any() and invalid.all(), row
-    # ambiguous if-verdict: event_type null-or-absent in a mixed batch ->
-    # the if-plan can certify neither direction -> row walks
+    # event_type's null cell in a mixed batch: the second row's text holds
+    # no `null` literal, so the cell is proven absent and fails the base
+    # `required` definitively; the third row's explicit null passes the
+    # (empty) base property subschema, so absent-OR-null stays ambiguous
     rows = [json.dumps({"event_type": "error", "value": 1}),
-            json.dumps({"value": 1})]
+            json.dumps({"value": 1}),
+            json.dumps({"value": 1, "note": None})]
     masks = screen_batch(pd.Series(rows, dtype=object), plan)
     valid, invalid = masks
     assert valid[0] and not invalid[0]
-    # null cell is absent-OR-null: absent fails base `required`, explicit
-    # null passes the (empty) base property subschema -> genuinely ambiguous
-    assert not valid[1] and not invalid[1]
+    assert _issue_record(json.loads(rows[1]), data) is not None
+    assert not valid[1] and invalid[1]
+    assert not valid[2] and not invalid[2]
 
 
 def test_screen_ite_top_differential():
@@ -1393,6 +1402,132 @@ def test_walk_recursion_error_fails_only_its_row():
     assert "nesting depth" in out["value"][0]
 
 
+# the benchmark intake column's five malformed shapes (perfbench/inputs.py)
+_MALFORMED_ROWS = ['{"k": 7', '{"k": }', '{k: 7}', '{"k": 7,}', "not json"]
+# numbers float64 cannot carry exactly: ±(2^53+1), and an int beyond int64
+# (pyarrow turns the whole column to double)
+_INEXACT_ROWS = ['{"k": 9007199254740993}', '{"k": -9007199254740993}',
+                 '{"k": 18446744073709551617}']
+
+
+def _assert_walk_parity(s: pd.Series, data, plan) -> None:
+    for verdict_only in (False, True):
+        pd.testing.assert_frame_equal(
+            _gate_rows(s, data, plan, verdict_only=verdict_only),
+            _gate_rows(s, data, None, verdict_only=verdict_only),
+        )
+
+
+def test_screen_isolates_defective_rows():
+    """A batch of clean rows plus one row of each defect: only the
+    defective rows walk, every clean row is decided, and the verdicts equal
+    the pure walk in both modes."""
+    data = Schema(FLAT).data
+    plan = plan_screen(data)
+    clean = [json.dumps({"k": k}) for k in range(0, 100, 3)]
+    defects = _MALFORMED_ROWS + _INEXACT_ROWS
+    rows = clean[:10] + defects + clean[10:]
+    is_defect = np.array([r in defects for r in rows])
+    masks = screen_batch(pd.Series(rows, dtype=object), plan)
+    assert masks is not None
+    valid, invalid = masks
+    assert not (valid & invalid).any()
+    np.testing.assert_array_equal(~(valid | invalid), is_defect)
+    _assert_walk_parity(pd.Series(rows, dtype=object), data, plan)
+
+
+def test_screen_masks_double_rounded_integers():
+    """A JSON integer 2^53+1 in a column another row made double reads as
+    2^53 exactly; it walks, so `maximum: 2^53` fails it as the walk does."""
+    data = Schema({"type": "object",
+                   "properties": {"k": {"type": "number", "maximum": 2 ** 53}}}).data
+    plan = plan_screen(data)
+    s = pd.Series(['{"k": 1.5}', '{"k": 9007199254740993}', '{"k": 9007199254740992}'])
+    valid, invalid = screen_batch(s, plan)
+    assert valid[0] and not valid[1] and not invalid[1]
+    assert list(_gate_rows(s, data, plan)["reason"]) == [None, "maximum", None]
+    _assert_walk_parity(s, data, plan)
+
+
+@pytest.mark.parametrize("odd", [
+    '{"k": 50, "k": 5}',                            # duplicate keys
+    '{"k": Infinity}',                              # not JSON; pyarrow reads inf
+    '{"k": ' + "[" * 5000 + "]" * 5000 + "}",       # past the recursion limit
+    '{"k": "fifty"}',                               # the column changes type
+])
+def test_screen_odd_rows_keep_walk_verdicts(odd):
+    """Rows the two parsers disagree on walk, whether the screen isolates
+    them or refuses their batch whole."""
+    data = Schema(FLAT).data
+    plan = plan_screen(data)
+    clean = [json.dumps({"k": k}) for k in (5, 20, 50, 95)]
+    for rows in ([odd] + clean, clean + [odd], clean[:2] + [odd, odd] + clean[2:]):
+        s = pd.Series(rows, dtype=object)
+        with _recursion_limit(1000):
+            masks = screen_batch(s, plan)
+            if masks is not None:
+                valid, invalid = masks
+                assert not any(valid[i] or invalid[i]
+                               for i, r in enumerate(rows) if r == odd)
+            _assert_walk_parity(s, data, plan)
+
+
+def test_screen_proves_absent_keys():
+    """A null top-level cell in a row whose text holds no `null` literal is
+    an absent key: the optional `tag` is satisfied, so only the first row
+    is decided; an explicit null, or a `null` inside a string, walks."""
+    data = Schema({
+        "type": "object", "required": ["k"],
+        "properties": {"k": {"type": "integer"},
+                       "tag": {"type": "string", "minLength": 5}},
+    }).data
+    plan = plan_screen(data)
+    rows = ['{"k": 2}', '{"k": 2, "tag": null}', '{"k": 2, "note": "nullable"}']
+    s = pd.Series(rows, dtype=object)
+    valid, invalid = screen_batch(s, plan)
+    assert list(valid) == [True, False, False] and not invalid.any()
+    _assert_walk_parity(s, data, plan)
+    # a proven-absent REQUIRED key is definitively invalid
+    req = Schema({"type": "object", "required": ["tag"],
+                  "properties": {"tag": {"type": ["string", "null"]}}}).data
+    valid, invalid = screen_batch(s, plan_screen(req))
+    assert list(invalid) == [True, False, False] and not valid.any()
+    _assert_walk_parity(s, req, plan_screen(req))
+
+
+def test_screen_decides_every_combo_row():
+    """The contract's combo docs (tag-less even ids) are decided in full:
+    the absent `tag` is proven per row, so no row walks."""
+    from jsonschema_jl_spark.gate.columnar import plan_screen_conj
+
+    path = os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entry_combo", path)
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    data = Schema(entry._COMBO_SCHEMA).data
+    plan = plan_screen_conj(data)
+    rows = [json.dumps({"k": i} if i % 2 == 0 else {"k": i, "tag": "click"})
+            for i in range(100)]
+    s = pd.Series(rows, dtype=object)
+    valid, invalid = screen_batch(s, plan)
+    assert (valid | invalid).all()
+    _assert_walk_parity(s, data, plan)
+
+
+def test_walk_digit_limit_fails_only_its_row():
+    """An integer literal past the interpreter's int digit limit makes
+    json.loads raise a plain ValueError: that row fails closed with a
+    `json` issue, with or without a screen plan, in both modes."""
+    data = Schema(FLAT).data
+    s = pd.Series(['{"k": 20}', '{"k": 1' + "0" * 5000 + "}", '{"k": 5}'])
+    for plan in (None, plan_screen(data)):
+        for verdict_only in (False, True):
+            out = _gate_rows(s, data, plan, verdict_only=verdict_only)
+            assert out["reason"][0] is None and out["reason"][1] == "json"
+            assert "digit limit" in out["value"][1]
+            assert out["reason"][2] is not None
+
+
 def test_screen_dependencies_both_forms():
     dep_keys = {"type": "object", "dependencies": {"b": ["a"]}}
     data = Schema(dep_keys).data
@@ -1465,9 +1600,8 @@ def test_gate_metrics_accumulators(spark):
     assert d2["screened_valid"] == 81 and d2["screened_invalid"] == 0
     assert d2["walked"] == 119
 
-    # a row that LOOKS like an object but fails to parse poisons its whole
-    # Arrow batch into fallback: those rows (bad + innocent batchmates) all
-    # walk and are counted as fallback_rows
+    # a row that LOOKS like an object but fails to parse walks alone: its
+    # innocent batchmates stay on the screen, and no batch is refused whole
     poisoned = spark.createDataFrame(
         [(json.dumps({"k": k}),) for k in range(200)] + [("{not json",)] * 8,
         "props string",
@@ -1475,8 +1609,8 @@ def test_gate_metrics_accumulators(spark):
     m3 = GateMetrics(spark)
     assert gate_filter(poisoned, FLAT, json_col="props", metrics=m3).count() == 81
     d3 = m3.as_dict()
-    assert d3["walked"] >= 8 and d3["fallback_rows"] == d3["walked"]
-    assert d3["screened_valid"] + d3["screened_invalid"] + d3["walked"] == 208
+    assert d3["walked"] == 8 and d3["fallback_rows"] == 0
+    assert d3["screened_valid"] == 81 and d3["screened_invalid"] == 119
 
 
 def test_dynamic_native_keyword_selects_nothing(spark):
@@ -1504,35 +1638,98 @@ def test_dynamic_native_keyword_selects_nothing(spark):
 
 
 def test_dup_keys_and_huge_ints_walk_exactly(spark):
-    """Batches the screen cannot vouch for (duplicate keys, integers above
-    2^53) walk: duplicate keys resolve last-wins, and 2^53+1 is judged as
-    the exact integer, not as its float64 neighbour 2^53."""
+    """Rows the screen cannot vouch for walk, and their verdicts are exact:
+    duplicate keys resolve last-wins, and 2^53+1 is judged as the exact
+    integer, not as its float64 neighbour 2^53.  An integer beyond 2^53
+    walks alone while its batchmates stay screened; pyarrow refuses a
+    duplicate-key row even after the per-row probe accepts it, so its batch
+    walks whole."""
     from jsonschema_jl_spark.gate.gate import GateMetrics, gate_filter
 
     cap = {"type": "object", "properties": {"k": {"type": "integer", "maximum": 2**53}}}
     cases = [
-        # (schema, rows, kept ids, ids the screen refuses even alone)
+        # (schema, rows, kept ids, ids the screen refuses even alone,
+        #  whether their batch walks whole)
         (FLAT, [(1, '{"k": 9, "k": 50}'),        # dup keys, last-wins valid
                 (2, '{"k": 50, "k": 9}'),        # dup keys, last-wins invalid
-                (3, '{"k": 50}')], {1, 3}, {1, 2}),
+                (3, '{"k": 50}')], {1, 3}, {1, 2}, True),
         (cap, [(1, '{"k": 9007199254740993}'),   # 2^53+1: above the cap
                (2, '{"k": 9007199254740992}'),   # 2^53: at the cap
-               (3, '{"k": -9007199254740993}')], {2, 3}, {1, 3}),
+               (3, '{"k": -9007199254740993}')], {2, 3}, {1, 3}, False),
     ]
-    for schema, rows, expect, refused in cases:
+    for schema, rows, expect, refused, whole in cases:
         df = spark.createDataFrame(rows, "id long, js string").repartition(1)
         m = GateMetrics(spark)
         kept = {r.id for r in gate_filter(df, schema, json_col="js", metrics=m).collect()}
         assert kept == expect, (schema, kept)
-        # each refused row walks even when Spark hands it over alone
         plan = plan_screen(Schema(schema).data)
         assert plan is not None
+        masks = screen_batch(pd.Series([js for _, js in rows]), plan)
+        d = m.as_dict()
+        if whole:
+            assert masks is None
+            # however Spark batches the rows, each dup-key row's batch walks
+            assert d["walked"] == d["fallback_rows"] >= 2, (schema, d)
+        else:
+            # in one batch, exactly the refused rows are left undecided
+            valid, invalid = masks
+            assert [bool(v or x) for v, x in zip(valid, invalid)] == \
+                [i not in refused for i, _ in rows], schema
+            assert d["walked"] == 2 and d["fallback_rows"] == 0, (schema, d)
+        # each refused row walks even when Spark hands it over alone
         for i, js in rows:
             if i in refused:
-                assert screen_batch(pd.Series([js]), plan) is None, js
-        d = m.as_dict()
-        assert d["walked"] >= 2, (schema, d)
+                masks = screen_batch(pd.Series([js]), plan)
+                assert masks is None if whole else \
+                    not (masks[0][0] or masks[1][0]), js
         assert d["screened_valid"] + d["screened_invalid"] + d["walked"] == 3, d
+
+
+def test_screen_ignores_unread_columns():
+    """Values of a column no plan reads are never judged, so a 64-bit id, a
+    double of 1e20 or a `[null, ...]` list there keeps its row decided."""
+    from jsonschema_jl_spark.gate.columnar import plan_screen_conj
+
+    for data in (Schema(FLAT).data,
+                 Schema({"type": "object", "anyOf": [FLAT]}).data):
+        plan = plan_screen_conj(data)
+        assert plan is not None
+        rows = [
+            '{"id": %d, "k": 20}' % (2 ** 60 + 1),
+            '{"id": -%d, "k": 5}' % (2 ** 60 + 1),
+            '{"id": 1e20, "k": 50, "xs": [null, null]}',
+            '{"k": 95, "xs": [null]}',
+        ]
+        s = pd.Series(rows, dtype=object)
+        valid, invalid = screen_batch(s, plan)
+        assert list(valid) == [True, False, True, False]
+        assert list(invalid) == [False, True, False, True]
+        _assert_walk_parity(s, data, plan)
+    # a patternProperties subschema judges every column, so there the
+    # 64-bit id walks
+    pat = Schema({"type": "object", "properties": FLAT["properties"],
+                  "patternProperties": {"^i": {"type": "integer"}}}).data
+    plan = plan_screen(pat)
+    s = pd.Series(rows[:2] + ['{"id": 7, "k": 20}'], dtype=object)
+    valid, invalid = screen_batch(s, plan)
+    assert not (valid[0] or invalid[0] or valid[1] or invalid[1]) and valid[2]
+    _assert_walk_parity(s, pat, plan)
+
+
+def test_digit_limit_row_fails_closed(spark):
+    """A row whose integer literal is past the interpreter's int digit
+    limit is rejected on its own row by both entry points; the task runs."""
+    from jsonschema_jl_spark.gate.gate import apply_gate, gate_filter
+
+    huge = '{"k": 1' + "0" * 5000 + "}"
+    df = spark.createDataFrame(
+        [(1, '{"k": 20}'), (2, huge), (3, '{"k": 5}')], "id long, js string"
+    ).repartition(1)
+    assert {r.id for r in gate_filter(df, FLAT, json_col="js").collect()} == {1}
+    issues = {r.id: r.issue for r in apply_gate(df, FLAT, json_col="js").collect()}
+    assert issues[1] is None
+    assert issues[2].reason == "json" and "digit limit" in issues[2].value
+    assert issues[3].reason == "minimum"
 
 
 # ---------------------------------------------------------------------------
@@ -1665,6 +1862,42 @@ def _assert_screen_sound(schema, rows):
 @given(_h_case())
 def test_screen_soundness_hypothesis(case):
     _assert_screen_sound(*case)
+
+
+# per-row defects spliced into generated batches: parse failures, numbers
+# beyond float64's exact range, duplicate keys, NaN/Infinity, explicit
+# nulls and `null` inside strings ({nm} is one of the schema's names)
+_H_ROW_DEFECTS = [
+    '{{"{nm}": 7', '{{"{nm}": }}', '{{{nm}: 7}}', '{{"{nm}": 7,}}', "not json",
+    '{{"{nm}": 9007199254740993}}', '{{"{nm}": -9007199254740993}}',
+    '{{"{nm}": 18446744073709551617}}', '{{"{nm}": [9007199254740993]}}',
+    '{{"{nm}": {{"w": -9007199254740993}}}}', '{{"{nm}": 1, "{nm}": "a"}}',
+    '{{"{nm}": Infinity}}', '{{"{nm}": NaN}}', '{{"{nm}": null}}',
+    '{{"{nm}": "null"}}', '{{"other": "nullable"}}', "{{}}",
+]
+
+
+@st.composite
+def _h_defect_case(draw):
+    schema, rows = draw(_h_case())
+    texts = [json.dumps(r) for r in rows]
+    names = list(schema["properties"])
+    for _ in range(draw(st.integers(min_value=1, max_value=4))):
+        row = draw(st.sampled_from(_H_ROW_DEFECTS)).format(nm=draw(st.sampled_from(names)))
+        texts.insert(draw(st.integers(min_value=0, max_value=len(texts))), row)
+    return schema, texts
+
+
+@settings(max_examples=150, deadline=None)
+@given(_h_defect_case())
+def test_screen_walk_parity_with_row_defects_hypothesis(case):
+    """Screen + walk equals the pure walk on every row of a batch holding
+    per-row defects, in verdict-only and full-detail modes."""
+    from jsonschema_jl_spark.gate.columnar import plan_screen_conj
+
+    schema, texts = case
+    data = Schema(schema).data
+    _assert_walk_parity(pd.Series(texts, dtype=object), data, plan_screen_conj(data))
 
 
 # signed zero: the walk compares numbers (-0.0 == 0), so the screen's
