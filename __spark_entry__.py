@@ -544,16 +544,17 @@ def q_doc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("shared_ngrams") >= 3)
         .select("src", "dst")
     )
-    labels = connected_components(edges, vertices=d.select("doc_id"), max_iters=30)
+    labels = connected_components(edges, vertices=d.select("doc_id"))
     return labels.select(F.col("id").alias("doc_id"), F.col("component"))
 
 
 def q_doc_components_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # P11 alternate path: the large-star/small-star CC (the scale
-    # implementation for adversarial graph shapes) over the SAME edge set
-    # and recursive-CTE oracle as doc_components — contract-level proof the
-    # two implementations converge to identical min-label assignments
-    from jsonschema_jl_spark.operators.components import connected_components_twophase
+    # P11 scale path: connected_components labels this edge set in one
+    # Arrow task; here the large-star/small-star rounds it keeps for edge
+    # sets over its task budget run directly, over the SAME edge set and
+    # recursive-CTE oracle as doc_components — contract-level proof both
+    # paths land on identical min-label assignments
+    from jsonschema_jl_spark.operators.components import _star_components
 
     d = _docs(spark, sf_dir)
     edges = (
@@ -561,7 +562,7 @@ def q_doc_components_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("shared_ngrams") >= 3)
         .select("src", "dst")
     )
-    labels = connected_components_twophase(edges, vertices=d.select("doc_id"))
+    labels = _star_components(edges, vertices=d.select("doc_id"))
     return labels.select(F.col("id").alias("doc_id"), F.col("component"))
 
 
@@ -1405,8 +1406,8 @@ def _oracle_sql_dict() -> dict[str, str]:
           GROUP BY d.doc_id
         """,
         # doc_components_twophase: same SQL as doc_components (patched in
-        # oracle_sql() above — the twophase implementation must land on the
-        # identical min-label assignment)
+        # oracle_sql() above — the star path must land on the identical
+        # min-label assignment)
         "doc_skew_salted_pairs": """
           WITH hot AS (SELECT doc_id FROM documents WHERE doc_id % 5 = 0)
           SELECT a.doc_id AS src, b.doc_id AS dst

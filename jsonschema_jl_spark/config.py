@@ -29,9 +29,9 @@ class DedupConfig:
     num_perm: int = 256           # signature length (bins for OPH)
     minhash_seed: int = 4242
     mersenne_prime: int = (1 << 61) - 1
-    # "oph": one-permutation hashing with rotation densification (Li/
-    # Shrivastava) — O(|shingles|) per row, the production-scale scheme.
-    # "kperm": classic k independent multiply-add permutations — O(k*|S|).
+    # one-permutation hashing with rotation densification (Li/Shrivastava),
+    # O(|shingles|) per row — the only scheme; the field stays so stored
+    # checkpoints keep their config_hash, and any other value is rejected
     minhash_scheme: str = "oph"
     # --- LSH banding (P4) ---
     num_bands: int = 32           # b bands
@@ -57,7 +57,8 @@ class DedupConfig:
                                   # (captions here are <=~600 normalized
                                   # chars; containment_pairs has no cap)
     # --- connected components (P11) ---
-    cc_max_iters: int = 25
+    cc_max_iters: int = 25        # bounds only the star path (edge sets too
+                                  # large for one task); hitting it raises
     # --- misc ---
     seed: int = 4242
 
@@ -66,6 +67,10 @@ class DedupConfig:
             raise ValueError(
                 f"num_bands*rows_per_band ({self.num_bands}*{self.rows_per_band}) "
                 f"must equal num_perm ({self.num_perm})"
+            )
+        if self.minhash_scheme != "oph":
+            raise ValueError(
+                f"minhash_scheme {self.minhash_scheme!r} is not supported (only 'oph')"
             )
 
     def config_hash(self) -> str:

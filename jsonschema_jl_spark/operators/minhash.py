@@ -9,9 +9,9 @@ Hashing scheme (documented, deterministic):
   * normalize: NFC -> casefold -> whitespace collapse (P2)
   * shingles: k-byte windows of the UTF-8 normalized text, hashed with a
     polynomial rolling hash in uint64 (natural mod-2^64 wraparound), deduped
-  * minhash_i(S) = min_{x in S} (a_i * x + b_i  mod 2^64) — multiply-add
-    universal-style hashing in the 2^64 ring (vectorized; the classic
-    mod-Mersenne-prime scheme needs 128-bit intermediates numpy lacks)
+  * signatures: one-permutation hashing — each shingle hash lands in one of
+    num_perm bins, the bin keeps the min of a splitmix value hash, and empty
+    bins are densified by rotation (_oph_signatures_flat)
 """
 
 from __future__ import annotations
@@ -135,13 +135,6 @@ def _shingle_flat_from_buffer(
     return h, row, counts, n
 
 
-def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.default_rng(cfg.minhash_seed)
-    a = rng.integers(1, 1 << 63, size=cfg.num_perm, dtype=np.uint64) * np.uint64(2) + np.uint64(1)
-    b = rng.integers(0, 1 << 63, size=cfg.num_perm, dtype=np.uint64)
-    return a, b
-
-
 _EMPTY = np.uint64(0xFFFFFFFFFFFFFFFF)
 _HOP = np.uint64(0x9E37)  # densification hop offset; values are 63-bit so
                           # accumulated hops can never collide with _EMPTY
@@ -211,13 +204,12 @@ def minhash_batch(
     texts: pd.Series, cfg: DedupConfig, need_sets: bool = True, normalized: bool = False
 ) -> tuple[list, list]:
     """Vectorized per-batch kernel: returns (shingle sets, signatures) as
-    lists of int64 ndarrays.  Scheme per cfg.minhash_scheme: OPH (default,
-    one sort+reduceat pass over the concatenated shingles) or classic
-    k-permutation (reduceat per permutation chunk).  need_sets=False skips
-    returning the sets (they are still computed for hashing)."""
+    lists of int64 ndarrays.  Signatures are OPH (one sort+reduceat pass
+    over the concatenated shingles).  need_sets=False skips returning the
+    sets (they are still computed for hashing)."""
     if len(texts) == 0:
         return [], []
-    flat, row, counts, n = _shingle_flat_batch(texts, cfg.shingle_k, normalized=normalized)
+    flat, row, _counts, n = _shingle_flat_batch(texts, cfg.shingle_k, normalized=normalized)
     sets: list = []
     if need_sets:
         # per-row dedup from the flat windows: one global (row, hash) sort,
@@ -228,20 +220,7 @@ def minhash_batch(
         f_u, r_u = f_s[keep].view(np.int64), r_s[keep]
         bounds = np.searchsorted(r_u, np.arange(1, n, dtype=np.int64))
         sets = np.split(f_u, bounds)
-    if cfg.minhash_scheme == "oph":
-        sigs = list(_oph_signatures_flat(flat, row, n, cfg))
-        return sets, sigs
-    a, b = _perm_params(cfg)
-    offsets = np.zeros(n, dtype=np.int64)
-    np.cumsum(counts[:-1], out=offsets[1:])
-    P = cfg.num_perm
-    sigs = np.empty((P, n), dtype=np.uint64)
-    step = 16
-    for i in range(0, P, step):
-        h = a[i : i + step, None] * flat[None, :] + b[i : i + step, None]
-        sigs[i : i + step, :] = np.minimum.reduceat(h, offsets, axis=1)
-    sigs_i64 = sigs.view(np.int64).T  # (rows, P)
-    return sets, [sigs_i64[r] for r in range(n)]
+    return sets, list(_oph_signatures_flat(flat, row, n, cfg))
 
 
 _SIG_SCHEMA = T.StructType(
@@ -378,11 +357,7 @@ def normalize_signatures_bands(
             np.cumsum(lens[:-1], out=starts[1:])
             pdata, plens = _pad_concat(data, starts, lens, k)
             flat, row, _counts, _n = _shingle_flat_from_buffer(pdata, plens, k)
-            sigs = np.ascontiguousarray(
-                _oph_signatures_flat(flat, row, n, cfg)
-                if cfg.minhash_scheme == "oph"
-                else _classic_signatures_flat(flat, row, plens - (k - 1), n, cfg)
-            )
+            sigs = np.ascontiguousarray(_oph_signatures_flat(flat, row, n, cfg))
             bk = band_keys_np(sigs.reshape(n, P), cfg).reshape(-1)
             boff = pa.array((np.arange(n + 1, dtype=np.int64) * B).astype(np.int32))
             bands = pa.ListArray.from_arrays(boff, pa.array(bk, type=pa.int64()))
@@ -443,58 +418,15 @@ def _signatures_map_in_arrow(
                 data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
                 starts = np.zeros(n, dtype=np.int64)
                 np.cumsum(lens[:-1], out=starts[1:])
-            if (lens < k).any() or not (
-                n == 1 or (starts[1:] == starts[:-1] + lens[:-1]).all()
-            ):
-                # pad short rows to k (zero-fill) into a fresh contiguous
-                # buffer with ONE vectorized gather
-                out_lens = np.maximum(lens, k)
-                ostarts = np.zeros(n, dtype=np.int64)
-                np.cumsum(out_lens[:-1], out=ostarts[1:])
-                buf = np.zeros(int(out_lens.sum()), dtype=np.uint8)
-                tot = int(lens.sum())
-                if tot:
-                    # rid[i] = source row of the i-th copied byte; ramp[i] =
-                    # its offset within that row (cumsum-of-markers form)
-                    rid = np.zeros(tot, dtype=np.int64)
-                    nz = np.cumsum(lens[:-1])
-                    rid[nz[nz < tot]] = 1
-                    rid = np.cumsum(rid)
-                    in_starts = np.concatenate(([0], nz))
-                    ramp = np.arange(tot, dtype=np.int64) - in_starts[rid]
-                    buf[ostarts[rid] + ramp] = data[starts[rid] + ramp]
-                data, lens = buf, out_lens
-            else:
-                data = data[starts[0] : starts[-1] + lens[-1]]
+            data, lens = _pad_concat(data, starts, lens, k)
             flat, row, _counts, _n = _shingle_flat_from_buffer(data, lens, k)
-            sigs = np.ascontiguousarray(
-                _oph_signatures_flat(flat, row, n, cfg)
-                if cfg.minhash_scheme == "oph"
-                else _classic_signatures_flat(flat, row, lens - (k - 1), n, cfg)
-            ).reshape(-1)
+            sigs = np.ascontiguousarray(_oph_signatures_flat(flat, row, n, cfg)).reshape(-1)
             offsets = pa.array((np.arange(n + 1, dtype=np.int64) * P).astype(np.int32))
             minhash = pa.ListArray.from_arrays(offsets, pa.array(sigs, type=pa.int64()))
             out_cols = [batch.column(i) for i in range(batch.num_columns)] + [minhash]
             yield pa.RecordBatch.from_arrays(out_cols, names=col_names + ["minhash"])
 
     return df.mapInArrow(gen, schema=out_schema_t)
-
-
-def _classic_signatures_flat(
-    flat: np.ndarray, row: np.ndarray, counts: np.ndarray, n: int, cfg: DedupConfig
-) -> np.ndarray:
-    """Classic k-permutation signatures from the flat window stream (same
-    math as minhash_batch's classic branch)."""
-    a, b = _perm_params(cfg)
-    offsets = np.zeros(n, dtype=np.int64)
-    np.cumsum(counts[:-1], out=offsets[1:])
-    P = cfg.num_perm
-    sigs = np.empty((P, n), dtype=np.uint64)
-    step = 16
-    for i in range(0, P, step):
-        h = a[i : i + step, None] * flat[None, :] + b[i : i + step, None]
-        sigs[i : i + step, :] = np.minimum.reduceat(h, offsets, axis=1)
-    return sigs.view(np.int64).T
 
 
 def with_signatures(

@@ -215,32 +215,22 @@ def dedup_pipeline(
             )
 
         if ckpt is None:
-            # P10 materialization: CC symmetrizes edges as `edges UNION
-            # edges.swapped` — the edge subtree appears TWICE under that
-            # union, and Spark computes each union branch's lineage
-            # independently (exchange reuse does not cover the Python
-            # candidate/verify/containment cascade), so without a cut here
-            # the entire detector cascade runs twice inside CC's first job
-            # (measured 2.7x the staged cost).
+            # P10 materialization: the edges feed both CC and
+            # PipelineResult.edges — land them once, here, so neither
+            # re-runs the Python candidate/verify/containment cascade and
+            # the cascade's jobs run before CC's
             edges = edges_of().localCheckpoint(eager=True)
-            # a cheap scan of the just-checkpointed blocks
-            n_edges = edges.count()
         else:
-            edges, n_edges = landed("edges", "src", edges_of)
+            edges = landed("edges", "src", edges_of)[0]
         # the detector kernels ran exactly once, inside the materialization
         # above (none ran when a completed edges stage was read back)
         skew_metrics = skew[0].as_dict() if skew else {}
-
-        # CC shuffles only edge-scale data: size its partitioning to the
-        # edges, not to the corpus — see connected_components(shuffle_partitions=...)
-        cc_par = min(par, max(8, (n_edges + 249_999) // 250_000))
 
         def labels_of() -> DataFrame:
             nid_labels = connected_components(
                 edges.select("src", "dst"),
                 vertices=slim.select("nid"),
                 max_iters=cfg.cc_max_iters,
-                shuffle_partitions=cc_par,
             )
             # map the numeric hot-path ids back to image_ids (component
             # keeps a stable representative: the image_id of its min-nid

@@ -83,6 +83,9 @@ def test_config_hash_isolation(spark, images, tmp_path):
     c1 = CheckpointManager(root, CFG)
     c2 = CheckpointManager(root, DedupConfig(jaccard_tau=0.8))
     assert c1.base != c2.base
+    # a config the engine cannot run is refused, not hashed into a base dir
+    with pytest.raises(ValueError, match="minhash_scheme"):
+        DedupConfig(minhash_scheme="kperm")
     # the base dir also carries the on-disk layout version, so an engine
     # upgrade that changes a stage's stored columns (config_hash unchanged)
     # never resumes from an old-layout checkpoint

@@ -1,16 +1,17 @@
-"""Connected-components correctness: label propagation vs two-phase
-large-star/small-star vs a driver-side union-find oracle."""
+"""Connected-components correctness: the one-task kernel path and the
+large-star/small-star path, each against a driver-side union-find oracle."""
 
 from __future__ import annotations
 
 import random
+import re
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
-from jsonschema_jl_spark.operators.components import (
-    connected_components,
-    connected_components_twophase,
-)
+from jsonschema_jl_spark.operators import components
+from jsonschema_jl_spark.operators.components import connected_components
 
 
 def _oracle(edges, vertices):
@@ -29,63 +30,100 @@ def _oracle(edges, vertices):
     return {v: find(v) for v in vertices}
 
 
-def _check(spark, edges, vertices):
-    edf = spark.createDataFrame(edges or [("x", "x")], "src string, dst string")
-    if not edges:
-        edf = edf.filter("src != src")
-    vdf = spark.createDataFrame([(v,) for v in vertices], "id string")
-    want = _oracle(edges, vertices)
-    for fn in (connected_components, connected_components_twophase):
-        got = {r.id: r.component for r in fn(edf, vertices=vdf).collect()}
-        assert got == want, f"{fn.__name__} mismatch"
+@pytest.fixture(params=["kernel", "star"])
+def path(request, monkeypatch):
+    """Run the test body on one CC path, and check that path really ran."""
+    calls = []
+    star = components._star_components
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return star(*args, **kwargs)
+
+    monkeypatch.setattr(components, "_star_components", spy)
+    if request.param == "star":
+        # every edge count, even zero, is over the budget
+        monkeypatch.setattr(components, "_TASK_EDGE_BUDGET", -1)
+    yield request.param
+    assert bool(calls) == (request.param == "star")
 
 
-def test_planted_clusters(spark):
-    vertices = [f"v{i:03d}" for i in range(60)]
-    edges = [(f"v{i:03d}", f"v{i + 1:03d}") for i in range(0, 30, 3)]
-    edges += [("v040", "v041"), ("v041", "v042"), ("v040", "v042")]
-    _check(spark, edges, vertices)
+def _check(spark, edges, vertices, kind, **kwargs):
+    """connected_components == _oracle, with `long` or `string` ids (the
+    string form zero-pads, so both kinds share one id order)."""
+    if kind == "string":
+        edges = [(f"v{a:05d}", f"v{b:05d}") for a, b in edges]
+        vertices = [f"v{v:05d}" for v in vertices]
+    edf = spark.createDataFrame(edges, f"src {kind}, dst {kind}")
+    vdf = spark.createDataFrame([(v,) for v in vertices], f"id {kind}")
+    out = connected_components(edf, vertices=vdf, **kwargs)
+    got = {r.id: r.component for r in out.collect()}
+    assert got == _oracle(edges, vertices)
+    return got
 
 
-def test_long_chain(spark):
-    # high-diameter path: two-phase must converge well under O(n) rounds
-    n = 120
-    vertices = [f"c{i:03d}" for i in range(n)]
-    edges = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(n - 1)]
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    vdf = spark.createDataFrame([(v,) for v in vertices], "id string")
-    got = {r.id: r.component for r in connected_components_twophase(edf, vertices=vdf, max_iters=12).collect()}
-    assert set(got.values()) == {"c000"}
-    assert len(got) == n
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_planted_clusters(spark, path, kind):
+    edges = [(i, i + 1) for i in range(0, 30, 3)]
+    edges += [(40, 41), (41, 42), (40, 42)]
+    _check(spark, edges, range(60), kind)
 
 
-def test_random_graph(spark):
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_random_graph(spark, path, kind):
     rng = random.Random(7)
-    vertices = [f"r{i:03d}" for i in range(80)]
-    edges = [
-        (vertices[rng.randrange(80)], vertices[rng.randrange(80)]) for _ in range(50)
-    ]
-    edges = [(a, b) for a, b in edges if a != b]
-    _check(spark, edges, vertices)
+    edges = [(rng.randrange(80), rng.randrange(80)) for _ in range(50)]
+    _check(spark, [(a, b) for a, b in edges if a != b], range(80), kind)
 
 
-def test_no_edges(spark):
-    vertices = ["a", "b", "c"]
-    _check(spark, [], vertices)
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_no_edges(spark, path, kind):
+    _check(spark, [], range(3), kind)
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_long_chain(spark, path, kind):
+    # high-diameter path: the star path converges well under O(n) rounds
+    got = _check(spark, [(i, i + 1) for i in range(119)], range(120), kind, max_iters=12)
+    assert len(set(got.values())) == 1
+
+
+def test_kernel_path_graph_needs_no_rounds_cap(spark):
+    """A 2,000-vertex path visiting its ids in random order labels with
+    max_iters=1 on the kernel path (the star path would raise): the kernel
+    has no rounds to cap."""
+    order = list(range(2000))
+    random.Random(11).shuffle(order)
+    got = _check(spark, list(zip(order, order[1:])), range(2000), "long", max_iters=1)
+    assert set(got.values()) == {0}
+
+
+def test_star_path_unconverged_raises(spark):
+    edges = spark.createDataFrame([(i, i + 1) for i in range(199)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        components._star_components(edges, max_iters=1)
+
+
+def test_min_labels_matches_oracle():
+    """The kernel's numpy labeling, without Spark: random multigraphs with
+    self-loops and a path over a random id order."""
+    rng = np.random.default_rng(3)
+    for _ in range(100):
+        n = int(rng.integers(1, 200))
+        u, v = rng.integers(0, n, (2, int(rng.integers(0, 300))))
+        want = _oracle(zip(u.tolist(), v.tolist()), range(n))
+        assert components._min_labels(u, v, n).tolist() == [want[x] for x in range(n)]
+    perm = rng.permutation(5000)
+    assert (components._min_labels(perm[:-1], perm[1:], 5000) == 0).all()
 
 
 def test_convergence_signature_distinguishes(spark):
-    """The twophase convergence signature (count, bit_xor of full xxhash64)
-    must separate distinct same-size edge sets — the retired
+    """The star path's convergence signature (count, bit_xor of full
+    xxhash64) must separate distinct same-size edge sets — the retired
     `sum(hash % 1_000_003)` form threw away most hash bits."""
-    from pyspark.sql import functions as F
 
     def sig(rows):
-        df = spark.createDataFrame(rows, "a string, b string")
-        r = df.agg(
-            F.count("*").alias("n"), F.expr("bit_xor(xxhash64(a, b))").alias("h")
-        ).collect()[0]
-        return (r["n"], r["h"])
+        return components._signature(spark.createDataFrame(rows, "a string, b string"))
 
     s1 = sig([("a", "b"), ("c", "d")])
     s2 = sig([("a", "b"), ("c", "e")])
@@ -93,112 +131,47 @@ def test_convergence_signature_distinguishes(spark):
     assert s1 == sig([("c", "d"), ("a", "b")])  # order-insensitive
 
 
-def test_shuffle_partitions_override_restored(spark):
-    """connected_components(shuffle_partitions=...) scopes the edge-sized
-    partition count to its own plans — the session conf is never touched
-    (round-5: explicit repartition replaced the conf mutation)."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    from jsonschema_jl_spark.operators.components import connected_components
-
-    edges = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
-    out = connected_components(edges, shuffle_partitions=2)
-    rows = {(r.id, r.component) for r in out.collect()}
-    assert rows == {("a", "a"), ("b", "a"), ("c", "a")}
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_shuffle_partitions_scoped_not_session_global(spark):
-    """A concurrent query planned MID-LOOP keeps the session's own
-    shuffle-partition count (the round-4 caveat this round retires), while
-    the loop's own per-round aggregation runs at the edge-sized count."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from jsonschema_jl_spark.operators.components import connected_components
-
-    session_par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cc_par = 3
-    assert session_par != cc_par
+def test_star_shuffle_partitions_scoped(spark, monkeypatch):
+    """The star path sizes its shuffles from the observed edge count
+    (min(session count, max(8, ceil(n / 250k))): 8 here) with per-plan
+    scoping: the session conf is never touched, a concurrent aggregation
+    planned mid-loop keeps the session count, every loop exchange is
+    edge-sized, and labels equal a session-partitioned run's."""
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    session_par = "16"
     seen: dict = {"concurrent": [], "loop": []}
+    edges = spark.createDataFrame([(i, i + 1) for i in range(0, 40, 2)], "src long, dst long")
+    # the session's concrete DataFrame class, which overrides the base one
+    frame = type(edges)
+    checkpoint = frame.localCheckpoint
 
-    def probing_cp(df, i):
+    def parts(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [int(n) for n in re.findall(r"hashpartitioning\([^)]*?(\d+)\)", plan)]
+
+    def probing_cp(df, eager=True):
         # conf is untouched mid-loop...
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == session_par
-        # ...and a concurrent aggregation plans at the SESSION count
-        q = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
-        qplan = q._jdf.queryExecution().executedPlan().toString()
-        seen["concurrent"] += re.findall(r"hashpartitioning\([^)]*?(\d+)\)", qplan)
-        # while the loop's own label aggregation is edge-sized
-        if i > 0:
-            lplan = df._jdf.queryExecution().executedPlan().toString()
-            seen["loop"] += re.findall(r"hashpartitioning\([^)]*?(\d+)\)", lplan)
-        return df.localCheckpoint(eager=False)
+        assert spark.conf.get(conf) == session_par
+        # ...a concurrent aggregation plans at the SESSION count...
+        seen["concurrent"] += parts(spark.range(100).groupBy((F.col("id") % 7).alias("k")).count())
+        # ...while the loop's own plans are edge-sized
+        seen["loop"] += parts(df)
+        return checkpoint(df, eager)
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 40, 2)], "src long, dst long"
-    )
-    out = connected_components(
-        edges, shuffle_partitions=cc_par, checkpoint_fn=probing_cp
-    )
-    comps = {(r.id, r.component) for r in out.collect()}
-    assert (1, 0) in comps and (40, 40) not in comps
-    assert seen["concurrent"] and all(
-        int(n) == session_par for n in seen["concurrent"]
-    ), seen["concurrent"]
-    # the lazy-checkpoint lineage still shows the ONE-TIME setup exchange
-    # (sym's distinct, legitimately session-sized); every other loop
-    # exchange — repartition + agg — must be edge-sized
-    counts = {int(n) for n in seen["loop"]}
-    assert cc_par in counts and counts <= {cc_par, session_par}, counts
-
-
-def test_twophase_shuffle_partitions_scoped(spark):
-    """connected_components_twophase(shuffle_partitions=...) (round 6):
-    the large/small-star loop's exchanges are edge-sized per-plan, a
-    concurrent aggregation planned mid-loop keeps the session count, and
-    labels are identical to the unscoped run."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from jsonschema_jl_spark.operators.components import (
-        connected_components_twophase,
-    )
-
-    session_par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cc_par = 3
-    assert session_par != cc_par
-    seen: dict = {"concurrent": [], "loop": []}
-
-    def probing_cp(df, i):
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == session_par
-        q = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
-        qplan = q._jdf.queryExecution().executedPlan().toString()
-        seen["concurrent"] += re.findall(r"hashpartitioning\([^)]*?(\d+)\)", qplan)
-        if i > 0:
-            lplan = df._jdf.queryExecution().executedPlan().toString()
-            seen["loop"] += re.findall(r"hashpartitioning\([^)]*?(\d+)\)", lplan)
-        return df.localCheckpoint(eager=True)
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 40, 2)], "src long, dst long"
-    )
-    out = connected_components_twophase(
-        edges, shuffle_partitions=cc_par, checkpoint_fn=probing_cp
-    )
-    scoped = {(r.id, r.component) for r in out.collect()}
-    unscoped = {
-        (r.id, r.component)
-        for r in connected_components_twophase(edges).collect()
-    }
+    spark.conf.set(conf, session_par)
+    try:
+        unscoped = {(r.id, r.component) for r in components._star_components(edges).collect()}
+        monkeypatch.setattr(components, "_TASK_EDGE_BUDGET", -1)
+        monkeypatch.setattr(frame, "localCheckpoint", probing_cp)
+        scoped = {(r.id, r.component) for r in connected_components(edges).collect()}
+        assert spark.conf.get(conf) == session_par
+    finally:
+        spark.conf.set(conf, before)
     assert scoped == unscoped
     assert (1, 0) in scoped and (40, 40) not in scoped
-    assert seen["concurrent"] and all(
-        int(n) == session_par for n in seen["concurrent"]
-    ), seen["concurrent"]
+    assert seen["concurrent"] and set(seen["concurrent"]) == {int(session_par)}
     # every loop exchange (scoped repartitions + the aggs/dedups reusing
-    # them) is edge-sized; the eager checkpoint truncates lineage so no
-    # session-sized setup exchange should survive in the probed plans
-    counts = {int(n) for n in seen["loop"]}
-    assert counts == {cc_par}, counts
+    # them) is edge-sized; the eager checkpoints truncate lineage, so no
+    # session-sized setup exchange survives in the probed plans
+    assert set(seen["loop"]) == {8}, seen["loop"]

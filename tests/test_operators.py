@@ -247,8 +247,13 @@ def test_kernel_bands_pair_parity(spark, shape):
     the bucket hash is an internal join key; grouping semantics are by
     band content, so the two formulations may differ only by 64-bit hash
     collisions (none at test scale).  Parametrized over banding shapes
-    so the (n, B, r) reshape/fold stays aligned with the JVM slicing."""
+    so the (n, B, r) reshape/fold stays aligned with the JVM slicing.
+    The signatures of both with_signatures kernels (minhash_batch and the
+    zero-copy Arrow one) are bit-identical, and so are the fused kernel's
+    band keys and band_keys_np over those signatures."""
     import dataclasses
+
+    from jsonschema_jl_spark.operators.minhash import band_keys_np
 
     cfg = CFG if shape is None else dataclasses.replace(CFG, **shape)
     images = generate_images(spark, 400, cfg, with_bytes=False, with_malformed=False)
@@ -260,6 +265,11 @@ def test_kernel_bands_pair_parity(spark, shape):
     pk = {(r.src, r.dst) for r in candidate_pairs(b_kernel, cfg).collect()}
     pj = {(r.src, r.dst) for r in candidate_pairs(b_jvm, cfg).collect()}
     assert pk == pj and len(pk) > 0
+    batch = with_signatures(slim, cfg=cfg).select("image_id", F.col("minhash").alias("mh_batch"))
+    rows = sigs.join(batch, "image_id").select("minhash", "mh_batch", "bands").collect()
+    mh = np.array([r.minhash for r in rows], dtype=np.int64)
+    assert len(rows) == 400 and mh.tolist() == [r.mh_batch for r in rows]
+    assert band_keys_np(mh, cfg).tolist() == [r.bands for r in rows]
     sigs.unpersist()
 
 
