@@ -790,11 +790,12 @@ def q_doc_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     math (poly rolling hash -> splitmix64 -> top-bit bins -> per-bin min ->
     rotation densification) in pure mod-2^64 SQL arithmetic (_OPH_ORACLE_SQL
     below).  Emitted per row: minhash0 (= densified bin 0: the band
-    interleave in minhash.py:227 maps signature slot 0 to bin 0) checks one
-    slot bit-exactly; sig_modsum folds ALL CFG.num_perm slots mod 2^61-1, so any
-    slot changing is caught with probability 1 - 2^-61.  The signature
-    values are signed-int64 reinterpretations of engine uint64s, hence the
-    unsigned-residue arithmetic in the aggregate below."""
+    interleave in minhash._oph_signatures_flat maps signature slot 0 to
+    bin 0) checks one slot bit-exactly; sig_modsum folds ALL CFG.num_perm
+    slots mod 2^61-1, so any slot changing is caught with probability
+    1 - 2^-61.  The signature values are signed-int64 reinterpretations of
+    engine uint64s, hence the unsigned-residue arithmetic in the aggregate
+    below."""
     d = _docs(spark, sf_dir).select("doc_id", "text")
     sigs = with_signatures(d, text_col="text", cfg=CFG)
     m = _SIG_MOD
@@ -1073,15 +1074,15 @@ SELECT n_members, count(*) AS n_clusters FROM csize GROUP BY 1 ORDER BY 1
 # ---------------------------------------------------------------------------
 # doc_minhash_signatures oracle: the FULL OPH signature math in pure DuckDB
 # mod-2^64 arithmetic, mirroring operators/minhash.py bit for bit:
-#   poly rolling hash (minhash.py:29,74-75: h = sum byte[t]*B^t mod 2^64,
-#   sub-k texts zero-padded to one window)  ->  xor seed, splitmix64 mix
-#   (minhash.py:162-166,192)  ->  bin = top-7 bits, val = splitmix(mixed)>>1
-#   (minhash.py:193-194)  ->  per-(doc,bin) min  ->  rotation densification
-#   (empty bin j borrows nearest filled bin at-or-right cyclic, +0x9E37/hop,
-#   minhash.py:208-219).  Band interleave (minhash.py:227) maps signature
-#   slot 0 to bin 0, so minhash0 = densified bin 0.  uint64s are carried as
-#   UBIGINT; multiplications split the constant into 32-bit halves because
-#   a full 64x64 product overflows INT128.
+#   poly rolling hash (_POLY_BASE, _shingle_flat_from_buffer: h = sum
+#   byte[t]*B^t mod 2^64, sub-k texts zero-padded to one window)  ->  xor
+#   seed, splitmix64 mix (_splitmix)  ->  bin = top log2(num_perm) bits,
+#   val = splitmix(mixed)>>1  ->  per-(doc,bin) min  ->  rotation
+#   densification (empty bin j borrows nearest filled bin at-or-right
+#   cyclic, +0x9E37/hop), all in _oph_signatures_flat, whose closing band
+#   interleave maps signature slot 0 to bin 0, so minhash0 = densified bin
+#   0.  uint64s are carried as UBIGINT; multiplications split the constant
+#   into 32-bit halves because a full 64x64 product overflows INT128.
 # ---------------------------------------------------------------------------
 _U64 = 1 << 64
 _OPH_POWS = [pow(1099511628211, t, _U64) for t in range(5)]  # B^t mod 2^64

@@ -1,9 +1,15 @@
-"""Caption normalization, char shingling and MinHash signatures (P2+P3).
+"""Caption normalization, char shingling, MinHash signatures and LSH band
+keys (P2+P3+P4).
 
-All kernels are Arrow-batched pandas UDFs with pure-numpy inner loops — no
-per-row Python UDFs (BASELINE.json:15).  The shingle/permutation parameters
-come exclusively from DedupConfig so the engine and the recall oracle can
-never diverge (BASELINE.json:6).
+One Arrow batch function, `signature_batch(text, cfg, normalized, emit)`,
+turns a string array into any subset of SIGNATURE_OUTPUTS = {txt_norm,
+shingles, minhash, bands}: it reads the UTF-8 bytes straight from the
+array's buffers and runs whole-batch numpy from there, with no per-row
+Python objects.  `normalize_signatures_bands` (the pipeline's {txt_norm,
+bands}), `with_signatures` ({shingles, minhash} or {minhash}) and
+verify's text Jaccard are thin wrappers over it.  The shingle/permutation
+parameters come exclusively from DedupConfig so the engine and the recall
+oracle can never diverge (BASELINE.json:6).
 
 Hashing scheme (documented, deterministic):
   * normalize: NFC -> casefold -> whitespace collapse (P2)
@@ -17,10 +23,11 @@ Hashing scheme (documented, deterministic):
 from __future__ import annotations
 
 import unicodedata
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -76,43 +83,17 @@ def shingle_set_np(s: str, k: int, normalized: bool = False) -> np.ndarray:
     return np.unique(h)
 
 
-def _shingle_flat_batch(
-    texts, k: int, normalized: bool = False
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
-    """Batch-vectorized shingling: ONE polynomial-hash pass over the whole
-    Arrow batch instead of per-row numpy calls (~10x less per-row overhead).
-
-    Returns (flat_hashes uint64, row_ids int64, counts int64, n_rows).
-    flat_hashes contains every k-byte window hash per row IN ROW ORDER and
-    MAY contain duplicates — callers reduce with min (MinHash/OPH), where
-    duplicates are harmless; dedup when sets are needed happens per row
-    downstream.  Sub-k texts are zero-padded to one whole-text window,
-    matching shingle_set_np."""
-    bufs = []
-    for t in texts:
-        s = t if isinstance(t, str) else ("" if t is None else str(t))
-        b = (s if normalized else normalize_text(s)).encode("utf-8")
-        if len(b) < k:
-            b = b.ljust(k, b"\x00")
-        bufs.append(b)
-    n = len(bufs)
-    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=n)
-    arr = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    return _shingle_flat_from_buffer(arr, lens, k)
-
-
 def _shingle_flat_from_buffer(
     arr: np.ndarray, lens: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
-    """Shingle hashes from a concatenated uint8 buffer + per-row byte
-    lengths (every row length >= k; pad before calling).  Horner-hashes
+) -> tuple[np.ndarray, np.ndarray]:
+    """(hashes, row ids) of every k-byte window of a concatenated uint8
+    buffer + per-row byte lengths (every row length >= k; pad before
+    calling), in row order and NOT deduped.  Horner-hashes
     EVERY contiguous window of the whole buffer in k streaming passes (no
     index arrays), then masks out the k-1 windows per row that cross a row
     boundary — ~40x less memory traffic than gathering each window through
     a position array, which matters because this kernel runs on every core
     at once and the memory bus is the scaling bottleneck."""
-    n = lens.size
-    counts = lens - (k - 1)                      # windows per row (>= 1)
     m = arr.size - (k - 1)                       # all contiguous windows
     a64 = arr.astype(np.uint64)
     h_all = a64[k - 1 : k - 1 + m].copy()
@@ -125,14 +106,8 @@ def _shingle_flat_from_buffer(
     for j in range(1, k):
         idx = ends - j
         mask[idx[idx < m]] = False
-    h = h_all[mask]
-    # row ids via cumsum-of-markers (avoids np.repeat's per-row loop)
-    total = int(counts.sum())
-    row = np.zeros(total, dtype=np.int64)
-    if n > 1:
-        row[np.cumsum(counts[:-1])] = 1
-        row = np.cumsum(row)
-    return h, row, counts, n
+    counts = lens - (k - 1)                      # windows per row (>= 1)
+    return h_all[mask], np.repeat(np.arange(lens.size, dtype=np.int64), counts)
 
 
 _EMPTY = np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -200,37 +175,6 @@ def _oph_signatures_flat(
     return M[:, perm].view(np.int64)
 
 
-def minhash_batch(
-    texts: pd.Series, cfg: DedupConfig, need_sets: bool = True, normalized: bool = False
-) -> tuple[list, list]:
-    """Vectorized per-batch kernel: returns (shingle sets, signatures) as
-    lists of int64 ndarrays.  Signatures are OPH (one sort+reduceat pass
-    over the concatenated shingles).  need_sets=False skips returning the
-    sets (they are still computed for hashing)."""
-    if len(texts) == 0:
-        return [], []
-    flat, row, _counts, n = _shingle_flat_batch(texts, cfg.shingle_k, normalized=normalized)
-    sets: list = []
-    if need_sets:
-        # per-row dedup from the flat windows: one global (row, hash) sort,
-        # segment-unique, then split — matches shingle_set_np's np.unique
-        order = np.lexsort((flat, row))
-        f_s, r_s = flat[order], row[order]
-        keep = np.r_[True, (f_s[1:] != f_s[:-1]) | (r_s[1:] != r_s[:-1])]
-        f_u, r_u = f_s[keep].view(np.int64), r_s[keep]
-        bounds = np.searchsorted(r_u, np.arange(1, n, dtype=np.int64))
-        sets = np.split(f_u, bounds)
-    return sets, list(_oph_signatures_flat(flat, row, n, cfg))
-
-
-_SIG_SCHEMA = T.StructType(
-    [
-        T.StructField("shingles", T.ArrayType(T.LongType()), False),
-        T.StructField("minhash", T.ArrayType(T.LongType()), False),
-    ]
-)
-
-
 def band_keys_np(sigs_i64: np.ndarray, cfg: DedupConfig) -> np.ndarray:
     """(n, num_bands) int64 LSH bucket keys from an (n, num_perm) signature
     matrix — band b's key is a splitmix fold of the band's rows_per_band
@@ -260,8 +204,8 @@ def _pad_concat(
     data: np.ndarray, starts: np.ndarray, lens: np.ndarray, k: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """Contiguous uint8 buffer + per-row lengths with every row >= k bytes
-    (zero-padded), built with ONE vectorized gather — shared by the Arrow
-    signature kernels (their shingle pass needs a dense padded buffer)."""
+    (zero-padded), built with ONE vectorized gather (the shingle pass needs
+    a dense padded buffer)."""
     n = lens.size
     if not (lens < k).any() and (
         n == 1 or (starts[1:] == starts[:-1] + lens[:-1]).all()
@@ -274,15 +218,122 @@ def _pad_concat(
     tot = int(lens.sum())
     if tot:
         # rid[i] = source row of the i-th copied byte; ramp[i] = its offset
-        # within that row (cumsum-of-markers form)
-        rid = np.zeros(tot, dtype=np.int64)
-        nz = np.cumsum(lens[:-1])
-        rid[nz[nz < tot]] = 1
-        rid = np.cumsum(rid)
-        in_starts = np.concatenate(([0], nz))
+        # within that row (empty rows own no bytes)
+        rid = np.repeat(np.arange(n, dtype=np.int64), lens)
+        in_starts = np.concatenate(([0], np.cumsum(lens[:-1])))
         ramp = np.arange(tot, dtype=np.int64) - in_starts[rid]
         buf[ostarts[rid] + ramp] = data[starts[rid] + ramp]
     return buf, out_lens
+
+
+SIGNATURE_OUTPUTS = ("txt_norm", "shingles", "minhash", "bands")
+
+
+def _row_sets(
+    flat: np.ndarray, row: np.ndarray, n: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(hashes, row ids) with each row's uint64 hashes deduped and sorted,
+    rows in order.  np.lexsort's order in two passes: a quicksort of the
+    hashes, then a stable sort of their row ids in the narrowest dtype that
+    holds n (numpy radix-sorts uint8/uint16, i.e. any Arrow batch up to
+    65,536 rows): about a quarter of np.lexsort's time on 3M windows."""
+    order = np.argsort(flat)
+    order = order[np.argsort(row[order].astype(np.min_scalar_type(n)), kind="stable")]
+    f_s, r_s = flat[order], row[order]
+    keep = np.ones(f_s.size, dtype=bool)
+    keep[1:] = (f_s[1:] != f_s[:-1]) | (r_s[1:] != r_s[:-1])
+    return f_s[keep], r_s[keep]
+
+
+def _list_rows(values: np.ndarray, offsets: np.ndarray) -> pa.ListArray:
+    return pa.ListArray.from_arrays(
+        pa.array(offsets.astype(np.int32)), pa.array(values, type=pa.int64())
+    )
+
+
+def signature_batch(
+    text: pa.Array, cfg: DedupConfig, normalized: bool, emit: Iterable[str]
+) -> dict[str, pa.Array]:
+    """The one text kernel: a string Arrow array in, the `emit`ted subset of
+    SIGNATURE_OUTPUTS out, each an Arrow array of len(text) rows.
+
+      txt_norm  string: normalize_text'd text (nulls stay null)
+      shingles  list<long>: the row's deduped k-byte window hashes, sorted
+                as uint64 (== shingle_set_np)
+      minhash   list<long>: the num_perm OPH signature, bands interleaved
+      bands     list<long>: the num_bands LSH bucket keys (band_keys_np)
+
+    The UTF-8 bytes are read straight from the array's offsets and data
+    buffers (`string` or `large_string`, sliced or not); normalized=False
+    first rebuilds the array from normalize_series, and that rebuilt array
+    is `txt_norm`.  A null row has length 0 and hashes as "" does.  Past
+    the buffers the work is _pad_concat -> _shingle_flat_from_buffer ->
+    _oph_signatures_flat -> band_keys_np, all whole-batch numpy."""
+    emit = set(emit)
+    if not emit <= set(SIGNATURE_OUTPUTS):
+        raise ValueError(f"emit {sorted(emit)} is not a subset of {SIGNATURE_OUTPUTS}")
+    if not normalized:
+        text = pa.array(
+            normalize_series(text.to_pandas().astype(object)), type=pa.string(), from_pandas=True
+        )
+    out = {"txt_norm": text}
+    n = len(text)
+    if n == 0:
+        empty = _list_rows(np.empty(0, np.int64), np.zeros(1, np.int64))
+        return {c: out.get(c, empty) for c in emit}
+    k = cfg.shingle_k
+    _, obuf, dbuf = text.buffers()
+    odt = np.int64 if pa.types.is_large_string(text.type) else np.int32
+    off = np.frombuffer(obuf, odt)[text.offset : text.offset + n + 1].astype(np.int64)
+    data = np.frombuffer(dbuf, np.uint8) if dbuf is not None else np.empty(0, np.uint8)
+    lens = np.diff(off)
+    if text.null_count:
+        lens[~text.is_valid().to_numpy(zero_copy_only=False)] = 0
+    flat, row = _shingle_flat_from_buffer(*_pad_concat(data, off[:-1], lens, k), k)
+    if "shingles" in emit:
+        sets, set_rows = _row_sets(flat, row, n)
+        out["shingles"] = _list_rows(
+            sets.view(np.int64), np.searchsorted(set_rows, np.arange(n + 1))
+        )
+    if emit & {"minhash", "bands"}:
+        sigs = _oph_signatures_flat(flat, row, n, cfg)
+        if "minhash" in emit:
+            out["minhash"] = _list_rows(sigs.reshape(-1), np.arange(n + 1) * cfg.num_perm)
+        if "bands" in emit:
+            out["bands"] = _list_rows(
+                band_keys_np(sigs, cfg).reshape(-1), np.arange(n + 1) * cfg.num_bands
+            )
+    return {c: out[c] for c in emit}
+
+
+def _map_signatures(
+    df: DataFrame, text_col: str, cfg: DedupConfig, normalized: bool, emit: set[str],
+    out_text_col: str = "txt_norm",
+) -> DataFrame:
+    """signature_batch over every Arrow batch of `df` in one mapInArrow.
+    With "txt_norm" emitted, `text_col` is replaced in place by
+    `out_text_col`; the list outputs are appended in SIGNATURE_OUTPUTS
+    order."""
+    ti = df.columns.index(text_col)
+    fields = list(df.schema.fields)
+    if "txt_norm" in emit:
+        fields[ti] = T.StructField(out_text_col, T.StringType(), True)
+    lists = [c for c in SIGNATURE_OUTPUTS[1:] if c in emit]
+    schema = T.StructType(
+        fields + [T.StructField(c, T.ArrayType(T.LongType()), False) for c in lists]
+    )
+
+    def gen(batches):
+        for batch in batches:
+            out = signature_batch(batch.column(ti), cfg, normalized, emit)
+            cols = batch.columns
+            if "txt_norm" in emit:
+                cols[ti] = out["txt_norm"]
+            yield pa.RecordBatch.from_arrays(
+                cols + [out[c] for c in lists], names=schema.fieldNames()
+            )
+
+    return df.mapInArrow(gen, schema=schema)
 
 
 def normalize_signatures_bands(
@@ -295,147 +346,25 @@ def normalize_signatures_bands(
 
     Emits the input columns with `text_col` replaced by `out_text_col`
     (normalize_text'd, nulls preserved) plus `bands: array<long>` (the
-    num_bands LSH bucket keys, band_keys_np).  Everything between —
-    shingling and the OPH signature matrix — stays inside the kernel and
-    never crosses the JVM boundary.
-
-    Why this exists next to `with_signatures`: the pipeline's only consumer
-    of the signature array is banding (verification recomputes shingles
-    from candidate TEXTS), so emitting `minhash` costs num_perm*8 B/row of
-    Arrow transfer + JVM row conversion (~200 MB per 100k rows at P=256)
-    that the next operator immediately discards — and running normalize as
-    its own ArrowEvalPython stage pays a second full JVM<->Python round
-    trip of the caption column.  One mapInArrow does both jobs: text in,
-    (normalized text, band keys) out.  Signatures are bit-identical to
-    minhash_batch's; band keys to band_keys_np's."""
-    import pyarrow as pa
-
-    P = cfg.num_perm
-    k = cfg.shingle_k
-    B = cfg.num_bands
-    col_names = list(df.columns)
-    ti = col_names.index(text_col)
-    out_fields = [
-        T.StructField(out_text_col, T.StringType(), True)
-        if f.name == text_col else f
-        for f in df.schema.fields
-    ] + [T.StructField("bands", T.ArrayType(T.LongType()), False)]
-    out_schema_t = T.StructType(out_fields)
-    out_names = [out_text_col if c == text_col else c for c in col_names] + ["bands"]
-
-    def gen(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            texts = batch.column(ti).to_pandas()
-            norm = normalize_series(texts.astype(object))
-            vals = norm.to_numpy(dtype=object)
-            mask = pd.isna(vals)
-            bufs = [
-                b"" if m else v.encode("utf-8") for v, m in zip(vals, mask)
-            ]
-            lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=n)
-            data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-            # normalized-text output column: reuse the concat buffer via
-            # arithmetic offsets (no per-row copies) on the common all-
-            # non-null path; fall back to a builder when nulls exist
-            if mask.any():
-                txt_arr = pa.array(
-                    [None if m else v for v, m in zip(vals, mask)],
-                    type=pa.string(),
-                )
-            else:
-                off = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(lens, out=off[1:])
-                txt_arr = pa.StringArray.from_buffers(
-                    n,
-                    pa.py_buffer(off.astype(np.int32).tobytes()),
-                    pa.py_buffer(data.tobytes()),
-                )
-            starts = np.zeros(n, dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            pdata, plens = _pad_concat(data, starts, lens, k)
-            flat, row, _counts, _n = _shingle_flat_from_buffer(pdata, plens, k)
-            sigs = np.ascontiguousarray(_oph_signatures_flat(flat, row, n, cfg))
-            bk = band_keys_np(sigs.reshape(n, P), cfg).reshape(-1)
-            boff = pa.array((np.arange(n + 1, dtype=np.int64) * B).astype(np.int32))
-            bands = pa.ListArray.from_arrays(boff, pa.array(bk, type=pa.int64()))
-            out_cols = [
-                txt_arr if i == ti else batch.column(i)
-                for i in range(batch.num_columns)
-            ] + [bands]
-            yield pa.RecordBatch.from_arrays(out_cols, names=out_names)
-
-    return df.mapInArrow(gen, schema=out_schema_t)
-
-
-def _signatures_map_in_arrow(
-    df: DataFrame, text_col: str, cfg: DedupConfig, normalized: bool
-) -> DataFrame:
-    """minhash column via mapInArrow with zero-copy Arrow I/O
-    (with_signatures' keep_shingles=False path).
-
-    The pandas-UDF route pays two per-row conversion taxes this avoids: the
-    text column materializes as Python str objects on the way in, and the
-    P-long signature rows build a ListArray element-by-element on the way
-    out.  Here the shingle kernel reads the UTF-8 bytes straight out of the
-    Arrow string buffer (one vectorized gather builds the padded concat
-    buffer) and the signatures leave as ONE flat int64 buffer wrapped in a
-    ListArray with arithmetic offsets — no per-row Python objects in either
-    direction.  Signatures are bit-identical to minhash_batch's."""
-    import pyarrow as pa
-
-    P = cfg.num_perm
-    k = cfg.shingle_k
-    out_schema_t = T.StructType(
-        df.schema.fields + [T.StructField("minhash", T.ArrayType(T.LongType()), False)]
+    num_bands LSH bucket keys).  Shingles and the OPH signature matrix stay
+    inside signature_batch and never cross the JVM boundary: banding is the
+    pipeline's only consumer of the signatures (verification recomputes
+    shingles from candidate TEXTS), so emitting `minhash` would cost
+    num_perm*8 B/row of Arrow transfer (~200 MB per 100k rows at P=256)
+    that the next operator discards, and a separate normalize stage would
+    pay a second JVM<->Python round trip of the caption column."""
+    return _map_signatures(
+        df, text_col, cfg, normalized=False, emit={"txt_norm", "bands"},
+        out_text_col=out_text_col,
     )
-    col_names = list(df.columns)
-    col_idx = col_names.index(text_col)
-
-    def gen(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            col = batch.column(col_idx)
-            if normalized and pa.types.is_string(col.type) and col.null_count == 0:
-                # zero-copy: UTF-8 data + offsets straight from Arrow
-                acol = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-                off = np.frombuffer(acol.buffers()[1], dtype=np.int32)[
-                    acol.offset : acol.offset + n + 1
-                ].astype(np.int64)
-                data = np.frombuffer(acol.buffers()[2], dtype=np.uint8)
-                starts, lens = off[:-1], np.diff(off)
-            else:
-                # normalize (or null-fill) per row, then concat
-                texts = col.to_pandas()
-                if not normalized:
-                    texts = normalize_series(texts.astype(object))
-                bufs = [str(t).encode("utf-8") for t in texts.fillna("")]
-                lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=n)
-                data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-                starts = np.zeros(n, dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-            data, lens = _pad_concat(data, starts, lens, k)
-            flat, row, _counts, _n = _shingle_flat_from_buffer(data, lens, k)
-            sigs = np.ascontiguousarray(_oph_signatures_flat(flat, row, n, cfg)).reshape(-1)
-            offsets = pa.array((np.arange(n + 1, dtype=np.int64) * P).astype(np.int32))
-            minhash = pa.ListArray.from_arrays(offsets, pa.array(sigs, type=pa.int64()))
-            out_cols = [batch.column(i) for i in range(batch.num_columns)] + [minhash]
-            yield pa.RecordBatch.from_arrays(out_cols, names=col_names + ["minhash"])
-
-    return df.mapInArrow(gen, schema=out_schema_t)
 
 
 def with_signatures(
     df: DataFrame, text_col: str = "caption", cfg: DedupConfig = DEFAULT_CONFIG,
-    repartition: bool = True, keep_shingles: bool = True,
-    assume_normalized: bool = False,
+    keep_shingles: bool = True, assume_normalized: bool = False,
 ) -> DataFrame:
     """Add `minhash: array<long>` (and, when keep_shingles, the
-    `shingles: array<long>` set) columns.
+    `shingles: array<long>` set before it) columns.
 
     keep_shingles=False skips materializing the shingle sets (~1 KB/row of
     Arrow transfer + cache); the verification stage recomputes shingles for
@@ -443,24 +372,10 @@ def with_signatures(
 
     The Arrow kernel's parallelism equals the input partition count; a
     column-pruned scan of a few large files yields too few partitions to
-    keep every core busy, so by default the (narrow) input is rebalanced to
-    the cluster's parallelism first — a cheap shuffle of (id, text, phash)
-    that the banding shuffle downstream would pay anyway."""
-
-    @F.pandas_udf(_SIG_SCHEMA)
-    def sig_udf(batch_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for texts in batch_iter:
-            sets, sigs = minhash_batch(texts, cfg, normalized=assume_normalized)
-            yield pd.DataFrame({"shingles": sets, "minhash": sigs})
-
-    if repartition:
-        # partition count follows the configured shuffle partitions (a data-
-        # size property), not the executor count — see pipeline.py
-        df = df.repartition(int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
-    if not keep_shingles:
-        # zero-copy Arrow kernel (see _signatures_map_in_arrow)
-        return _signatures_map_in_arrow(df, text_col, cfg, normalized=assume_normalized)
-    out = df.withColumn("__sig", sig_udf(F.col(text_col)))
-    return out.withColumn("shingles", F.col("__sig.shingles")).withColumn(
-        "minhash", F.col("__sig.minhash")
-    ).drop("__sig")
+    keep every core busy, so the (narrow) input is rebalanced first — a
+    cheap shuffle that the banding shuffle downstream would pay anyway.
+    The partition count follows the configured shuffle partitions (a data-
+    size property), not the executor count — see pipeline.py."""
+    df = df.repartition(int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+    emit = {"shingles", "minhash"} if keep_shingles else {"minhash"}
+    return _map_signatures(df, text_col, cfg, normalized=assume_normalized, emit=emit)

@@ -1,110 +1,44 @@
 """Exact-Jaccard verification of candidate pairs (P7).
 
-Candidates are joined back to their shingle sets (two shuffle joins on the
-id — at scale these reuse the signature table's bucketing) and verified with
-a vectorized pandas UDF: |a ∩ b| / |a ∪ b| over sorted uint64 arrays.
+Candidates are joined back to their texts (two hash joins on the id) and
+verified by an Arrow UDF: both sides go through minhash.signature_batch for
+their shingle sets, and |a ∩ b| / |a ∪ b| falls out of one sort of the two
+sides' sets together.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from jsonschema_jl_spark.config import DedupConfig, DEFAULT_CONFIG
+from jsonschema_jl_spark.operators.minhash import _row_sets, signature_batch
 
 
-def _jaccard_from_flat(
-    fa: np.ndarray, ra: np.ndarray, fb: np.ndarray, rb: np.ndarray, n: int
-) -> np.ndarray:
-    """Vectorized per-pair Jaccard from flat (hash, pair_id) streams of the
-    two sides (may contain within-row duplicates).  ONE lexsort over the
-    concatenated tagged stream: each run of equal (pair, hash) is one
-    distinct union element, and a run containing both side tags is one
-    intersection element — so |A∪B| and |A∩B| both fall out of run
-    boundaries with no per-side dedup sorts.  The sort is the kernel's
-    entire cost (~W log W for W total windows); per-row numpy was
-    ~50-100us/pair and the 3-sort variant ~290us/pair on real captions."""
-    f = np.concatenate([fa, fb])
-    if f.size == 0:
-        return np.zeros(n, dtype=np.float64)
-    r = np.concatenate([ra, rb])
-    side = np.concatenate([
-        np.zeros(fa.size, dtype=bool), np.ones(fb.size, dtype=bool)
-    ])
-    o = np.lexsort((f, r))
-    fs, rs, ss = f[o], r[o], side[o]
-    starts = np.flatnonzero(np.r_[True, (fs[1:] != fs[:-1]) | (rs[1:] != rs[:-1])])
-    has_a = np.logical_or.reduceat(~ss, starts)
-    has_b = np.logical_or.reduceat(ss, starts)
-    run_rows = rs[starts]
-    union = np.bincount(run_rows, minlength=n).astype(np.float64)
-    inter = np.bincount(run_rows[has_a & has_b], minlength=n).astype(np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        j = np.where(union > 0, inter / np.where(union > 0, union, 1.0), 0.0)
-    return j
-
-
-@F.pandas_udf(T.DoubleType())
-def jaccard_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-    for a_col, b_col in it:
-        n = len(a_col)
-        a_list = [np.asarray(a, dtype=np.uint64) if a is not None else np.empty(0, np.uint64)
-                  for a in a_col]
-        b_list = [np.asarray(b, dtype=np.uint64) if b is not None else np.empty(0, np.uint64)
-                  for b in b_col]
-        fa = np.concatenate(a_list) if a_list else np.empty(0, np.uint64)
-        fb = np.concatenate(b_list) if b_list else np.empty(0, np.uint64)
-        ra = np.repeat(np.arange(n), [a.size for a in a_list])
-        rb = np.repeat(np.arange(n), [b.size for b in b_list])
-        j = _jaccard_from_flat(fa, ra, fb, rb, n)
-        # null/empty side -> 0.0 (legacy contract)
-        bad = np.fromiter(((a is None or len(a) == 0) for a in a_col), bool, n) | \
-              np.fromiter(((b is None or len(b) == 0) for b in b_col), bool, n)
-        j[bad] = 0.0
-        yield pd.Series(j)
-
-
-def verify_jaccard(
-    pairs: DataFrame,
-    signatures: DataFrame,
-    id_col: str = "image_id",
-    shingle_col: str = "shingles",
-    cfg: DedupConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """(src, dst, jaccard) for pairs with exact Jaccard >= cfg.jaccard_tau."""
-    s = signatures.select(F.col(id_col).alias("id"), F.col(shingle_col).alias("sh"))
-    left = s.select(F.col("id").alias("src"), F.col("sh").alias("sh_src"))
-    right = s.select(F.col("id").alias("dst"), F.col("sh").alias("sh_dst"))
-    joined = pairs.join(left, "src").join(right, "dst")
-    out = joined.withColumn("jaccard", jaccard_udf(F.col("sh_src"), F.col("sh_dst")))
-    return out.filter(F.col("jaccard") >= F.lit(cfg.jaccard_tau)).select(
-        "src", "dst", "jaccard"
-    )
+def _jaccard_sets(a: pa.ListArray, b: pa.ListArray) -> np.ndarray:
+    """Per-row Jaccard of two shingle-set columns (signature_batch's
+    `shingles`: every row deduped and non-empty).  |A ∪ B| is the row's
+    distinct count over both sides (one _row_sets pass) and
+    |A ∩ B| = |A| + |B| - |A ∪ B|, so the sort is the kernel's whole cost."""
+    n = len(a)
+    la, lb = np.diff(np.asarray(a.offsets)), np.diff(np.asarray(b.offsets))
+    rows = np.repeat(np.tile(np.arange(n, dtype=np.int64), 2), np.concatenate([la, lb]))
+    vals = np.concatenate([np.asarray(a.values), np.asarray(b.values)]).view(np.uint64)
+    union = np.bincount(_row_sets(vals, rows, n)[1], minlength=n)
+    return (la + lb - union) / union
 
 
 def _make_text_jaccard_udf(cfg: DedupConfig, normalized: bool = False):
-    from jsonschema_jl_spark.operators.minhash import _shingle_flat_batch
-
-    @F.pandas_udf(T.DoubleType())
-    def text_jaccard(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for a_col, b_col in it:
-            n = len(a_col)
-            if n == 0:  # _shingle_flat_batch assumes >=1 row (cum[-1])
-                yield pd.Series([], dtype="float64")
-                continue
-            # one flat shingle pass per side over the WHOLE batch (same
-            # kernel as minhash_batch; bit-identical hashes), then the
-            # shared sort-based per-pair intersection
-            fa, ra, _, _ = _shingle_flat_batch(a_col, cfg.shingle_k, normalized=normalized)
-            fb, rb, _, _ = _shingle_flat_batch(b_col, cfg.shingle_k, normalized=normalized)
-            j = _jaccard_from_flat(fa, ra, fb, rb, n)
-            bad = a_col.isna().to_numpy() | b_col.isna().to_numpy()
-            j[bad] = 0.0
-            yield pd.Series(j)
+    @F.arrow_udf(T.DoubleType())
+    def text_jaccard(a: pa.Array, b: pa.Array) -> pa.Array:
+        j = _jaccard_sets(*(
+            signature_batch(t, cfg, normalized, {"shingles"})["shingles"] for t in (a, b)
+        ))
+        j[~(a.is_valid().to_numpy(zero_copy_only=False)
+            & b.is_valid().to_numpy(zero_copy_only=False))] = 0.0
+        return pa.array(j, type=pa.float64())
 
     return text_jaccard
 
@@ -118,10 +52,11 @@ def verify_jaccard_text(
     assume_normalized: bool = False,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Like verify_jaccard, but joins the candidate pairs back to the raw
-    text and recomputes shingle sets inside the UDF — candidates are a tiny
-    fraction of rows, so shipping ~150-byte captions for them beats
-    materializing ~1 KB shingle arrays for EVERY row upstream.
+    """(src, dst, jaccard) for pairs with exact Jaccard >= cfg.jaccard_tau.
+    Joins the candidate pairs back to the text and recomputes shingle sets
+    inside the UDF — candidates are a tiny fraction of rows, so shipping
+    ~150-byte captions for them beats materializing ~1 KB shingle arrays
+    for EVERY row upstream.  A null text on either side scores 0.0.
 
     `num_partitions` sizes the hash-join exchanges to the DATA (pipeline
     derives it from the gated row count): both the pair relation and the

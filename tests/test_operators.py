@@ -248,12 +248,14 @@ def test_kernel_bands_pair_parity(spark, shape):
     band content, so the two formulations may differ only by 64-bit hash
     collisions (none at test scale).  Parametrized over banding shapes
     so the (n, B, r) reshape/fold stays aligned with the JVM slicing.
-    The signatures of both with_signatures kernels (minhash_batch and the
-    zero-copy Arrow one) are bit-identical, and so are the fused kernel's
-    band keys and band_keys_np over those signatures."""
+    Through Spark, the fused kernel's band keys equal band_keys_np over
+    with_signatures' minhash, and both equal signature_batch run locally
+    on the collected captions."""
     import dataclasses
 
-    from jsonschema_jl_spark.operators.minhash import band_keys_np
+    import pyarrow as pa
+
+    from jsonschema_jl_spark.operators.minhash import band_keys_np, signature_batch
 
     cfg = CFG if shape is None else dataclasses.replace(CFG, **shape)
     images = generate_images(spark, 400, cfg, with_bytes=False, with_malformed=False)
@@ -265,11 +267,14 @@ def test_kernel_bands_pair_parity(spark, shape):
     pk = {(r.src, r.dst) for r in candidate_pairs(b_kernel, cfg).collect()}
     pj = {(r.src, r.dst) for r in candidate_pairs(b_jvm, cfg).collect()}
     assert pk == pj and len(pk) > 0
-    batch = with_signatures(slim, cfg=cfg).select("image_id", F.col("minhash").alias("mh_batch"))
-    rows = sigs.join(batch, "image_id").select("minhash", "mh_batch", "bands").collect()
+    rows = sigs.select("caption", "minhash", "bands").collect()
     mh = np.array([r.minhash for r in rows], dtype=np.int64)
-    assert len(rows) == 400 and mh.tolist() == [r.mh_batch for r in rows]
+    assert len(rows) == 400
     assert band_keys_np(mh, cfg).tolist() == [r.bands for r in rows]
+    local = signature_batch(
+        pa.array([r.caption for r in rows]), cfg, normalized=False, emit={"minhash"}
+    )
+    assert local["minhash"].to_pylist() == mh.tolist()
     sigs.unpersist()
 
 

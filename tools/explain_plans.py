@@ -154,7 +154,7 @@ def main() -> None:
         "MinHash signatures (`with_signatures`, OPH kernel)",
         "One round-robin rebalance Exchange (restores parallelism after the\n"
         "column-pruned scan collapses partitions), then the OPH kernel as a\n"
-        "single ArrowEvalPython node — per-row cost is O(shingles log shingles)\n"
+        "single MapInArrow node — per-row cost is O(shingles log shingles)\n"
         "numpy, no shuffle of the signature arrays.",
         with_signatures(slim, text_col="txt_norm", cfg=CFG, keep_shingles=False,
                         assume_normalized=True),

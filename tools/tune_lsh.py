@@ -1,7 +1,7 @@
 """LSH banding-shape tuning experiment (round-4 ask #2).
 
-Measures, driver-side with the REAL kernels (minhash_batch + the band
-interleave), the raw banding recall and candidate precision of several
+Measures, driver-side with the REAL kernel (minhash.signature_batch, band
+interleave included), the raw banding recall and candidate precision of several
 (num_perm, bands, rows_per_band) shapes against the exact caption-Jaccard
 oracle on the deterministic datagen corpus.  Raw-band recall is the
 conservative bound: the pipeline's delivered recall additionally benefits
@@ -19,11 +19,12 @@ import time
 from itertools import combinations
 
 import numpy as np
+import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from jsonschema_jl_spark.config import DedupConfig
-from jsonschema_jl_spark.operators.minhash import minhash_batch, shingle_set_np
+from jsonschema_jl_spark.operators.minhash import shingle_set_np, signature_batch
 from jsonschema_jl_spark.datagen.images import _caption_for
 
 
@@ -33,9 +34,6 @@ def main() -> None:
     # malformed rows are appended PAST n_rows by datagen (indices >= n), so
     # range(n) is exactly the gate-valid corpus
     caps = [_caption_for(i) for i in range(n)]
-    import pandas as pd
-
-    caps_s = pd.Series(caps)
     m = len(caps)
     print(f"rows: {m} (of {n})")
 
@@ -64,8 +62,9 @@ def main() -> None:
             continue
         cfg = dataclasses.replace(cfg0, num_perm=P, num_bands=b, rows_per_band=r)
         t0 = time.time()
-        _, sigs = minhash_batch(caps_s, cfg, need_sets=False)
-        S = np.stack(sigs)  # (m, P) band-interleaved: band k = cols [k*r, (k+1)*r)
+        mh = signature_batch(pa.array(caps), cfg, normalized=False, emit={"minhash"})["minhash"]
+        # (m, P) band-interleaved: band k = cols [k*r, (k+1)*r)
+        S = np.asarray(mh.values).reshape(m, P)
         cands = set()
         for k in range(b):
             sl = S[:, k * r : (k + 1) * r]
