@@ -16,12 +16,13 @@ typed gate breakdown via a CASE mirror of keyword order.
 
 from __future__ import annotations
 
+import dataclasses
 from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from jsonschema_jl_spark.config import DedupConfig
 from jsonschema_jl_spark.gate.gate import apply_gate, gate_filter
@@ -34,6 +35,7 @@ from jsonschema_jl_spark.operators.similarity import (
 )
 from jsonschema_jl_spark.operators.minhash import with_signatures
 from jsonschema_jl_spark.operators.components import connected_components
+from jsonschema_jl_spark.operators.group_pairs import NO_CAP, block_emitter, pair_groups
 from jsonschema_jl_spark.operators.pipeline import dedup_pipeline
 from jsonschema_jl_spark.datagen.from_documents import images_from_documents
 
@@ -518,22 +520,27 @@ def q_doc_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_doc_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # every pair inside a (lang, length-band) group within 28 bits: the
+    # group-pairs kernel uncapped, popcount-verified in the batch that
+    # builds the pair.  A null id, key or hash never matches in the oracle's
+    # self-join, so those rows are dropped before the exchange.
     d = _docs(spark, sf_dir)
     h = d.select(
-        "doc_id",
+        F.col("doc_id").alias("id"),
         "lang",
         (F.col("n_chars") / 50).cast("long").alias("lb"),
         F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 15), 16, 10)
         .cast("long")
         .alias("ph"),
-    )
-    a, b = h.alias("a"), h.alias("b")
-    return (
-        a.join(b, ["lang", "lb"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .withColumn("hamming", F.bit_count(F.col("a.ph").bitwiseXOR(F.col("b.ph"))))
-        .filter(F.col("hamming") <= 28)
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"), "hamming")
+    ).dropna(subset=["id", "lang", "lb", "ph"])
+    id_type = h.schema["id"].dataType
+    return pair_groups(
+        h, ["lang", "lb"], block_emitter(28),
+        T.StructType([
+            T.StructField("src", id_type), T.StructField("dst", id_type),
+            T.StructField("hamming", T.IntegerType()),
+        ]),
+        cap=NO_CAP,
     )
 
 
@@ -573,17 +580,19 @@ _HOT_CAPTION = (
 
 
 def q_doc_skew_salted_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6 salt-grid skew path at contract level: every 5th doc carries ONE
+    """P6 exact skew path at contract level: every 5th doc carries ONE
     identical caption (100+ copies at sf>=0.01 — far above bucket_cap=64,
     so plain capping would DROP the whole hot bucket), the rest carry
     md5-derived texts that are pairwise near-orthogonal (J ~ 0.01).  The
-    pipeline is signatures -> banding -> salted_candidate_pairs (shards the
-    hot bucket across a salt grid instead of capping) -> exact Jaccard
-    verify.  The oracle is the closed-form truth: exactly the hot-doc
-    pairs.  Passing proves (a) the salt grid loses NO hot pairs where the
-    capped path loses all of them, and (b) the verify kills every spurious
-    band collision among the md5 texts."""
-    from jsonschema_jl_spark.operators.lsh import band_buckets, salted_candidate_pairs
+    pipeline is signatures -> banding -> candidate_pairs with NO_CAP
+    (uncapped streamed pairing: the hot bucket pairs in its task, its pairs
+    leaving in batches of at most PAIR_BUDGET) -> exact Jaccard verify.
+    The flagship instead caps hot buckets and counts the dropped mass in
+    accumulators.  The oracle is the closed-form truth: exactly the
+    hot-doc pairs.  Passing proves (a) the uncapped path loses NO hot pairs
+    where the capped path loses all of them, and (b) the verify kills every
+    spurious band collision among the md5 texts."""
+    from jsonschema_jl_spark.operators.lsh import band_buckets, candidate_pairs
     from jsonschema_jl_spark.operators.verify import verify_jaccard_text
 
     d = _docs(spark, sf_dir).select("doc_id")
@@ -605,7 +614,7 @@ def q_doc_skew_salted_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, text_col="txt", cfg=CFG, keep_shingles=False, assume_normalized=True
     )
     buckets = band_buckets(sigs, id_col="doc_id", sig_col="minhash", cfg=CFG)
-    pairs = salted_candidate_pairs(buckets, cfg=CFG, num_salts=4)
+    pairs = candidate_pairs(buckets, dataclasses.replace(CFG, bucket_cap=NO_CAP))
     verified = verify_jaccard_text(
         pairs, corpus, id_col="doc_id", text_col="txt", cfg=CFG, assume_normalized=True
     )

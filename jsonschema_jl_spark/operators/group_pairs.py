@@ -1,17 +1,18 @@
 """Group pairing kernel: pair the rows that share a group key in one Arrow pass.
 
-The three candidate generators (LSH buckets, phash pigeonhole blocks,
-containment anchors) all have the same shape: rows carry a group key, and
-every pair of rows inside a group (or every probe x gram pair, for anchors)
-is a candidate, unless the group is above a cap.  Each detector exchanges
-its group rows ONCE (`repartition(par, *keys)`, so every group lives wholly
-in one partition) and pairs them where they land with `pair_runs` inside a
-`mapInArrow`:
+Every grouped candidate generator (LSH buckets, phash pigeonhole blocks,
+containment anchors, n-gram groups, hyperplane buckets) has the same
+shape: rows carry a group key, and every pair of rows inside a group (or
+every probe x gram pair, for anchors) is a candidate, unless the group is
+above a cap.  Each generator exchanges its group rows ONCE
+(`repartition(par, *keys)`, so every group lives wholly in one partition)
+and pairs them where they land with `pair_runs` inside a `mapInArrow`:
 
   * numpy sorts the partition's rows by key and cuts the key runs;
   * runs of one row are dropped, and runs above the cap are dropped with
     their count and rows added to the caller's accumulators (the capped
-    mass the old size-count aggregate reported);
+    mass the old size-count aggregate reported); with `NO_CAP` every run
+    pairs — the exact path for skewed inputs;
   * member pairs leave in batches of at most `budget` pairs — a run's pairs
     are never built as one array, whatever the cap.
 
@@ -35,6 +36,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 PAIR_BUDGET = 1 << 20  # pairs per emitted batch (two int64 index arrays: 16 MB)
+NO_CAP = (1 << 63) - 1  # a cap no group reaches: the exact, uncapped pair set
 
 _M1 = np.uint64(0x5555555555555555)
 _M2 = np.uint64(0x3333333333333333)

@@ -11,14 +11,17 @@ Spark-first design:
     Arrow kernel (operators/group_pairs.py): sort by bucket, cut the runs,
     emit every pair inside a run in bounded batches.  Nothing is persisted,
     counted by a separate aggregate or collected into lists;
-  * skew handling (north rule, BASELINE.json:6): buckets above
-    cfg.bucket_cap are excluded from pairing by the kernel and reported as
-    metrics (count + dropped row mass, accumulated as the kernel runs).
-    Stop-shingle buckets at web scale otherwise explode quadratically — a
-    size-s bucket yields s(s-1)/2 pairs, so a single 1M-row bucket would
-    emit 5*10^11 pairs.  Capped mass is recall-accounted by the oracle
-    harness at identical config, and the phash/containment passes still
-    cover capped rows.
+  * skew handling (north rule, BASELINE.json:6): on the flagship, buckets
+    above cfg.bucket_cap are excluded from pairing by the kernel and
+    reported as metrics (count + dropped row mass, accumulated as the
+    kernel runs).  Stop-shingle buckets at web scale otherwise explode
+    quadratically — a size-s bucket yields s(s-1)/2 pairs, so a single
+    1M-row bucket would emit 5*10^11 pairs.  Capped mass is
+    recall-accounted by the oracle harness at identical config, and the
+    phash/containment passes still cover capped rows.  The exact path is
+    uncapped streamed pairing: candidate_pairs with a cap above any bucket
+    (group_pairs.NO_CAP) emits every pair, a hot bucket's pairs leaving its
+    task in batches of at most group_pairs.PAIR_BUDGET.
 """
 
 from __future__ import annotations
@@ -48,7 +51,7 @@ def band_buckets(
         measured 147 s CPU per 108k rows, ~40x the kernel fold.
       * sig_col only: JVM-side xxhash64 over signature slices — no Python,
         used by callers holding bare signatures (e.g. resumed checkpoints
-        written before banding, ad-hoc salted-pair queries)."""
+        written before banding, the uncapped skew query)."""
     if bands_col is not None:
         return df.select(
             F.col(id_col).alias("id"),
@@ -114,46 +117,3 @@ def candidate_pairs(
     ).dropDuplicates(["src", "dst"])
     return (pairs, skew) if with_metrics else pairs
 
-
-def salted_candidate_pairs(
-    buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG, num_salts: int = 8
-) -> DataFrame:
-    """Alternative skew path (P6): instead of capping, shard each oversized
-    bucket into `num_salts` salt groups and pair across the salt grid
-    (si <= sj), so no single task materializes the whole quadratic bucket.
-    Emits ALL pairs (no recall loss) at ~2x shuffle volume for hot buckets;
-    use when dropped mass from capping is unacceptable."""
-    sizes = buckets.groupBy("bucket").agg(F.count("*").alias("n"))
-    hot = sizes.filter(F.col("n") > cfg.bucket_cap).drop("n")
-    cold_pairs = candidate_pairs(buckets.join(hot, ["bucket"], "left_anti"), cfg)
-    hot_rows = buckets.join(hot, ["bucket"]).withColumn(
-        "salt", F.pmod(F.xxhash64("id"), F.lit(num_salts))
-    )
-    grid = (
-        hot_rows.sparkSession.range(num_salts).select(F.col("id").cast("int").alias("si"))
-        .crossJoin(
-            hot_rows.sparkSession.range(num_salts).select(F.col("id").cast("int").alias("sj"))
-        )
-        .filter(F.col("si") <= F.col("sj"))
-    )
-    left = hot_rows.join(F.broadcast(grid), hot_rows.salt == grid.si)
-    right = hot_rows.select(
-        F.col("bucket").alias("bucket_r"),
-        F.col("id").alias("id_r"), F.col("salt").alias("salt_r"),
-    )
-    hot_pairs = (
-        left.join(
-            right,
-            (F.col("bucket") == F.col("bucket_r")) & (F.col("sj") == F.col("salt_r")),
-        )
-        # canonicalize with least/greatest, NOT `id < id_r`: the grid visits
-        # each unordered salt pair once (si <= sj), so a pair whose smaller
-        # id carries the LARGER salt only ever appears as (id > id_r) — an
-        # id-order filter would silently drop ~half the cross-salt pairs
-        # (caught by the doc_skew_salted_pairs contract oracle)
-        .filter(F.col("id") != F.col("id_r"))
-        .select(
-            F.least("id", "id_r").alias("src"), F.greatest("id", "id_r").alias("dst")
-        )
-    )
-    return cold_pairs.unionByName(hot_pairs).dropDuplicates(["src", "dst"])

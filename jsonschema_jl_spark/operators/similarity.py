@@ -7,12 +7,14 @@
     (SimHash) bucketing; only pairs sharing a hyperplane-sign bucket are
     scored.  At 10^12 rows the cross join is infeasible; signs shrink
     candidates to O(n * bucket_size) with tunable recall via
-    (n_planes, n_tables).
+    (n_planes, n_tables).  Bucket members pair in the group-pairs kernel.
   * ivf_topk          — scale path for query serving: spherical-k-means
     coarse cells (IVF); each query scans nprobe cells, O(nprobe*n/cells)
     per query, bucket-prunable by cell at scale.
   * exact_dedup       — hash-groupBy exact text dedup (documents table)
-  * ngram_jaccard_pairs — n-gram token Jaccard near-dup candidates
+  * ngram_token_pairs — pairs sharing a token n-gram, with their shared-gram
+    count (near-dup candidates for a Jaccard verify); gram members pair in
+    the group-pairs kernel.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
+from jsonschema_jl_spark.operators.group_pairs import bucket_emitter, pair_groups
 from jsonschema_jl_spark.operators.textops import normalized_text, fingerprint
 
 
@@ -150,7 +153,6 @@ def lsh_ann_pairs(
     seed: int = 4242,
     min_cos: float = 0.0,
     bucket_cap: int = 2000,
-    cache_registry: list | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Candidate (src, dst, cos) pairs sharing a hyperplane-sign bucket in
@@ -167,29 +169,24 @@ def lsh_ann_pairs(
     (_NATIVE_SIGNS_MAX).
 
     Embeddings are the WIDEST rows in the corpus (2-4 KB at dim 512+), so
-    no vector ever crosses the candidate-generation shuffles: the exploded
+    no vector ever crosses the candidate-generation shuffle: the exploded
     bucket rows carry only (id, table, bucket) — the key computation reads
-    `vec` map-side and projects it off before the exchange — candidate id
-    pairs come from a one-exchange hash-agg + SHUFFLE_HASH survivor join +
-    collect_list nested-transform expansion, and the exact-cosine verify re-fetches vectors
-    for the (tiny) candidate set by two narrow id joins (the
-    verify.verify_jaccard_text pattern).  With a `cache_registry` the
-    bucket rows are repartitioned on the bucket key and persisted so the
-    key computation — in the kernel path a pandas UDF over the whole
-    corpus — runs ONCE and the size agg + collect_list branches reuse one
-    exchange; caller owns the unpersist.  With no registry the persist is
-    skipped (no leaked caches in long-lived sessions) and the plan falls
-    back to recomputation per branch.
+    `vec` map-side and projects it off before the exchange — and cross ONE
+    exchange on (table, bucket) into the group-pairs kernel
+    (operators/group_pairs.py), which drops buckets above `bucket_cap` and
+    emits member pairs in bounded batches.  The exact-cosine verify
+    re-fetches vectors for the (tiny) candidate set by two narrow id joins
+    (the verify.verify_jaccard_text pattern).
 
     `num_partitions` sizes every exchange of this op to the DATA (derive it
     from the corpus row count, ~50k rows/partition — the same floor the
     pipeline threads through candidate_pairs/phash_pairs/containment_pairs
-    after the 10x stress draw): the bucket rows, the survivor join, and the
-    vector-fetch joins all grow with the corpus, so at a fixed session
-    partition count their per-task hash builds grow without bound."""
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    par = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    after the 10x stress draw): the bucket rows and the vector-fetch joins
+    all grow with the corpus, so at a fixed session partition count their
+    per-task memory grows without bound."""
+    # a null id never pairs (and the pairing kernel's id arrays take none)
+    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).filter(
+        F.col("id").isNotNull()
     )
     if n_planes * dim <= _NATIVE_SIGNS_MAX:
         keys = F.array(*[
@@ -201,40 +198,13 @@ def lsh_ann_pairs(
             _hyperplanes(dim, n_planes, t, seed) for t in range(n_tables)
         ])
         keys = signs_keys_udf(planes)(F.col("vec"))
-    exploded = base.select(
-        "id", F.posexplode(keys).alias("table", "bucket")
-    )
-    if cache_registry is not None or num_partitions is not None:
-        exploded = exploded.repartition(par, "table", "bucket")
-    if cache_registry is not None:
-        exploded = exploded.persist()
-        cache_registry.append(exploded)
-    sizes = exploded.groupBy("table", "bucket").agg(F.count("*").alias("n"))
-    ok = sizes.filter((F.col("n") > 1) & (F.col("n") <= bucket_cap)).drop("n")
-    member = exploded.join(ok.hint("SHUFFLE_HASH"), ["table", "bucket"])
-    grouped = member.groupBy("table", "bucket").agg(
-        F.collect_list("id").alias("ids")
-    )
-    # per-member pair expansion: posexplode the membership list and emit one
-    # O(cap) slice per member, instead of flattening all C(n,2) pair structs
-    # into ONE array value — at bucket_cap=2000 the single-array shape
-    # builds up to ~2M two-long structs (~tens of MB) in one row, the exact
-    # per-task memory blow-up class the stress work eliminates.  The rows
-    # stream through the Generates inside one codegen stage, so the full
-    # C(n,2) set never materializes at once.
-    pairs = (
-        grouped.select(F.col("ids"), F.posexplode("ids").alias("i", "x"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(slice(ids, i + 2, size(ids)), y ->"
-                    " struct(least(x, y) AS src, greatest(x, y) AS dst))"
-                )
-            ).alias("p")
-        )
-        .select("p.src", "p.dst")
-        .dropDuplicates(["src", "dst"])
-    )
+    exploded = base.select("id", F.posexplode(keys).alias("table", "bucket"))
+    id_type = base.schema["id"].dataType
+    pairs = pair_groups(
+        exploded, ["table", "bucket"], bucket_emitter,
+        T.StructType([T.StructField("src", id_type), T.StructField("dst", id_type)]),
+        cap=bucket_cap, num_partitions=num_partitions,
+    ).dropDuplicates(["src", "dst"])
     # narrow vector re-fetch for the exact-cosine verify: only candidate
     # pairs (a tiny fraction of rows after banding + caps) pull vectors,
     # and the corpus-side shuffles carry (id, vec) exactly once per side.
@@ -247,9 +217,9 @@ def lsh_ann_pairs(
     left = base.select(F.col("id").alias("src"), F.col("vec").alias("vec_src"))
     right = base.select(F.col("id").alias("dst"), F.col("vec").alias("vec_dst"))
     if num_partitions is not None:
-        pairs = pairs.repartition(par, "src")
-        left = left.repartition(par, "src")
-        right = right.repartition(par, "dst")
+        pairs = pairs.repartition(num_partitions, "src")
+        left = left.repartition(num_partitions, "src")
+        right = right.repartition(num_partitions, "dst")
     joined = pairs.join(left.hint("SHUFFLE_HASH"), "src").join(
         right.hint("SHUFFLE_HASH"), "dst"
     )
@@ -378,7 +348,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 def ngram_token_pairs(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3,
     anchor_cap: int = 200,
-    cache_registry: list | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Near-dup candidates: pairs sharing at least one token n-gram.
@@ -389,20 +358,18 @@ def ngram_token_pairs(
     one-element array), which Catalyst cannot collapse into downstream
     projections — the earlier formulation inlined the split expression into
     both size() and slice() and leaned on codegen CSE across a lambda
-    boundary to dedup it.  Pair generation is the one-exchange
-    collect_list expansion instead of the two-sided membership self-join; the shared-gram count falls out of a
-    groupBy over the expanded pairs.  With a cache_registry the gram rows
-    are repartitioned on the gram key and persisted so the anchor-size
-    count and the collect_list share one exchange; the caller unpersists.
+    boundary to dedup it.  The (id, gram) rows cross ONE exchange on the
+    gram into the group-pairs kernel (operators/group_pairs.py), which
+    drops grams shared by more than `anchor_cap` documents and emits each
+    gram's member pairs in bounded batches; the shared-gram count falls out
+    of a groupBy over those pairs.
 
-    `num_partitions` sizes the gram-row exchange (and everything that
-    reuses its partitioning: size agg, survivor SHUFFLE_HASH join,
-    collect_list) to the DATA — derive it from the corpus row count
-    (~50k rows/partition): the gram relation grows linearly with the
-    corpus, and at a fixed session partition count its per-task hash-join
-    builds grow without bound (the failure class the 10x stress draw
-    proved against containment's candidate join)."""
-    toks_df = df.select(
+    `num_partitions` sizes the gram-row exchange to the DATA — derive it
+    from the corpus row count (~50k rows/partition): the gram relation
+    grows linearly with the corpus, so at a fixed session partition count
+    the rows one kernel task holds grow without bound."""
+    # a null id never pairs (and the pairing kernel's id arrays take none)
+    toks_df = df.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         # Generate barrier: one split per row, referenced twice downstream
         F.explode(F.array(F.split(normalized_text(F.col(text_col)), " "))).alias("toks"),
@@ -418,29 +385,13 @@ def ngram_token_pairs(
             )
         ).alias("g"),
     )
-    par = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    if cache_registry is not None or num_partitions is not None:
-        grams = grams.repartition(par, "g")
-    if cache_registry is not None:
-        grams = grams.persist()
-        cache_registry.append(grams)
-    sizes = grams.groupBy("g").agg(F.count("*").alias("cnt"))
-    ok = sizes.filter((F.col("cnt") > 1) & (F.col("cnt") <= anchor_cap)).drop("cnt")
-    grouped = grams.join(ok.hint("SHUFFLE_HASH"), "g").groupBy("g").agg(
-        F.collect_list("id").alias("ids")
-    )
+    id_type = grams.schema["id"].dataType
     return (
-        grouped.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) ->"
-                    " transform(slice(ids, i + 2, size(ids)), y ->"
-                    " struct(least(x, y) AS src, greatest(x, y) AS dst))))"
-                )
-            ).alias("p")
+        pair_groups(
+            grams, ["g"], bucket_emitter,
+            T.StructType([T.StructField("src", id_type), T.StructField("dst", id_type)]),
+            cap=anchor_cap, num_partitions=num_partitions,
         )
-        .groupBy(F.col("p.src").alias("src"), F.col("p.dst").alias("dst"))
+        .groupBy("src", "dst")
         .agg(F.count("*").alias("shared_ngrams"))
     )

@@ -11,6 +11,7 @@ import importlib.util
 import os
 
 import duckdb
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -74,3 +75,48 @@ def test_contract_query_matches_oracle(spark, entry_mod, oracle_con, name):
     b = odf[cols].sort_values(cols).reset_index(drop=True)
     assert len(a) == len(b), f"{name}: row counts differ ({len(a)} vs {len(b)})"
     pd.testing.assert_frame_equal(a, b, check_dtype=False, atol=1e-6)
+
+
+def test_doc_hamming_pairs_null_rows(spark, entry_mod, tmp_path):
+    """Rows with a null id, lang, length band or hash never pair — as in
+    the oracle's self-join — and never reach the pairing kernel, whose
+    sort and XOR cannot take a null (a TypeError there fails the job)."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(3)
+    rows = [
+        (i, " ".join(f"w{v}" for v in rng.integers(0, 50, size=6)),
+            ["en", "de"][i % 2], "web", int(rng.integers(0, 120)))
+        for i in range(40)
+    ]
+    rows += [
+        (100, "null lang", None, "web", 10),
+        (101, "null length", "en", "web", None),
+        (102, None, "en", "web", 10),
+        (None, "null id", "en", "web", 10),
+    ]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+
+    got = entry_mod.q_doc_hamming_pairs(spark, str(tmp_path)).collect()
+
+    # reference: the inline self-join formulation
+    h = spark.read.parquet(str(tmp_path / "documents.parquet")).select(
+        "doc_id", "lang",
+        (F.col("n_chars") / 50).cast("long").alias("lb"),
+        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 15), 16, 10)
+        .cast("long").alias("ph"),
+    )
+    a, b = h.alias("a"), h.alias("b")
+    want = (
+        a.join(b, ["lang", "lb"])
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .withColumn("hamming", F.bit_count(F.col("a.ph").bitwiseXOR(F.col("b.ph"))))
+        .filter(F.col("hamming") <= 28)
+        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"), "hamming")
+        .collect()
+    )
+    as_set = lambda rs: {(r.src, r.dst, r.hamming) for r in rs}  # noqa: E731
+    assert len(got) == len(as_set(got))
+    assert as_set(got) == as_set(want) and len(want) > 0

@@ -1,5 +1,5 @@
 """Unit tests: PNG codec + PSNR invariant (P14), image features, textops,
-similarity search, LSH salting path, suffix-array cross-check."""
+similarity search, LSH skew path, suffix-array cross-check."""
 
 from __future__ import annotations
 
@@ -20,7 +20,7 @@ from jsonschema_jl_spark.operators.multimodal import (
     with_sampled_frames,
 )
 from jsonschema_jl_spark.operators.similarity import cosine_topk, lsh_ann_pairs
-from jsonschema_jl_spark.operators.lsh import band_buckets, candidate_pairs, salted_candidate_pairs
+from jsonschema_jl_spark.operators.lsh import band_buckets, candidate_pairs
 from jsonschema_jl_spark.operators.minhash import normalize_signatures_bands, normalize_udf, with_signatures
 from jsonschema_jl_spark.operators.substring import containment_pairs, suffix_array_containment
 
@@ -212,28 +212,46 @@ def test_ivf_topk_recall(spark):
 
 
 # ---------------------------------------------------------------------------
-# LSH salting path + suffix-array cross-check
+# LSH skew path + suffix-array cross-check
 # ---------------------------------------------------------------------------
 
-def test_salted_pairs_equal_capped_union(spark):
+def test_candidate_pairs_planted_hot_bucket(spark):
+    """One 2,000-member bucket (1,999,000 pairs, more than PAIR_BUDGET) plus
+    cold two-member buckets.  Uncapped, every pair comes out, the hot
+    bucket's in at least two batches of at most PAIR_BUDGET; capped at 64,
+    the hot bucket is dropped and its rows are counted."""
     import dataclasses
 
-    images = generate_images(spark, 400, CFG, with_bytes=False, with_malformed=False)
-    sigs = with_signatures(images.select("image_id", "caption", "phash"), cfg=CFG)
-    buckets = band_buckets(sigs, cfg=CFG).persist()
-    plain = {(r.src, r.dst) for r in candidate_pairs(buckets, CFG).collect()}
-    salted = {(r.src, r.dst) for r in salted_candidate_pairs(buckets, CFG, num_salts=4).collect()}
-    # salting must find at least everything capping finds (it drops nothing)
-    assert plain <= salted
-    # ...and must equal the EXACT uncapped pair set: an uncappable config
-    # (cap > any bucket) routes everything down the plain path, giving the
-    # ground truth.  A subset check alone cannot catch salt-grid pair loss
-    # (the id<id_r regression dropped ~half the cross-salt hot pairs while
-    # still passing `plain <= salted`).
-    uncapped_cfg = dataclasses.replace(CFG, bucket_cap=1_000_000)
-    exact = {(r.src, r.dst) for r in candidate_pairs(buckets, uncapped_cfg).collect()}
-    assert salted == exact
-    buckets.unpersist()
+    import pyarrow as pa
+
+    from jsonschema_jl_spark.operators.group_pairs import (
+        NO_CAP, PAIR_BUDGET, bucket_emitter, pair_runs,
+    )
+
+    hot, cold = 2000, 600
+    rows = spark.range(hot + cold).select(
+        "id",
+        F.when(F.col("id") < hot, F.lit(-1)).otherwise(F.col("id") / 2)
+        .cast("long").alias("bucket"),
+    )
+    hot_pairs, cold_pairs = hot * (hot - 1) // 2, cold // 2
+    assert hot_pairs > PAIR_BUDGET
+
+    uncapped = candidate_pairs(rows, dataclasses.replace(CFG, bucket_cap=NO_CAP))
+    assert uncapped.count() == hot_pairs + cold_pairs
+
+    pairs, skew = candidate_pairs(
+        rows, dataclasses.replace(CFG, bucket_cap=64), with_metrics=True
+    )
+    assert pairs.count() == cold_pairs
+    assert (skew.capped_buckets, skew.capped_rows) == (1, hot)
+
+    # the same rows through the kernel alone: the hot bucket's pairs leave
+    # in budget-sized batches, never as one quadratic array
+    batch = pa.RecordBatch.from_pandas(rows.toPandas(), preserve_index=False)
+    sizes = [b.num_rows for b in pair_runs([batch], ["bucket"], bucket_emitter, cap=NO_CAP)]
+    assert sum(sizes) == hot_pairs + cold_pairs
+    assert len(sizes) >= 2 and max(sizes) <= PAIR_BUDGET
 
 
 @pytest.mark.parametrize(
@@ -633,10 +651,10 @@ def test_signs_kernel_null_and_ragged_embeddings(spark):
 
 
 def test_lsh_ann_pairs_matches_self_join_shape(spark):
-    """Pair-set parity of the one-exchange collect_list expansion against
-    the classic bucket SELF-JOIN shape it replaced (round-5 restructure:
-    vectors no longer cross the candidate-generation shuffles — ids pair
-    first, vectors re-fetch narrowly for the cosine verify)."""
+    """Pair-set parity of the group-pairs kernel against the classic bucket
+    SELF-JOIN shape (vectors no longer cross the candidate-generation
+    shuffle — ids pair first, vectors re-fetch narrowly for the cosine
+    verify)."""
     import jsonschema_jl_spark.operators.similarity as sim
 
     rng = np.random.default_rng(47)
@@ -685,63 +703,49 @@ def test_lsh_ann_pairs_matches_self_join_shape(spark):
     assert got == want and len(got) > 0
 
 
+def test_pair_generators_skip_null_ids(spark):
+    """A row with a null id pairs with nothing: ngram_token_pairs and
+    lsh_ann_pairs return what they return without it."""
+    from jsonschema_jl_spark.operators.similarity import ngram_token_pairs
+
+    docs = [(1, "a b c d"), (2, "a b c e"), (3, "x y z")]
+    with_null = spark.createDataFrame(docs + [(None, "a b c d")], "doc_id long, text string")
+    clean = spark.createDataFrame(docs, "doc_id long, text string")
+    ngram = lambda df: set(ngram_token_pairs(df).collect())  # noqa: E731
+    assert ngram(with_null) == ngram(clean) == {(1, 2, 1)}
+
+    vecs = [(1, [1.0, 0.0]), (2, [1.0, 0.01]), (3, [-1.0, 0.5])]
+    schema = "vec_id long, embedding array<double>"
+    ann = lambda df: set(lsh_ann_pairs(df, dim=2, n_planes=2, n_tables=1, min_cos=0.9).collect())  # noqa: E731
+    assert ann(spark.createDataFrame(vecs + [(None, [1.0, 0.0])], schema)) == ann(
+        spark.createDataFrame(vecs, schema)
+    ) == {(1, 2, 0.99995)}
+
+
 def test_lsh_ann_pairs_no_vectors_in_candidate_shuffles(spark):
-    """The exploded bucket relation must not carry the embedding column —
-    the whole point of the round-5 restructure.  Assert structurally: the
-    optimized plan's Exchange nodes upstream of the pair expansion never
-    ship `vec`; only the two narrow verify joins touch vectors."""
+    """The exploded bucket relation must not carry the embedding column.
+    Assert structurally on the physical plan: no Exchange below the
+    pairing MapInArrow ships `vec`; only the verify joins above it touch
+    vectors."""
     rng = np.random.default_rng(53)
     rows = [(i, [float(x) for x in rng.standard_normal(16)]) for i in range(20)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    reg: list = []
-    out = lsh_ann_pairs(df, dim=16, n_planes=6, n_tables=2,
-                        cache_registry=reg)
-    try:
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        # the persisted/repartitioned bucket relation is (id, table, bucket):
-        # its output attribute list must not mention the vector column
-        seg = plan.split("InMemoryRelation ")[1]
-        cached_cols = seg[: seg.index("]")]
-        assert "vec" not in cached_cols, cached_cols
-        # and the collect_list aggregate pairs ids only
-        agg = next(
-            line for line in plan.splitlines() if "collect_list" in line
-        )
-        assert "vec" not in agg, agg
-    finally:
-        for c in reg:
-            c.unpersist()
+    out = lsh_ann_pairs(df, dim=16, n_planes=6, n_tables=2)
+    # with AQE on, the executed plan wraps the full physical plan (all
+    # exchanges planned) as its initial plan until it runs
+    plan = out._jdf.queryExecution().executedPlan().initialPlan()
 
+    def nodes(node):
+        yield node
+        for i in range(node.children().size()):
+            yield from nodes(node.children().apply(i))
 
-def test_lsh_ann_pairs_cache_registry(spark):
-    """With a cache_registry the exploded bucket rows are persisted (the
-    pandas-UDF key computation runs once, shared by the size agg and both
-    self-join sides) and the pair set is unchanged; caller unpersists."""
-    import jsonschema_jl_spark.operators.similarity as sim
-
-    rng = np.random.default_rng(31)
-    dim = 32
-    base = rng.standard_normal((30, dim))
-    rows = [(i, [float(x) for x in base[i]]) for i in range(30)]
-    for j in range(5):
-        v = base[j] + rng.standard_normal(dim) * 0.003
-        rows.append((200 + j, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    plain = {
-        (r.src, r.dst)
-        for r in sim.lsh_ann_pairs(
-            df, dim=dim, n_planes=8, n_tables=4, min_cos=0.99
-        ).collect()
-    }
-    reg: list = []
-    shared = {
-        (r.src, r.dst)
-        for r in sim.lsh_ann_pairs(
-            df, dim=dim, n_planes=8, n_tables=4, min_cos=0.99,
-            cache_registry=reg,
-        ).collect()
-    }
-    assert shared == plain
-    assert len(reg) == 1 and reg[0].is_cached
-    for cached in reg:
-        cached.unpersist()
+    pairing = [n for n in nodes(plan) if n.nodeName() == "MapInArrow"]
+    assert len(pairing) == 1
+    below = [n for n in nodes(pairing[0]) if "Exchange" in n.nodeName()]
+    assert below, "the bucket rows must cross an exchange into the kernel"
+    for ex in below:
+        out_attrs = ex.output()
+        cols = [out_attrs.apply(i).name() for i in range(out_attrs.size())]
+        # (id, table, bucket): no vector column rides the bucket rows
+        assert "vec" not in cols and len(cols) == 3, cols

@@ -17,6 +17,7 @@ Run: python tools/explain_plans.py   (writes /root/repo/PLANS.md)
 
 from __future__ import annotations
 
+import dataclasses
 import io
 import os
 import re
@@ -33,6 +34,7 @@ from jsonschema_jl_spark.gate.gate import apply_gate, gate_filter
 from jsonschema_jl_spark.operators.minhash import (
     normalize_signatures_bands, normalize_udf, with_signatures,
 )
+from jsonschema_jl_spark.operators.group_pairs import NO_CAP
 from jsonschema_jl_spark.operators.lsh import band_buckets, candidate_pairs
 from jsonschema_jl_spark.operators.phash import phash_pairs
 from jsonschema_jl_spark.operators.substring import containment_pairs
@@ -66,17 +68,23 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+def _nodes(plan: str, name: str) -> int:
+    """Nodes named `name`: each has exactly one `(id) name` detail header
+    (its tree line and its header would count it twice)."""
+    return len(re.findall(rf"^\(\d+\) {name}\b", plan, re.M))
+
+
 def facts(plan: str) -> dict:
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     return {
-        "exchanges": len(re.findall(r"\bExchange\b|\b\w*Exchange\b", plan.split("== Physical Plan ==")[-1].split("=====")[0])) if False else plan.count("Exchange ("),
-        "arrow_udf_nodes": plan.count("ArrowEvalPython"),
-        "map_in_arrow_nodes": plan.count("MapInArrow"),
-        "per_row_python_nodes": plan.count("BatchEvalPython"),
+        "exchanges": plan.count("Exchange ("),
+        "arrow_udf_nodes": _nodes(plan, "ArrowEvalPython"),
+        "map_in_arrow_nodes": _nodes(plan, "MapInArrow"),
+        "per_row_python_nodes": _nodes(plan, "BatchEvalPython"),
         "sorts": plan.count("Sort ("),
-        "broadcast_joins": plan.count("BroadcastHashJoin"),
-        "sortmerge_joins": plan.count("SortMergeJoin"),
-        "shuffled_hash_joins": plan.count("ShuffledHashJoin"),
+        "broadcast_joins": _nodes(plan, "BroadcastHashJoin"),
+        "sortmerge_joins": _nodes(plan, "SortMergeJoin"),
+        "shuffled_hash_joins": _nodes(plan, "ShuffledHashJoin"),
         "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", plan))),
         "pushed_filters": [p for p in pushed if p.strip()],
     }
@@ -174,13 +182,14 @@ def main() -> None:
         "rows on the bucket key plus one MapInArrow — the group-pairs kernel\n"
         "sorts each partition by bucket and emits every pair inside a run in\n"
         "batches of at most 2^20 — then the final (src,dst) dedup shuffle.\n"
-        "No persisted exchange, size-count aggregate, survivor join or\n"
-        "collect_list. The bucket cap bounds the quadratic expansion per\n"
+        "No persisted exchange, size-count aggregate, survivor join or list\n"
+        "aggregate. The bucket cap bounds the quadratic expansion per\n"
         "group (skew, P6) and its dropped mass is counted by accumulators.",
         candidate_pairs(buckets, CFG),
     ))
 
-    # 5. phash pigeonhole: one-exchange collect_list expansion, verify native
+    # 5. phash pigeonhole: one exchange into the group-pairs kernel, which
+    #    verifies the Hamming radius in the batch that builds the pair
     out.append(section(
         "phash Hamming pairs (`phash_pairs`, pigeonhole blocks)",
         "r+1 block keys per row via native bit ops; pair generation is the\n"
@@ -198,14 +207,15 @@ def main() -> None:
     from jsonschema_jl_spark.operators.similarity import lsh_ann_pairs, ngram_token_pairs
     out.append(section(
         "Embedding ANN pairs (`lsh_ann_pairs`, hyperplane LSH)",
-        "Round-5 restructure: the exploded bucket relation carries ONLY\n"
-        "(id, table, bucket) — embeddings (the widest rows in a 100 TB\n"
-        "corpus, 2-4 KB at dim 512+) are read map-side for the sign keys and\n"
-        "projected off before the exchange. Candidate id pairs come from the\n"
-        "one-exchange collect_list expansion; vectors re-enter only through\n"
-        "the two narrow hash joins feeding the exact-cosine verify, so each\n"
-        "vector crosses the wire exactly once per verify side instead of\n"
-        "riding every bucket row and both self-join inputs.",
+        "The exploded bucket relation carries ONLY (id, table, bucket) —\n"
+        "embeddings (the widest rows in a 100 TB corpus, 2-4 KB at dim 512+)\n"
+        "are read map-side for the sign keys and projected off before the\n"
+        "exchange. Candidate id pairs come from the group-pairs kernel: ONE\n"
+        "exchange of the bucket rows on (table, bucket) and one MapInArrow\n"
+        "that drops buckets above the cap and emits member pairs in batches\n"
+        "of at most 2^20, then the (src,dst) dedup. Vectors re-enter only\n"
+        "through the two narrow hash joins feeding the exact-cosine verify,\n"
+        "so each vector crosses the wire exactly once per verify side.",
         lsh_ann_pairs(emb, dim=64, n_planes=8, n_tables=4, min_cos=0.8),
     ))
 
@@ -218,9 +228,11 @@ def main() -> None:
         "Tokenization runs ONCE under a Generate barrier (explode of a\n"
         "one-element array) — Catalyst cannot re-inline the split into both\n"
         "size() and slice(), which previously relied on codegen CSE across a\n"
-        "lambda boundary. Pair generation is the one-exchange collect_list\n"
-        "expansion; shared-gram counts fall out of a groupBy over the\n"
-        "expanded pairs (round-5, replacing the two-sided gram self-join).",
+        "lambda boundary. Pair generation is the group-pairs kernel: ONE\n"
+        "exchange of the (id, gram) rows on the gram and one MapInArrow that\n"
+        "drops grams above the anchor cap and emits member pairs in batches\n"
+        "of at most 2^20; shared-gram counts fall out of a groupBy over the\n"
+        "pairs. No size-count aggregate, survivor join or list aggregate.",
         ngram_token_pairs(docs, id_col="doc_id", text_col="txt"),
     ))
 
@@ -252,18 +264,17 @@ def main() -> None:
         cosine_topk(emb, k=3, queries=queries),
     ))
 
-    # 8. salted skew path: hot buckets shard into a salt grid, cold buckets
-    #    keep the capped one-exchange plan; union of both lanes.
-    from jsonschema_jl_spark.operators.lsh import salted_candidate_pairs
+    # 8. exact skew path: the same one-exchange plan with no cap
     out.append(section(
-        "Salted candidate pairs (`salted_candidate_pairs`, exact skew path)",
-        "Hot buckets (size > cap) shard into a salt grid so no single task\n"
-        "materializes a quadratic bucket; cold buckets keep the capped\n"
-        "one-exchange plan. All joins are equi-joins on (bucket, salt) —\n"
-        "fixed-width keys — and the tiny salt grid is broadcast. Emits the\n"
-        "EXACT pair set (contract row doc_skew_salted_pairs proves parity\n"
-        "with the unsalted oracle on a planted hot prefix).",
-        salted_candidate_pairs(buckets, CFG, num_salts=4),
+        "Uncapped candidate pairs (`candidate_pairs` with `NO_CAP`, exact skew path)",
+        "Uncapped streamed pairing: the plan is §4's — ONE exchange of the\n"
+        "(id, bucket) rows and one MapInArrow — with a cap no bucket\n"
+        "reaches, so every pair is emitted (no recall loss). A hot bucket is\n"
+        "paired in the task that receives it and its pairs leave in batches\n"
+        "of at most 2^20, so no task holds a quadratic array. The flagship\n"
+        "caps hot buckets instead and counts the dropped mass in\n"
+        "accumulators.",
+        candidate_pairs(buckets, dataclasses.replace(CFG, bucket_cap=NO_CAP)),
     ))
 
     # 9. dynamic gate, verdict-only: columnar screen decides most rows in
