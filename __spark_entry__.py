@@ -35,7 +35,7 @@ from jsonschema_jl_spark.operators.similarity import (
 )
 from jsonschema_jl_spark.operators.minhash import with_signatures
 from jsonschema_jl_spark.operators.components import connected_components
-from jsonschema_jl_spark.operators.group_pairs import NO_CAP, block_emitter, pair_groups
+from jsonschema_jl_spark.operators.group_pairs import NO_CAP, block_emitter, pair_groups, same_rows
 from jsonschema_jl_spark.operators.pipeline import dedup_pipeline
 from jsonschema_jl_spark.datagen.from_documents import images_from_documents
 
@@ -523,7 +523,8 @@ def q_doc_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every pair inside a (lang, length-band) group within 28 bits: the
     # group-pairs kernel uncapped, popcount-verified in the batch that
     # builds the pair.  A null id, key or hash never matches in the oracle's
-    # self-join, so those rows are dropped before the exchange.
+    # self-join: the pack drops null ids and keys, and a null hash is
+    # dropped here.
     d = _docs(spark, sf_dir)
     h = d.select(
         F.col("doc_id").alias("id"),
@@ -532,10 +533,10 @@ def q_doc_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 15), 16, 10)
         .cast("long")
         .alias("ph"),
-    ).dropna(subset=["id", "lang", "lb", "ph"])
+    ).dropna(subset=["ph"])
     id_type = h.schema["id"].dataType
     return pair_groups(
-        h, ["lang", "lb"], block_emitter(28),
+        h, same_rows, ["lang", "lb"], block_emitter(28),
         T.StructType([
             T.StructField("src", id_type), T.StructField("dst", id_type),
             T.StructField("hamming", T.IntegerType()),

@@ -251,6 +251,19 @@ def _list_rows(values: np.ndarray, offsets: np.ndarray) -> pa.ListArray:
     )
 
 
+def arrow_bytes(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(data, offsets) of a string or binary Arrow array (`large_` or not,
+    sliced or not), read from its buffers without a copy: row i's bytes are
+    data[offsets[i]:offsets[i + 1]] (int64 offsets, n + 1 of them).  A null
+    row spans what the array stores for it, normally nothing."""
+    n = len(arr)
+    _, obuf, dbuf = arr.buffers()
+    large = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    off = np.frombuffer(obuf, np.int64 if large else np.int32)[arr.offset : arr.offset + n + 1]
+    data = np.frombuffer(dbuf, np.uint8) if dbuf is not None else np.empty(0, np.uint8)
+    return data, off.astype(np.int64)
+
+
 def signature_batch(
     text: pa.Array, cfg: DedupConfig, normalized: bool, emit: Iterable[str]
 ) -> dict[str, pa.Array]:
@@ -282,10 +295,7 @@ def signature_batch(
         empty = _list_rows(np.empty(0, np.int64), np.zeros(1, np.int64))
         return {c: out.get(c, empty) for c in emit}
     k = cfg.shingle_k
-    _, obuf, dbuf = text.buffers()
-    odt = np.int64 if pa.types.is_large_string(text.type) else np.int32
-    off = np.frombuffer(obuf, odt)[text.offset : text.offset + n + 1].astype(np.int64)
-    data = np.frombuffer(dbuf, np.uint8) if dbuf is not None else np.empty(0, np.uint8)
+    data, off = arrow_bytes(text)
     lens = np.diff(off)
     if text.null_count:
         lens[~text.is_valid().to_numpy(zero_copy_only=False)] = 0

@@ -5,15 +5,20 @@ phash, split the 64 bits into r+1 disjoint blocks — any pair within
 distance r agrees exactly on at least one block (pigeonhole), so grouping
 on (block_id, block_bits) finds every candidate with zero recall loss.
 
-The block rows cross ONE exchange on (block, key) and are paired where
-they land by the group-pairs Arrow kernel (operators/group_pairs.py): each
-block's members pair up, and a numpy popcount of the XOR'd phashes keeps
-the pairs within the radius — the exact verify runs in the same batch that
-builds the pair.  Degenerate keys (e.g. the all-zero phash of blank
-images) are capped like LSH buckets.
+The block rows are built in numpy inside the pack task (`block_rows`: r+1
+shifts and masks of the phash column, no JVM explode), cross ONE packed
+exchange on (block, key) and are paired where they land by the
+group-pairs Arrow kernel (operators/group_pairs.py): each block's members
+pair up, and a numpy popcount of the XOR'd phashes keeps the pairs within
+the radius — the exact verify runs in the same batch that builds the
+pair.  Degenerate keys (e.g. the all-zero phash of blank images) are
+capped like LSH buckets.
 """
 
 from __future__ import annotations
+
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -21,24 +26,34 @@ from jsonschema_jl_spark.config import DedupConfig, DEFAULT_CONFIG
 from jsonschema_jl_spark.operators.group_pairs import block_emitter, pair_groups
 
 
-def phash_blocks(
-    df: DataFrame, id_col: str = "image_id", phash_col: str = "phash",
-    cfg: DedupConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """(id, phash, block, key): r+1 pigeonhole blocks per row."""
+def block_rows(cfg: DedupConfig = DEFAULT_CONFIG):
+    """The pack batch function: (id, ph, block, key) — r+1 pigeonhole
+    blocks per (id, ph) row, block i holding bits [i*w, i*w + w) of the
+    phash (the last block takes the remaining bits).  A null phash never
+    pairs (its distance is null), so its row has no blocks."""
     nblocks = cfg.hamming_radius + 1
     width = cfg.phash_bits // nblocks
-    keys = []
-    for i in range(nblocks):
-        shift = i * width
-        w = width if i < nblocks - 1 else cfg.phash_bits - shift
-        mask = (1 << w) - 1
-        keys.append(F.shiftrightunsigned(F.col(phash_col), shift).bitwiseAND(F.lit(mask)))
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(phash_col).alias("ph"),
-        F.posexplode(F.array(*keys)).alias("block", "key"),
+    shifts = np.arange(nblocks, dtype=np.uint64) * np.uint64(width)
+    masks = np.array(
+        [(1 << (width if i < nblocks - 1 else cfg.phash_bits - i * width)) - 1
+         for i in range(nblocks)],
+        dtype=np.uint64,
     )
+
+    def rows(batch: pa.RecordBatch) -> pa.Table:
+        if batch.column("ph").null_count:
+            batch = batch.filter(batch.column("ph").is_valid())
+        ph = batch.column("ph").to_numpy()
+        keys = (ph.view(np.uint64)[:, None] >> shifts) & masks
+        row = np.repeat(np.arange(len(ph), dtype=np.int64), nblocks)
+        return pa.table({
+            "id": batch.column("id").take(row),
+            "ph": ph[row],
+            "block": np.tile(np.arange(nblocks, dtype=np.int32), len(ph)),
+            "key": keys.reshape(-1).view(np.int64),
+        })
+
+    return rows
 
 
 def phash_pairs(
@@ -48,17 +63,16 @@ def phash_pairs(
 ) -> DataFrame:
     """Distinct (src, dst, hamming) pairs with Hamming(phash) <= radius.
 
-    ONE exchange of the (id, ph, block, key) rows on (block, key) into
-    `num_partitions` (a data-sized floor, as in lsh.candidate_pairs), then
-    the group-pairs kernel: blocks of one row or above `block_cap` emit
-    nothing, the rest emit their member pairs in batches of at most 2^20,
-    each with its popcount Hamming distance, kept when within
-    cfg.hamming_radius.  A null phash never pairs (its distance is null),
-    so its rows are dropped before the exchange."""
-    blocks = phash_blocks(df, id_col, phash_col, cfg).filter(F.col("ph").isNotNull())
-    id_type = blocks.schema["id"].dataType
+    ONE packed exchange of the (id, ph, block, key) rows (`block_rows`,
+    built in the pack task) on (block, key) into `num_partitions` (a
+    data-sized floor, as in lsh.candidate_pairs), then the group-pairs
+    kernel: blocks of one row or above `block_cap` emit nothing, the rest
+    emit their member pairs in batches of at most 2^20, each with its
+    popcount Hamming distance, kept when within cfg.hamming_radius."""
+    base = df.select(F.col(id_col).alias("id"), F.col(phash_col).cast("long").alias("ph"))
+    id_type = base.schema["id"].dataType
     return pair_groups(
-        blocks, ["block", "key"], block_emitter(cfg.hamming_radius),
+        base, block_rows(cfg), ["block", "key"], block_emitter(cfg.hamming_radius),
         T.StructType([
             T.StructField("src", id_type), T.StructField("dst", id_type),
             T.StructField("hamming", T.IntegerType()),

@@ -20,7 +20,7 @@ from jsonschema_jl_spark.gate.compiler import (
     compile_native_checks,
 )
 from jsonschema_jl_spark.operators.minhash import normalize_signatures_bands
-from jsonschema_jl_spark.operators.lsh import band_buckets, candidate_pairs
+from jsonschema_jl_spark.operators.lsh import candidate_pairs
 from jsonschema_jl_spark.operators.verify import verify_jaccard_text
 from jsonschema_jl_spark.operators.phash import phash_pairs
 from jsonschema_jl_spark.operators.substring import containment_pairs
@@ -166,9 +166,10 @@ def dedup_pipeline(
         skew: list = []
 
         def edges_of() -> DataFrame:
-            # banding is a plain posexplode of the projection's precomputed
-            # band keys (no signature stage exists — see the fused kernel)
-            buckets = band_buckets(slim, id_col="nid", cfg=cfg, bands_col="bands")
+            # the projection's precomputed band keys go to the pairing as
+            # one list per row: the pack task flattens them in numpy (no
+            # signature stage or JVM explode exists — see the fused kernel)
+            buckets = slim.select(F.col("nid").alias("id"), F.col("bands").alias("bucket"))
             if collect_metrics:
                 cands, metrics = candidate_pairs(
                     buckets, cfg, with_metrics=True, num_partitions=hot_par

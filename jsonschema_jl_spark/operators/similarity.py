@@ -26,7 +26,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
-from jsonschema_jl_spark.operators.group_pairs import bucket_emitter, pair_groups
+from jsonschema_jl_spark.operators.group_pairs import bucket_emitter, list_rows, pair_groups
 from jsonschema_jl_spark.operators.textops import normalized_text, fingerprint
 
 
@@ -116,7 +116,7 @@ def signs_keys_udf(planes_tables: np.ndarray):
         for vecs in it:
             n = len(vecs)
             # null / wrong-length embeddings get a NULL key array (the row
-            # then drops at the posexplode) instead of crashing the matmul
+            # then builds no bucket rows) instead of crashing the matmul
             # with a ragged np.asarray; the native path degrades the same
             # way in effect — its null-dot key-0 rows never survive the
             # `cos >= min_cos` null filter, so pair output is identical
@@ -169,14 +169,14 @@ def lsh_ann_pairs(
     (_NATIVE_SIGNS_MAX).
 
     Embeddings are the WIDEST rows in the corpus (2-4 KB at dim 512+), so
-    no vector ever crosses the candidate-generation shuffle: the exploded
-    bucket rows carry only (id, table, bucket) — the key computation reads
-    `vec` map-side and projects it off before the exchange — and cross ONE
-    exchange on (table, bucket) into the group-pairs kernel
-    (operators/group_pairs.py), which drops buckets above `bucket_cap` and
-    emits member pairs in bounded batches.  The exact-cosine verify
-    re-fetches vectors for the (tiny) candidate set by two narrow id joins
-    (the verify.verify_jaccard_text pattern).
+    no vector ever crosses the candidate-generation shuffle: the key
+    computation reads `vec` map-side and projects it off before the pack,
+    whose task flattens each (id, keys) row into (id, table, bucket) rows
+    in numpy; they cross ONE packed exchange on (table, bucket) into the
+    group-pairs kernel (operators/group_pairs.py), which drops buckets
+    above `bucket_cap` and emits member pairs in bounded batches.  The
+    exact-cosine verify re-fetches vectors for the (tiny) candidate set by
+    two narrow id joins (the verify.verify_jaccard_text pattern).
 
     `num_partitions` sizes every exchange of this op to the DATA (derive it
     from the corpus row count, ~50k rows/partition — the same floor the
@@ -184,10 +184,7 @@ def lsh_ann_pairs(
     after the 10x stress draw): the bucket rows and the vector-fetch joins
     all grow with the corpus, so at a fixed session partition count their
     per-task memory grows without bound."""
-    # a null id never pairs (and the pairing kernel's id arrays take none)
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).filter(
-        F.col("id").isNotNull()
-    )
+    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     if n_planes * dim <= _NATIVE_SIGNS_MAX:
         keys = F.array(*[
             signs_column(F.col("vec"), _hyperplanes(dim, n_planes, t, seed))
@@ -198,10 +195,10 @@ def lsh_ann_pairs(
             _hyperplanes(dim, n_planes, t, seed) for t in range(n_tables)
         ])
         keys = signs_keys_udf(planes)(F.col("vec"))
-    exploded = base.select("id", F.posexplode(keys).alias("table", "bucket"))
     id_type = base.schema["id"].dataType
     pairs = pair_groups(
-        exploded, ["table", "bucket"], bucket_emitter,
+        base.select("id", keys.alias("keys")), list_rows("keys", "bucket", pos="table"),
+        ["table", "bucket"], bucket_emitter,
         T.StructType([T.StructField("src", id_type), T.StructField("dst", id_type)]),
         cap=bucket_cap, num_partitions=num_partitions,
     ).dropDuplicates(["src", "dst"])
@@ -358,8 +355,10 @@ def ngram_token_pairs(
     one-element array), which Catalyst cannot collapse into downstream
     projections — the earlier formulation inlined the split expression into
     both size() and slice() and leaned on codegen CSE across a lambda
-    boundary to dedup it.  The (id, gram) rows cross ONE exchange on the
-    gram into the group-pairs kernel (operators/group_pairs.py), which
+    boundary to dedup it.  Each document's distinct grams stay one list;
+    the pack task flattens it into (id, g) rows, which cross ONE packed
+    exchange on the gram into the group-pairs kernel
+    (operators/group_pairs.py), which
     drops grams shared by more than `anchor_cap` documents and emits each
     gram's member pairs in bounded batches; the shared-gram count falls out
     of a groupBy over those pairs.
@@ -368,27 +367,24 @@ def ngram_token_pairs(
     from the corpus row count (~50k rows/partition): the gram relation
     grows linearly with the corpus, so at a fixed session partition count
     the rows one kernel task holds grow without bound."""
-    # a null id never pairs (and the pairing kernel's id arrays take none)
-    toks_df = df.filter(F.col(id_col).isNotNull()).select(
+    toks_df = df.select(
         F.col(id_col).alias("id"),
         # Generate barrier: one split per row, referenced twice downstream
         F.explode(F.array(F.split(normalized_text(F.col(text_col)), " "))).alias("toks"),
     )
     grams = toks_df.select(
         "id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(1, greatest(size(toks) - {n - 1}, 1)),"
-                    f" i -> md5(concat_ws(' ', slice(toks, i, {n}))))"
-                )
+        F.array_distinct(
+            F.expr(
+                f"transform(sequence(1, greatest(size(toks) - {n - 1}, 1)),"
+                f" i -> md5(concat_ws(' ', slice(toks, i, {n}))))"
             )
-        ).alias("g"),
+        ).alias("grams"),
     )
     id_type = grams.schema["id"].dataType
     return (
         pair_groups(
-            grams, ["g"], bucket_emitter,
+            grams, list_rows("grams", "g"), ["g"], bucket_emitter,
             T.StructType([T.StructField("src", id_type), T.StructField("dst", id_type)]),
             cap=anchor_cap, num_partitions=num_partitions,
         )

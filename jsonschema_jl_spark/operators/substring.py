@@ -2,19 +2,28 @@
 
 Two implementations of "caption A is an exact substring of caption B":
 
-1. `containment_pairs` (primary, shuffle-friendly): anchor-gram grouping.
-   A ⊆ B implies A's first g characters occur as some g-gram of B.  So:
-   explode every document's strided g-gram hashes (O(total_chars / stride)
-   longs) and each candidate contained caption's leading g-gram hashes,
-   exchange both ONCE on the gram hash, and pair probes with grams inside
-   each anchor group with the group-pairs Arrow kernel
-   (operators/group_pairs.py) — the list-crosscutting of LCJoin applied per
-   group.  Each kept pair carries the exact alignment offset, which a
-   native hash verify and an exact string confirm check.  This is the
-   suffix-array idea re-expressed as distributed grouping: the anchor gram
-   plays the role of the suffix-array lookup of A's prefix among B's
-   suffixes, with exact verification replacing the LCP walk.  No quadratic
-   blow-up, no global sort.
+1. `containment_pairs` (primary, shuffle-friendly): anchor-gram grouping
+   over UTF-8 bytes.  A ⊆ B implies A's first g bytes occur as some g-byte
+   gram of B.  So: build every document's strided g-gram hashes (O(total
+   bytes / stride) rows) and each candidate contained caption's leading
+   g-gram hashes in numpy inside the pack task (`anchor_rows`, reading the
+   string buffers as minhash.signature_batch does), exchange both ONCE,
+   packed, on the gram hash, and pair probes with grams inside each anchor
+   group with the group-pairs Arrow kernel (operators/group_pairs.py) —
+   the list-crosscutting of LCJoin applied per group.  Each kept pair
+   carries the exact byte offset of the alignment, which a native hash
+   verify and an exact byte confirm check.  This is the suffix-array idea
+   re-expressed as distributed grouping: the anchor gram plays the role of
+   the suffix-array lookup of A's prefix among B's suffixes, with exact
+   verification replacing the LCP walk.  No quadratic blow-up, no global
+   sort.
+
+   Bytes, not characters: UTF-8 is self-synchronizing, so a valid UTF-8
+   string A occurs in B as bytes exactly when it occurs as characters, and
+   the pair set is the character-level one.  A probe is still admitted by
+   its CHARACTER length (>= min_contained_len >= g + s - 1, hence at least
+   g + s - 1 bytes).  `anchor_cap` counts an anchor's byte-gram rows,
+   which on non-ASCII text are more than its character grams were.
 
 2. `suffix_array_containment_partition` (reference-style kernel): a
    per-partition suffix array built in numpy inside applyInPandas after
@@ -28,12 +37,52 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from jsonschema_jl_spark.config import DedupConfig, DEFAULT_CONFIG
 from jsonschema_jl_spark.operators.group_pairs import anchor_emitter, pair_groups
-from jsonschema_jl_spark.operators.minhash import normalize_text, normalize_udf
+from jsonschema_jl_spark.operators.minhash import (
+    _shingle_flat_from_buffer, arrow_bytes, normalize_udf,
+)
+
+
+def anchor_rows(g: int, s: int):
+    """The pack batch function over (id, txt, h1) rows whose texts hold at
+    least g + s - 1 bytes: (key, id, len, pos, h1, is_gram) rows.
+
+    Every text yields s probe rows — its g-byte grams at byte positions
+    1..s, carrying its h1 — and one gram row per stride position 1, 1+s,
+    1+2s, ... up to len - g + 1 (h1 = 0: a sentinel, never null).  `len`
+    is the text's byte length, `pos` the gram's 1-based byte position and
+    `key` the gram's _shingle_flat_from_buffer hash."""
+
+    def rows(batch: pa.RecordBatch) -> pa.Table:
+        data, off = arrow_bytes(batch.column("txt"))
+        lens = np.diff(off)
+        n = len(lens)
+        h, _ = _shingle_flat_from_buffer(data[off[0]:off[-1]], lens, g)
+        windows = lens - (g - 1)
+        first = np.cumsum(windows) - windows  # each row's first window in h
+        n_gram = (windows - 1) // s + 1
+        g_row = np.repeat(np.arange(n, dtype=np.int64), n_gram)
+        g_pos = (np.arange(len(g_row)) - np.repeat(np.cumsum(n_gram) - n_gram, n_gram)) * s
+        p_row = np.repeat(np.arange(n, dtype=np.int64), s)
+        p_pos = np.tile(np.arange(s, dtype=np.int64), n)
+        row = np.concatenate([p_row, g_row])
+        pos = np.concatenate([p_pos, g_pos])
+        h1 = batch.column("h1").to_numpy()
+        return pa.table({
+            "key": h[first[row] + pos].view(np.int64),
+            "id": batch.column("id").take(row),
+            "len": lens[row].astype(np.int32),
+            "pos": (pos + 1).astype(np.int32),
+            "h1": np.concatenate([h1[p_row], np.zeros(len(g_row), np.int64)]),
+            "is_gram": np.arange(len(row)) >= len(p_row),
+        })
+
+    return rows
 
 
 def containment_pairs(
@@ -50,9 +99,9 @@ def containment_pairs(
     src/dst ordering: src is the contained (shorter) caption.
     assume_normalized=True takes text_col as already normalize_text'd —
     the pipeline normalizes once into its persisted projection, and this
-    DataFrame is referenced four times below (probe, grams, both text
-    fetches), so skipping re-normalization here avoids four extra full
-    string passes at scale."""
+    DataFrame is referenced three times below (the packed anchors and both
+    text fetches), so skipping re-normalization here avoids three extra
+    full string passes at scale."""
     g = cfg.anchor_gram
     s = cfg.anchor_stride
     assert cfg.min_contained_len >= g + s - 1, "stride must fit the shortest probe"
@@ -62,60 +111,40 @@ def containment_pairs(
     )
 
     # Sparse-anchor scheme (winnowing-style, EXACT): the container emits
-    # g-grams only at positions 1, 1+s, 1+2s, ...; the probe emits its first
-    # s g-grams.  If A occurs in B at offset o, A's gram at position p
-    # (1<=p<=s) lands at container position o+p-1... and exactly one p puts
-    # that on the container's stride grid — so every true containment
-    # survives with s*fewer exploded container rows.
+    # g-byte grams only at byte positions 1, 1+s, 1+2s, ...; the probe
+    # emits its first s grams.  If A occurs in B at byte offset o, A's gram
+    # at position p (1<=p<=s) lands at container position o+p-1, and
+    # exactly one p puts that on the container's stride grid — so every
+    # true containment survives with s*fewer container rows.
     #
     # Round-5 redesign (found by the 10x stress draw): candidate rows are
-    # FIXED-WIDTH through every exchange.  On window-sharing corpora the
-    # candidate count grows ~quadratically with the corpus (measured 1.29e9
-    # candidates from 6.5M template-generated captions with NO key above
-    # the anchor cap — window-frequency capping would have dropped 39-72%
-    # of probes, unacceptable recall), so the old shape — fetch both texts
-    # per candidate, verify with instr — shipped hundreds of GB of caption
+    # FIXED-WIDTH.  On window-sharing corpora the candidate count grows
+    # ~quadratically with the corpus (measured 1.29e9 candidates from 6.5M
+    # template-generated captions with NO key above the anchor cap —
+    # window-frequency capping would have dropped 39-72% of probes,
+    # unacceptable recall), so the old shape — fetch both texts per
+    # candidate, verify with instr — shipped hundreds of GB of caption
     # bytes.  Instead both sides carry POSITIONS and the probe carries a
-    # full-text hash: a key match derives the exact alignment offset
-    # o = pos_b - p + 1, the container-side verify recomputes
-    # xxhash64(substr(txt_b, o, len)) with ONE corpus-sized text exchange
-    # (probe text never moves), and only the hash-matched minority fetches
-    # the probe text for the exact string-equality confirm — containment is
-    # EXACT, never hash-trusted.
-    # The probe and gram keys are hashed by a plain projection after an
-    # explode of the positions (no lambda), and both sides share one row
-    # shape so ONE exchange on the key brings an anchor's probes and grams
-    # together.  A gram row's h1 is a 0 sentinel, never null: pyarrow turns
-    # a nullable int64 column holding nulls into float64, losing hash bits.
-    gram_key = F.expr(f"xxhash64(substr(txt, pos, {g}))")
-    probe = base.select(
-        "id", "txt", F.length("txt").alias("len"), F.xxhash64("txt").alias("h1"),
-        F.explode(F.sequence(F.lit(1), F.lit(s))).alias("pos"),
-    ).select(
-        gram_key.alias("key"), "id", "len", "pos", "h1", F.lit(False).alias("is_gram")
-    )
-    grams = base.select(
-        "id", "txt", F.length("txt").alias("len"),
-        F.explode(
-            F.sequence(F.lit(1), F.greatest(F.length("txt") - (g - 1), F.lit(1)), F.lit(s))
-        ).alias("pos"),
-    ).select(
-        gram_key.alias("key"), "id", "len", "pos", F.lit(0).cast("long").alias("h1"),
-        F.lit(True).alias("is_gram"),
-    )
-    # candidates: one anchor group pairs its probes (p = pos) with its grams
-    # (pos_b = pos) — anchors whose gram count is above anchor_cap (e.g. a
-    # ubiquitous phrase) emit nothing — and keeps a pair only if the derived
-    # offset o = pos_b - p + 1 places the shorter probe inside its container
-    # (id != id_b).  Rows stay FIXED-WIDTH (id, id_b, o, len, h1): on
-    # window-sharing corpora the candidate count grows ~quadratically with
-    # the corpus (1.29e9 candidates from 6.5M template-generated captions in
-    # the 10x stress draw), so texts never ride the candidates.  The
+    # full-text hash h1 (xxhash64, computed here once per text before the
+    # pack): a key match derives the exact alignment offset o = pos_b - p +
+    # 1, the container-side verify recomputes xxhash64 of the container's
+    # bytes at that offset with ONE corpus-sized text exchange (probe text
+    # never moves), and only the hash-matched minority fetches the probe
+    # text for the exact byte-equality confirm — containment is EXACT,
+    # never hash-trusted.
+    #
+    # The probe and gram rows are built by `anchor_rows` in the pack task
+    # and cross ONE packed exchange on the key: an anchor group pairs its
+    # probes with its grams — anchors whose gram count is above anchor_cap
+    # (e.g. a ubiquitous phrase) emit nothing — and keeps a pair only if
+    # the derived offset places the shorter probe inside its container (id
+    # != id_b).  Candidates stay FIXED-WIDTH (id, id_b, o, len, h1); the
     # exchange is sized to the DATA by `num_partitions`: an anchor group's
     # rows are one task's state.
     id_type = base.schema["id"].dataType
     cand = pair_groups(
-        probe.unionByName(grams), ["key"], anchor_emitter,
+        base.select("id", "txt", F.xxhash64("txt").alias("h1")), anchor_rows(g, s),
+        ["key"], anchor_emitter,
         T.StructType([
             T.StructField("id", id_type), T.StructField("id_b", id_type),
             T.StructField("o", T.IntegerType()), T.StructField("len", T.IntegerType()),
@@ -123,8 +152,10 @@ def containment_pairs(
         ]),
         cap=anchor_cap, num_partitions=num_partitions, gram_col="is_gram",
     )
-    b = base.select(F.col("id").alias("id_b2"), F.col("txt").alias("txt_b"))
-    a = base.select(F.col("id"), F.col("txt"))
+    # both text sides as UTF-8 bytes: `o` and `len` are byte offsets, and
+    # xxhash64 hashes a string and its binary cast alike
+    b = base.select(F.col("id").alias("id_b2"), F.col("txt").cast("binary").alias("txt_b"))
+    a = base.select(F.col("id"), F.col("txt").cast("binary").alias("txt"))
     if num_partitions is not None:
         # the container-text side pins the (data-derived) partition count;
         # the candidate side co-partitions to match.  Hash-join BUILD sides

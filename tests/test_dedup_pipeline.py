@@ -91,15 +91,13 @@ def test_skew_metrics_final_after_edges(images, spark):
     RDD of the run is left."""
     import dataclasses
 
-    from jsonschema_jl_spark.operators.lsh import band_buckets
-
     # planted groups are pairs here: cap 1 caps every shared bucket
     cfg = dataclasses.replace(CFG, bucket_cap=1)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
     res = dedup_pipeline(images, cfg)
     try:
-        buckets = band_buckets(res.signatures, id_col="nid", cfg=cfg, bands_col="bands")
+        buckets = res.signatures.select(F.explode("bands").alias("bucket"))
         ref = (
             buckets.groupBy("bucket").count().filter(F.col("count") > cfg.bucket_cap)
             .agg(F.count("*").alias("b"), F.sum("count").alias("r")).collect()[0]
@@ -113,6 +111,47 @@ def test_skew_metrics_final_after_edges(images, spark):
     # its lineage cuts (edges, CC rounds), which Spark's ContextCleaner owns
     left = [v.rdd() for k, v in jsc.getPersistentRDDs().items() if k not in before]
     assert all(r.isCheckpointed() for r in left)
+
+
+def _plan_nodes(node):
+    yield node
+    for i in range(node.children().size()):
+        yield from _plan_nodes(node.children().apply(i))
+
+
+def _is_part_exchange(node) -> bool:
+    if "Exchange" not in node.nodeName():
+        return False
+    attrs = node.output()
+    return [attrs.apply(i).name() for i in range(attrs.size())] == ["part", "block"]
+
+
+def test_edges_plan_packs_every_detector(images, monkeypatch):
+    """The uncached edges plan (what the pipeline hands to its edge
+    materialization): each of the three detectors' pairing MapInArrow sits
+    on exactly one Exchange, on the partition code, and no Generate node
+    runs under any pairing task — group rows are built in the pack task."""
+    frames = []
+    cls = type(images)
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        frames.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    res = dedup_pipeline(images, CFG, collect_metrics=False)
+    res.cleanup()
+    plan = frames[0]._jdf.queryExecution().executedPlan().initialPlan()
+    pairing = [
+        n for n in _plan_nodes(plan)
+        if n.nodeName() == "MapInArrow" and _is_part_exchange(n.children().apply(0))
+    ]
+    assert len(pairing) == 3  # LSH, phash, containment
+    for task in pairing:
+        below = list(_plan_nodes(task))
+        assert sum(_is_part_exchange(n) for n in below) == 1
+        assert not [n.nodeName() for n in below if n.nodeName() == "Generate"]
 
 
 def test_determinism_across_runs(images):

@@ -1,24 +1,37 @@
 """Spark-free tests of the group-pairs kernel (operators/group_pairs.py):
 the triangle and probe x gram index generators against brute force, the
-pair budget, popcount64, and the kernel's cap accounting."""
+pair budget, popcount64, the kernel's cap accounting, and the packed
+exchange's map side (routing, null drop, blocks) with the detectors'
+batch functions."""
 
 from __future__ import annotations
 
 import itertools
+import tracemalloc
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
+from jsonschema_jl_spark.config import DedupConfig
+from jsonschema_jl_spark.operators import group_pairs
 from jsonschema_jl_spark.operators.group_pairs import (
     anchor_emitter,
     block_emitter,
     bucket_emitter,
     cross_index,
+    destinations,
+    list_rows,
+    pack,
     pair_runs,
+    partition_codes,
     popcount64,
+    same_rows,
     triangle_index,
+    unpack,
 )
+from jsonschema_jl_spark.operators.phash import block_rows
+from jsonschema_jl_spark.operators.substring import anchor_rows
 
 
 class _Acc:
@@ -215,3 +228,138 @@ def test_anchor_kernel_offsets_and_gram_cap(string_ids):
         (ident(22), ident(24), 11, 16, 555),
     }
     assert (acc[0].value, acc[1].value) == (1, 6)
+
+
+def _unpacked(out: list[pa.RecordBatch], codes: np.ndarray, keys: list[str]) -> list[dict]:
+    """Every row inside the packed batches, after checking that each block
+    holds only rows routed to the partition its code names."""
+    rows = []
+    for batch in out:
+        for part, block in zip(batch.column("part").to_pylist(), batch.column("block")):
+            one = pa.record_batch([pa.array([part], pa.int32()), pa.array([block.as_py()], pa.binary())],
+                                  names=["part", "block"])
+            table = pa.Table.from_batches(list(unpack([one])))
+            dest = destinations(table, keys, len(codes))
+            assert (codes[dest] == part).all()
+            rows += table.to_pylist()
+    return rows
+
+
+@pytest.mark.parametrize("pack_rows", [2, None])
+def test_pack_routes_rows_and_drops_nulls(monkeypatch, pack_rows):
+    """Rows with a null id or key never leave the pack; every other row
+    leaves exactly once, in a block of its destination, whether the held
+    rows are written once or in several rounds."""
+    if pack_rows is not None:
+        monkeypatch.setattr(group_pairs, "PACK_ROWS", pack_rows)
+    ids = [1, 2, None, 4, 5, 6, 7, 8]
+    keys = ["k1", "é", "k1", None, "k1", "東京", "é", "k3"]
+    n = [0, 1, 0, 1, 0, 1, 0, 1]
+    batches = [
+        pa.record_batch([pa.array(ids[a:b], pa.int64()), pa.array(keys[a:b]), pa.array(n[a:b], pa.int64())],
+                        names=["id", "s", "n"])
+        for a, b in [(0, 3), (3, 3), (3, 8)]
+    ]
+    codes = partition_codes(4)
+    out = list(pack(batches, same_rows, ["s", "n"], codes))
+    assert len(out) == (1 if pack_rows is None else 2)
+    got = sorted((r["id"], r["s"], r["n"]) for r in _unpacked(out, codes, ["s", "n"]))
+    want = sorted((i, k, m) for i, k, m in zip(ids, keys, n) if i is not None and k is not None)
+    assert got == want
+
+
+@pytest.mark.parametrize("key_len", [32, 1024])
+def test_key_hash_memory_is_per_row(key_len):
+    """The string key hash allocates per row, not per key byte: its numpy
+    peak stays under 128 bytes a row whatever the key length (a per-byte
+    int64 temporary alone would be 8 * key_len bytes a row), so a pack
+    flush of PACK_ROWS rows peaks at a fixed multiple of PACK_ROWS."""
+    n = 4096
+    keys = pa.array([f"{i:0{key_len}d}" for i in range(n)])
+    tracemalloc.start()
+    try:
+        h = group_pairs._key_hash(keys)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert len(np.unique(h)) == n
+    assert peak < 128 * n
+
+
+def test_destinations_ignore_slicing_and_group_equal_keys():
+    """A key's destination depends on its value only: sliced arrays,
+    large_string copies and other batches route it alike."""
+    words = pa.array(["", "a", "ab", "東京", "😀", "a", "ab", "naïve"] * 3)
+    whole = destinations(pa.table({"k": words}), ["k"], 64)
+    part = destinations(pa.table({"k": words.slice(5, 10)}), ["k"], 64)
+    large = destinations(pa.table({"k": words.cast(pa.large_string())}), ["k"], 64)
+    assert part.tolist() == whole[5:15].tolist() and large.tolist() == whole.tolist()
+    by_word: dict = {}
+    for w, d in zip(words.to_pylist(), whole):
+        by_word.setdefault(w, set()).add(int(d))
+    assert all(len(d) == 1 for d in by_word.values())
+    ints = pa.array([7, -1, 7, 1 << 62], pa.int64())
+    d = destinations(pa.table({"k": ints}), ["k"], 1000)
+    assert d[0] == d[2] and ((0 <= d) & (d < 1000)).all()
+
+
+def test_list_rows_flatten_with_positions():
+    batch = pa.record_batch(
+        [pa.array([10, 11, 12, 13]), pa.array([[5, 6], None, [], [7, 8, 9]], pa.list_(pa.int64()))],
+        names=["id", "keys"],
+    ).slice(0, 4)
+    got = list_rows("keys", "bucket", pos="table")(batch).to_pylist()
+    assert got == [
+        {"id": 10, "bucket": 5, "table": 0}, {"id": 10, "bucket": 6, "table": 1},
+        {"id": 13, "bucket": 7, "table": 0}, {"id": 13, "bucket": 8, "table": 1},
+        {"id": 13, "bucket": 9, "table": 2},
+    ]
+    assert list_rows("keys", "g")(batch.slice(3)).to_pylist() == [
+        {"id": 13, "g": 7}, {"id": 13, "g": 8}, {"id": 13, "g": 9},
+    ]
+
+
+def test_block_rows_cut_pigeonhole_blocks():
+    """r+1 blocks of the 64 phash bits, the last taking the remainder;
+    a null phash has no blocks."""
+    cfg = DedupConfig(hamming_radius=6)  # 7 blocks: six of 9 bits, one of 10
+    phs = [-1, 0x0123456789ABCDEF, None, np.iinfo(np.int64).min]
+    batch = pa.record_batch([pa.array(["a", "b", "c", "d"]), pa.array(phs, pa.int64())],
+                            names=["id", "ph"])
+    got = block_rows(cfg)(batch).to_pylist()
+    want = []
+    for i, ph in zip("abcd", phs):
+        if ph is None:
+            continue
+        u = ph & ((1 << 64) - 1)
+        for b in range(7):
+            w = 9 if b < 6 else 10
+            want.append({"id": i, "ph": ph, "block": b, "key": (u >> (9 * b)) & ((1 << w) - 1)})
+    assert got == want
+
+
+def _poly(window: bytes) -> int:
+    """The anchor key of a g-byte window: sum(byte_j * B^j) mod 2^64, as
+    signed int64 (minhash._shingle_flat_from_buffer's Horner hash)."""
+    h = sum(b * pow(1099511628211, j, 1 << 64) for j, b in enumerate(window)) % (1 << 64)
+    return h - (1 << 64) if h >= 1 << 63 else h
+
+
+def test_anchor_rows_byte_grams():
+    """Probe rows are each text's first s byte grams; gram rows sit at byte
+    positions 1, 1+s, ... <= len - g + 1; len and pos count UTF-8 bytes."""
+    g, s = 4, 3
+    texts = ["abcdefghij", "café東京😀 ok", "xyzxyz"]
+    batch = pa.record_batch(
+        [pa.array([1, 2, 3]), pa.array(texts), pa.array([111, 222, 333], pa.int64())],
+        names=["id", "txt", "h1"],
+    )
+    got = sorted(tuple(r.values()) for r in anchor_rows(g, s)(batch).to_pylist())
+    want = []
+    for i, t, h1 in zip([1, 2, 3], texts, [111, 222, 333]):
+        b = t.encode()
+        for p in range(1, s + 1):
+            want.append((_poly(b[p - 1:p - 1 + g]), i, len(b), p, h1, False))
+        for q in range(1, len(b) - g + 2, s):
+            want.append((_poly(b[q - 1:q - 1 + g]), i, len(b), q, 0, True))
+    assert got == sorted(want)

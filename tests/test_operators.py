@@ -231,8 +231,8 @@ def test_candidate_pairs_planted_hot_bucket(spark):
     hot, cold = 2000, 600
     rows = spark.range(hot + cold).select(
         "id",
-        F.when(F.col("id") < hot, F.lit(-1)).otherwise(F.col("id") / 2)
-        .cast("long").alias("bucket"),
+        F.array(F.when(F.col("id") < hot, F.lit(-1)).otherwise(F.col("id") / 2).cast("long"))
+        .alias("bucket"),
     )
     hot_pairs, cold_pairs = hot * (hot - 1) // 2, cold // 2
     assert hot_pairs > PAIR_BUDGET
@@ -280,7 +280,8 @@ def test_kernel_bands_pair_parity(spark, shape):
     slim = images.select("image_id", "caption", "phash")
     bands = normalize_signatures_bands(slim, cfg=cfg).select("image_id", "bands")
     sigs = with_signatures(slim, cfg=cfg, keep_shingles=False).join(bands, "image_id").persist()
-    b_kernel = band_buckets(sigs, cfg=cfg, bands_col="bands")
+    # the kernel's keys as the pipeline passes them: one list per row
+    b_kernel = sigs.select(F.col("image_id").alias("id"), F.col("bands").alias("bucket"))
     b_jvm = band_buckets(sigs, sig_col="minhash", cfg=cfg)
     pk = {(r.src, r.dst) for r in candidate_pairs(b_kernel, cfg).collect()}
     pj = {(r.src, r.dst) for r in candidate_pairs(b_jvm, cfg).collect()}
@@ -433,10 +434,12 @@ def test_candidate_pairs_matches_jvm_reference(spark, kind):
     pairs, skew = candidate_pairs(buckets, cfg, with_metrics=True)
     got = _pair_set(pairs)
 
-    # reference: the pre-kernel one-exchange JVM shape, inline
-    counts = buckets.groupBy("bucket").count()
+    # reference: the pre-kernel one-exchange JVM shape, inline, over one
+    # (id, bucket) row per band
+    rows = buckets.select("id", F.explode("bucket").alias("bucket"))
+    counts = rows.groupBy("bucket").count()
     ok = counts.filter((F.col("count") > 1) & (F.col("count") <= cfg.bucket_cap)).drop("count")
-    grouped = buckets.join(ok, "bucket").groupBy("bucket").agg(F.collect_list("id").alias("ids"))
+    grouped = rows.join(ok, "bucket").groupBy("bucket").agg(F.collect_list("id").alias("ids"))
     want = _pair_set(
         grouped.select(F.explode(F.expr(
             "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids)),"
@@ -473,6 +476,23 @@ def _phash_frame(spark, kind: str):
     return _id_kinds(spark.createDataFrame(rows, "image_id string, phash long"), kind)
 
 
+def _jvm_phash_blocks(df, cfg):
+    """(id, ph, block, key): the r+1 pigeonhole blocks per row by native
+    bit ops and a posexplode — the JVM formulation phash.block_rows
+    replaced."""
+    nblocks = cfg.hamming_radius + 1
+    width = cfg.phash_bits // nblocks
+    keys = []
+    for i in range(nblocks):
+        shift = i * width
+        w = width if i < nblocks - 1 else cfg.phash_bits - shift
+        keys.append(F.shiftrightunsigned(F.col("phash"), shift).bitwiseAND(F.lit((1 << w) - 1)))
+    return df.select(
+        F.col("image_id").alias("id"), F.col("phash").alias("ph"),
+        F.posexplode(F.array(*keys)).alias("block", "key"),
+    )
+
+
 @pytest.mark.parametrize("kind", ["long", "string"])
 @pytest.mark.parametrize("shape", [{"block_cap": 2}, {"hamming_radius": 6}])
 def test_phash_pairs_matches_jvm_reference(spark, kind, shape):
@@ -481,14 +501,14 @@ def test_phash_pairs_matches_jvm_reference(spark, kind, shape):
     repeated phashes' blocks and at a wide radius (7 blocks of 9 bits)."""
     import dataclasses
 
-    from jsonschema_jl_spark.operators.phash import phash_blocks, phash_pairs
+    from jsonschema_jl_spark.operators.phash import phash_pairs
 
     cfg = dataclasses.replace(CFG, hamming_radius=shape.get("hamming_radius", CFG.hamming_radius))
     block_cap = shape.get("block_cap", 10_000)
     df = _phash_frame(spark, kind)
     got = _pair_set(phash_pairs(df, cfg=cfg, block_cap=block_cap), ("src", "dst", "hamming"))
 
-    blocks = phash_blocks(df, cfg=cfg)
+    blocks = _jvm_phash_blocks(df, cfg)
     sizes = blocks.groupBy("block", "key").agg(F.count("*").alias("n"))
     ok = sizes.filter((F.col("n") > 1) & (F.col("n") <= block_cap)).drop("n")
     grouped = blocks.join(ok, ["block", "key"]).groupBy("block", "key").agg(
@@ -704,8 +724,10 @@ def test_lsh_ann_pairs_matches_self_join_shape(spark):
 
 
 def test_pair_generators_skip_null_ids(spark):
-    """A row with a null id pairs with nothing: ngram_token_pairs and
-    lsh_ann_pairs return what they return without it."""
+    """A row with a null id pairs with nothing: every grouped generator
+    returns what it returns without it (the pack drops the row before the
+    exchange; the pairing kernel's id arrays would fail on it)."""
+    from jsonschema_jl_spark.operators.phash import phash_pairs
     from jsonschema_jl_spark.operators.similarity import ngram_token_pairs
 
     docs = [(1, "a b c d"), (2, "a b c e"), (3, "x y z")]
@@ -721,31 +743,148 @@ def test_pair_generators_skip_null_ids(spark):
         spark.createDataFrame(vecs, schema)
     ) == {(1, 2, 0.99995)}
 
+    # three rows, one of them with a null id, for each pipeline detector
+    buckets = spark.createDataFrame([(1, [7]), (2, [7]), (None, [7])], "id long, bucket array<long>")
+    assert _pair_set(candidate_pairs(buckets, CFG)) == {(1, 2)}
+    phashes = spark.createDataFrame([(1, 5), (2, 5), (None, 5)], "image_id long, phash long")
+    assert _pair_set(phash_pairs(phashes, cfg=CFG), ("src", "dst", "hamming")) == {(1, 2, 0)}
+    text = "a caption long enough to be contained"
+    captions = spark.createDataFrame(
+        [(1, text), (2, f"{text} and then some"), (None, text)], "image_id long, caption string"
+    )
+    assert _pair_set(containment_pairs(captions, cfg=CFG)) == {(1, 2)}
 
-def test_lsh_ann_pairs_no_vectors_in_candidate_shuffles(spark):
-    """The exploded bucket relation must not carry the embedding column.
-    Assert structurally on the physical plan: no Exchange below the
-    pairing MapInArrow ships `vec`; only the verify joins above it touch
-    vectors."""
+
+def _plan_nodes(node):
+    yield node
+    for i in range(node.children().size()):
+        yield from _plan_nodes(node.children().apply(i))
+
+
+def _output_names(node) -> list[str]:
+    attrs = node.output()
+    return [attrs.apply(i).name() for i in range(attrs.size())]
+
+
+def test_lsh_ann_pairs_no_vectors_in_candidate_shuffles(spark, monkeypatch):
+    """The bucket rows must not carry the embedding column.  The rows the
+    pack function builds are exactly (id, table, bucket) and its input
+    holds no `vec`; in the physical plan the only Exchange below the
+    pairing MapInArrow carries (part, block), so no vector can ride the
+    candidate shuffle — only the verify joins above it touch vectors."""
+    import jsonschema_jl_spark.operators.similarity as similarity
+
+    packed = {}
+    real = similarity.pair_groups
+
+    def spy(df, rows, *args, **kwargs):
+        packed.update(df=df, rows=rows)
+        return real(df, rows, *args, **kwargs)
+
+    monkeypatch.setattr(similarity, "pair_groups", spy)
     rng = np.random.default_rng(53)
     rows = [(i, [float(x) for x in rng.standard_normal(16)]) for i in range(20)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = lsh_ann_pairs(df, dim=16, n_planes=6, n_tables=2)
+
+    assert "vec" not in packed["df"].columns
+    built = [packed["rows"](b) for b in packed["df"].toArrow().to_batches()]
+    assert built and all(set(t.column_names) == {"id", "table", "bucket"} for t in built)
+    assert sum(t.num_rows for t in built) == 20 * 2
+
     # with AQE on, the executed plan wraps the full physical plan (all
     # exchanges planned) as its initial plan until it runs
     plan = out._jdf.queryExecution().executedPlan().initialPlan()
-
-    def nodes(node):
-        yield node
-        for i in range(node.children().size()):
-            yield from nodes(node.children().apply(i))
-
-    pairing = [n for n in nodes(plan) if n.nodeName() == "MapInArrow"]
+    pairing = [
+        n for n in _plan_nodes(plan)
+        if n.nodeName() == "MapInArrow" and "Exchange" in n.children().apply(0).nodeName()
+    ]
     assert len(pairing) == 1
-    below = [n for n in nodes(pairing[0]) if "Exchange" in n.nodeName()]
-    assert below, "the bucket rows must cross an exchange into the kernel"
-    for ex in below:
-        out_attrs = ex.output()
-        cols = [out_attrs.apply(i).name() for i in range(out_attrs.size())]
-        # (id, table, bucket): no vector column rides the bucket rows
-        assert "vec" not in cols and len(cols) == 3, cols
+    below = [n for n in _plan_nodes(pairing[0]) if "Exchange" in n.nodeName()]
+    assert [_output_names(ex) for ex in below] == [["part", "block"]]
+
+
+@pytest.mark.parametrize("par", [1, 8, 200, 4096])
+def test_partition_codes_match_spark_hash(spark, par):
+    """pmod(hash(code_p), par) == p through F.hash: the codes the pack
+    writes land where Spark's HashPartitioning(par) sends them."""
+    from jsonschema_jl_spark.operators.group_pairs import murmur3_int, partition_codes
+
+    codes = partition_codes(par)
+    df = spark.createDataFrame([(int(c),) for c in codes], "code int")
+    got = df.select(F.hash("code").alias("h"), F.expr(f"pmod(hash(code), {par})").alias("p")).collect()
+    assert [r.p for r in got] == list(range(par))
+    assert [r.h for r in got] == murmur3_int(codes).tolist()
+
+
+def test_packed_exchange_delivers_own_blocks(spark):
+    """Each reduce task of a packed exchange receives only its own
+    destination's blocks, and every row in them routes there."""
+    import pyarrow as pa
+
+    from jsonschema_jl_spark.operators.group_pairs import (
+        destinations, pack_groups, partition_codes, same_rows, unpack,
+    )
+
+    par = 8
+    rows = [(i, f"k{i % 37}", i % 11) for i in range(3000)]
+    df = spark.createDataFrame(rows, "id long, s string, b long").repartition(5)
+    packed = pack_groups(df, same_rows, ["s", "b"], num_partitions=par)
+    got = packed.select("part", "block", F.spark_partition_id().alias("pid")).collect()
+    codes = partition_codes(par)
+    assert {r.pid for r in got} == set(range(par))
+    seen = 0
+    for r in got:
+        assert r.part == codes[r.pid]
+        block = pa.record_batch([pa.array([r.part], pa.int32()), pa.array([r.block], pa.binary())],
+                                names=["part", "block"])
+        table = pa.Table.from_batches(list(unpack([block])))
+        assert (destinations(table, ["s", "b"], par) == r.pid).all()
+        seen += table.num_rows
+    assert seen == len(rows)
+
+
+_WORDS = ["café", "Straße", "東京", "日本語の", "😀", "naïve", "🙂🙃", "GRÖSSE", "ñandú",
+          "x", "data", "ΣΊΣΥΦΟΣ", "québec", "中文", "z"]
+
+
+def _non_ascii_corpus(n: int = 240, seed: int = 17) -> list[tuple[str, str]]:
+    """Word salads over 1- to 4-byte characters, plus slices and
+    extensions of them, so many captions contain others."""
+    rng = np.random.default_rng(seed)
+    base = [" ".join(rng.choice(_WORDS, size=int(rng.integers(3, 14)))) for _ in range(n // 3)]
+    docs = list(base)
+    for t in base:
+        a = int(rng.integers(0, max(1, len(t) // 3)))
+        docs.append(t[a:a + int(rng.integers(12, len(t) + 8))])
+        docs.append(" ".join(rng.choice(_WORDS, size=2)) + t + str(rng.choice(_WORDS)))
+    return [(f"d{i:04d}", t) for i, t in enumerate(docs)]
+
+
+def test_containment_pairs_non_ascii_matches_oracle(spark):
+    """On text with é/ß, CJK and emoji, the byte-level anchors find exactly
+    the pairs a pure-Python `a in b` over the normalized captions finds,
+    and the character-level suffix-array cross-check agrees."""
+    from jsonschema_jl_spark.operators.minhash import normalize_text
+
+    docs = _non_ascii_corpus()
+    norm = [(i, normalize_text(t)) for i, t in docs]
+    long_enough = [(i, t) for i, t in norm if len(t) >= CFG.min_contained_len]
+    want = {
+        (i, j) for i, a in long_enough for j, b in long_enough
+        if i != j and len(a) < len(b) and a in b
+    }
+    assert len(want) > 50
+    assert any(len(a.encode()) != len(a) for _, a in long_enough)
+    df = spark.createDataFrame(docs, "image_id string, caption string")
+    assert _pair_set(containment_pairs(df, cfg=CFG)) == want
+    assert _pair_set(suffix_array_containment(df, cfg=CFG)) == want
+
+
+def test_xxhash64_string_equals_binary(spark):
+    """containment's hash verify hashes container BYTES against h1 =
+    xxhash64(text): Spark must hash a string and its binary cast alike."""
+    texts = ["", "ascii", "café ß", "東京 日本語", "emoji 😀🙂", "\u0000nul"]
+    df = spark.createDataFrame([(t,) for t in texts], "s string")
+    rows = df.select(F.xxhash64("s").alias("a"), F.xxhash64(F.col("s").cast("binary")).alias("b")).collect()
+    assert all(r.a == r.b for r in rows)

@@ -11,6 +11,13 @@ extracts scale-relevant facts mechanically from the plan text:
   * shuffle count:      Exchange nodes (every one is a cluster-wide shuffle)
   * join strategies:    BroadcastHashJoin vs SortMergeJoin/ShuffledHashJoin
   * codegen:            WholeStageCodegen span count
+  * packed exchanges:   Exchange nodes on the group-pairs partition code
+                        (`part`), and Generate (explode) nodes — the
+                        grouped detectors build their rows in the pack
+                        task, so their plans assert one and none
+
+A section may pin any fact with `expect=`; a drifted plan then fails the
+run instead of landing in PLANS.md.
 
 Run: python tools/explain_plans.py   (writes /root/repo/PLANS.md)
 """
@@ -35,7 +42,7 @@ from jsonschema_jl_spark.operators.minhash import (
     normalize_signatures_bands, normalize_udf, with_signatures,
 )
 from jsonschema_jl_spark.operators.group_pairs import NO_CAP
-from jsonschema_jl_spark.operators.lsh import band_buckets, candidate_pairs
+from jsonschema_jl_spark.operators.lsh import candidate_pairs
 from jsonschema_jl_spark.operators.phash import phash_pairs
 from jsonschema_jl_spark.operators.substring import containment_pairs
 from jsonschema_jl_spark.operators.similarity import cosine_topk
@@ -86,13 +93,17 @@ def facts(plan: str) -> dict:
         "sortmerge_joins": _nodes(plan, "SortMergeJoin"),
         "shuffled_hash_joins": _nodes(plan, "ShuffledHashJoin"),
         "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", plan))),
+        "part_exchanges": len(re.findall(r"^Arguments: hashpartitioning\(part#\d+, \d+\)", plan, re.M)),
+        "generates": _nodes(plan, "Generate"),
         "pushed_filters": [p for p in pushed if p.strip()],
     }
 
 
-def section(title: str, note: str, df, clip: int = 120) -> str:
+def section(title: str, note: str, df, clip: int = 120, expect: dict | None = None) -> str:
     plan = plan_text(df)
     f = facts(plan)
+    for k, v in (expect or {}).items():
+        assert f[k] == v, f"{title}: {k} = {f[k]}, expected {v}"
     lines = plan.strip().splitlines()
     clipped = "\n".join(lines[:clip]) + ("\n… (clipped)" if len(lines) > clip else "")
     fact_lines = [
@@ -104,6 +115,11 @@ def section(title: str, note: str, df, clip: int = 120) -> str:
         f"- joins: {f['broadcast_joins']} broadcast / {f['sortmerge_joins']} sort-merge / {f['shuffled_hash_joins']} shuffled-hash",
         f"- whole-stage-codegen spans: {f['codegen_spans']}",
     ]
+    if f["part_exchanges"]:
+        fact_lines.append(
+            f"- packed group-row exchanges (on `part`): **{f['part_exchanges']}**;"
+            f" `Generate` nodes: **{f['generates']}**"
+        )
     if f["pushed_filters"]:
         fact_lines.append(f"- parquet `PushedFilters`: `{f['pushed_filters'][0][:500]}`")
     assert f["per_row_python_nodes"] == 0, f"per-row Python UDF leaked into: {title}"
@@ -168,55 +184,62 @@ def main() -> None:
                         assume_normalized=True),
     ))
 
-    # 4. LSH candidate pairs: banding explode + ONE grouping shuffle + dedup
+    # 4. LSH candidate pairs: the band-key lists packed + ONE exchange + dedup
     sigs = normalize_signatures_bands(
         part.select(F.xxhash64("p_partkey").alias("nid"), "p_name"), text_col="p_name", cfg=CFG
     )
-    buckets = band_buckets(sigs, id_col="nid", cfg=CFG, bands_col="bands")
+    buckets = sigs.select(F.col("nid").alias("id"), F.col("bands").alias("bucket"))
     out.append(section(
-        "LSH banding + candidate pairs (`band_buckets` → `candidate_pairs`)",
-        "Banding is a plain posexplode of KERNEL-computed bucket keys (the\n"
-        "signature kernel emits them vectorized, minhash.band_keys_np — the\n"
-        "former per-row JVM slice+xxhash64 expressions measured 147 s CPU per\n"
-        "108k rows). Pair generation is ONE exchange of the (id, bucket)\n"
-        "rows on the bucket key plus one MapInArrow — the group-pairs kernel\n"
+        "LSH candidate pairs (`candidate_pairs` over the band-key lists)",
+        "The signature kernel emits each row's bucket keys vectorized\n"
+        "(minhash.band_keys_np — the former per-row JVM slice+xxhash64\n"
+        "expressions measured 147 s CPU per 108k rows) as one list, and the\n"
+        "pipeline hands that list to `candidate_pairs` as it is: the pack\n"
+        "MapInArrow flattens it in numpy (`id` repeated per band — no\n"
+        "Generate), routes the rows by bucket and ships them as Arrow blocks\n"
+        "through ONE exchange on the partition code; the pairing MapInArrow\n"
         "sorts each partition by bucket and emits every pair inside a run in\n"
         "batches of at most 2^20 — then the final (src,dst) dedup shuffle.\n"
         "No persisted exchange, size-count aggregate, survivor join or list\n"
         "aggregate. The bucket cap bounds the quadratic expansion per\n"
         "group (skew, P6) and its dropped mass is counted by accumulators.",
         candidate_pairs(buckets, CFG),
+        expect={"part_exchanges": 1, "generates": 0, "map_in_arrow_nodes": 3},
     ))
 
-    # 5. phash pigeonhole: one exchange into the group-pairs kernel, which
-    #    verifies the Hamming radius in the batch that builds the pair
+    # 5. phash pigeonhole: one packed exchange into the group-pairs kernel,
+    #    which verifies the Hamming radius in the batch that builds the pair
     out.append(section(
         "phash Hamming pairs (`phash_pairs`, pigeonhole blocks)",
-        "r+1 block keys per row via native bit ops; pair generation is the\n"
-        "same one-exchange shape as LSH: the block rows cross ONE exchange on\n"
-        "(block, key) and the group-pairs MapInArrow pairs each block's\n"
-        "members, keeping a pair when a numpy popcount of the XOR'd phashes\n"
-        "is within the radius — the exact verify runs in the batch that\n"
-        "builds the pair.",
+        "r+1 block keys per row by numpy shifts and masks in the pack\n"
+        "MapInArrow (no Generate); pair generation is the same packed shape\n"
+        "as LSH: the block rows cross ONE exchange on the partition code as\n"
+        "Arrow blocks, and the group-pairs MapInArrow pairs each (block, key)\n"
+        "group's members, keeping a pair when a numpy popcount of the XOR'd\n"
+        "phashes is within the radius — the exact verify runs in the batch\n"
+        "that builds the pair.",
         phash_pairs(part.select(F.col("p_partkey").alias("id"),
                                 F.xxhash64("p_name").alias("phash")),
                     id_col="id", phash_col="phash", cfg=CFG),
+        expect={"part_exchanges": 1, "generates": 0, "map_in_arrow_nodes": 2},
     ))
 
     # 5b. embedding ANN pairs: vectors NEVER cross the candidate shuffles
     from jsonschema_jl_spark.operators.similarity import lsh_ann_pairs, ngram_token_pairs
     out.append(section(
         "Embedding ANN pairs (`lsh_ann_pairs`, hyperplane LSH)",
-        "The exploded bucket relation carries ONLY (id, table, bucket) —\n"
-        "embeddings (the widest rows in a 100 TB corpus, 2-4 KB at dim 512+)\n"
+        "Embeddings (the widest rows in a 100 TB corpus, 2-4 KB at dim 512+)\n"
         "are read map-side for the sign keys and projected off before the\n"
-        "exchange. Candidate id pairs come from the group-pairs kernel: ONE\n"
-        "exchange of the bucket rows on (table, bucket) and one MapInArrow\n"
-        "that drops buckets above the cap and emits member pairs in batches\n"
-        "of at most 2^20, then the (src,dst) dedup. Vectors re-enter only\n"
-        "through the two narrow hash joins feeding the exact-cosine verify,\n"
-        "so each vector crosses the wire exactly once per verify side.",
+        "pack, whose MapInArrow flattens each (id, keys) row into (id, table,\n"
+        "bucket) rows and ships them as Arrow blocks. Candidate id pairs come\n"
+        "from the group-pairs kernel: ONE exchange of the blocks on the\n"
+        "partition code and one MapInArrow that drops buckets above the cap\n"
+        "and emits member pairs in batches of at most 2^20, then the\n"
+        "(src,dst) dedup. Vectors re-enter only through the two narrow hash\n"
+        "joins feeding the exact-cosine verify, so each vector crosses the\n"
+        "wire exactly once per verify side.",
         lsh_ann_pairs(emb, dim=64, n_planes=8, n_tables=4, min_cos=0.8),
+        expect={"part_exchanges": 1, "generates": 0},
     ))
 
     # 5c. n-gram token pairs: Generate-barrier tokenization + one-exchange pairs
@@ -228,30 +251,36 @@ def main() -> None:
         "Tokenization runs ONCE under a Generate barrier (explode of a\n"
         "one-element array) — Catalyst cannot re-inline the split into both\n"
         "size() and slice(), which previously relied on codegen CSE across a\n"
-        "lambda boundary. Pair generation is the group-pairs kernel: ONE\n"
-        "exchange of the (id, gram) rows on the gram and one MapInArrow that\n"
-        "drops grams above the anchor cap and emits member pairs in batches\n"
-        "of at most 2^20; shared-gram counts fall out of a groupBy over the\n"
-        "pairs. No size-count aggregate, survivor join or list aggregate.",
+        "lambda boundary. Each document's distinct grams stay one list,\n"
+        "which the pack MapInArrow flattens into (id, gram) rows. Pair\n"
+        "generation is the group-pairs kernel: ONE packed exchange on the\n"
+        "partition code and one MapInArrow that drops grams above the anchor\n"
+        "cap and emits member pairs in batches of at most 2^20; shared-gram\n"
+        "counts fall out of a groupBy over the pairs. No size-count\n"
+        "aggregate, survivor join or list aggregate.",
         ngram_token_pairs(docs, id_col="doc_id", text_col="txt"),
+        expect={"part_exchanges": 1, "generates": 1},
     ))
 
-    # 6. containment: sparse-anchor equi-join, texts re-fetched narrowly
+    # 6. containment: sparse byte anchors packed, texts re-fetched narrowly
     out.append(section(
         "Exact-substring containment (`containment_pairs`, sparse anchors)",
-        "Probe and strided gram rows share one fixed-width shape (key, id,\n"
-        "len, pos, h1), hashed by a plain projection after an explode, and\n"
-        "cross ONE exchange on the anchor key; the group-pairs MapInArrow\n"
+        "The pack MapInArrow reads each text's UTF-8 buffer once and builds\n"
+        "its probe and strided byte-gram rows in numpy, one fixed-width\n"
+        "shape (key, id, len, pos, h1) — no Generate, no per-row JVM hashing\n"
+        "beyond the full-text h1 — and ships them as Arrow blocks through\n"
+        "ONE exchange on the partition code; the group-pairs MapInArrow\n"
         "pairs each anchor's probes with its grams, drops anchors above the\n"
-        "cap, and keeps a pair only when the derived offset places the\n"
+        "cap, and keeps a pair only when the derived byte offset places the\n"
         "shorter probe inside the container. The verify recomputes the\n"
-        "hash of the container's substring AT THAT OFFSET (one corpus-sized\n"
+        "hash of the container's bytes AT THAT OFFSET (one corpus-sized\n"
         "text exchange; probe text never moves); only the hash-matched\n"
-        "minority fetches the probe text for the exact string-equality\n"
+        "minority fetches the probe text for the exact byte-equality\n"
         "confirm, so the result never depends on a hash. Hash-join builds\n"
         "are text relations, never candidates.",
         containment_pairs(docs, id_col="doc_id", text_col="txt", cfg=CFG,
                           assume_normalized=True),
+        expect={"part_exchanges": 1, "generates": 0, "map_in_arrow_nodes": 2},
     ))
 
     # 7. brute-force cosine top-k: broadcast of the query side
@@ -267,14 +296,15 @@ def main() -> None:
     # 8. exact skew path: the same one-exchange plan with no cap
     out.append(section(
         "Uncapped candidate pairs (`candidate_pairs` with `NO_CAP`, exact skew path)",
-        "Uncapped streamed pairing: the plan is §4's — ONE exchange of the\n"
-        "(id, bucket) rows and one MapInArrow — with a cap no bucket\n"
-        "reaches, so every pair is emitted (no recall loss). A hot bucket is\n"
+        "Uncapped streamed pairing: the plan is §4's — ONE packed exchange\n"
+        "and the pairing MapInArrow — with a cap no bucket reaches, so\n"
+        "every pair is emitted (no recall loss). A hot bucket is\n"
         "paired in the task that receives it and its pairs leave in batches\n"
         "of at most 2^20, so no task holds a quadratic array. The flagship\n"
         "caps hot buckets instead and counts the dropped mass in\n"
         "accumulators.",
         candidate_pairs(buckets, dataclasses.replace(CFG, bucket_cap=NO_CAP)),
+        expect={"part_exchanges": 1, "generates": 0, "map_in_arrow_nodes": 3},
     ))
 
     # 9. dynamic gate, verdict-only: columnar screen decides most rows in
