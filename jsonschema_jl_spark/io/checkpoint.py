@@ -7,29 +7,26 @@ partitioned parquet: the same layout maps 1:1 onto an Iceberg table
 partitioned by `part_bucket`, with the manifest's role played by Iceberg
 snapshot metadata (io/iceberg.py).
 
-Layout:
+Layout (plus `<stage>/_staging/` while a stage is written):
     <root>/<config_hash>_L<layout_version>/<stage>/part_bucket=N/*.parquet
     <root>/<config_hash>_L<layout_version>/<stage>/_manifest.json
 
 The stages are the three materialization points of
-operators.pipeline.dedup_pipeline, which writes them when it is given a
-manager (resumable_pipeline below); layout v3 stores:
+operators.pipeline.dedup_pipeline (resumable_pipeline below); layout v4:
     signatures  (nid, image_id, txt_norm, phash, bands)  bucketed by image_id
     edges       (src, dst, kind)                         bucketed by src
     labels      (image_id, component)                    bucketed by image_id
 
 Manifest records lineage (input descriptor, bucket count, id column, config
-hash, engine version), per-bucket row counts, and completion flags.  Resume
-= recompute only the buckets missing from the manifest.  Stale state is
-never mixed in: a config change hashes to a different directory, and a
-stage whose manifest records another bucket count or id column restarts
-from scratch (its buckets partition the rows differently).  The directory
-name also carries LAYOUT_VERSION — the version of the ON-DISK stage schema,
-bumped whenever the engine changes what a stage stores.  A resumed run
-under a new engine therefore never reads a stage written in an older
-layout: the old directory is simply orphaned and the run recomputes under
-the new one, which extends the stale-state guarantee to engine upgrades
-where DedupConfig itself (and thus config_hash) is unchanged.
+hash, engine version), the stage schema and write time, and per-bucket row
+counts and completion flags.  Resume = write only the buckets missing from
+the manifest, in one job (CheckpointManager.write_stage).  Stale state is
+never mixed in: a config change hashes to a different directory; a stage
+whose manifest records another bucket count or id column restarts from
+scratch (its buckets partition the rows differently); and the directory
+name carries LAYOUT_VERSION, so an engine that stores stages differently
+recomputes in a new directory instead of reading the old one, even where
+DedupConfig (and thus config_hash) is unchanged.
 """
 
 from __future__ import annotations
@@ -39,18 +36,20 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.dataset as ds
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from jsonschema_jl_spark import __version__
 from jsonschema_jl_spark.config import DedupConfig
 
 
 # Version of the on-disk stage layout (NOT the dedup semantics — that is
-# DedupConfig.config_hash()).  Bump when a stage's stored column set changes.
+# DedupConfig.config_hash()).  Bump when what a stage stores changes.
 # v2: signatures stage stores precomputed LSH `bands` alongside the minhash.
 # v3: signatures store the fused kernel's projection (no `minhash` array),
 #     edges carry their `kind`.
-LAYOUT_VERSION = 3
+# v4: the manifest records the stage schema, which read_stage reads with.
+LAYOUT_VERSION = 4
 
 
 def bucket_col(id_col: str, n_buckets: int):
@@ -92,27 +91,18 @@ class CheckpointManager:
         return {int(b) for b, m in self.read_manifest(stage).get("buckets", {}).items() if m.get("done")}
 
     def write_stage(
-        self,
-        df: DataFrame,
-        stage: str,
-        id_col: str,
-        n_buckets: int = 8,
-        resume: bool = True,
-        materialize: bool = True,
+        self, df: DataFrame, stage: str, id_col: str, n_buckets: int = 8,
+        resume: bool = True, materialize: bool = True,
     ) -> str:
-        """Write `df` bucketed by hash(id) under the stage dir, skipping
-        buckets already recorded as done.  One Spark job per missing bucket
-        (the resumability unit).  The bucket filter is an expression over
-        hash(id) and can NOT push below upstream aggregations/UDF stages, so
-        by default the input is materialized once (localCheckpoint) before
-        the per-bucket loop — otherwise the whole upstream plan (e.g. the
-        full detector cascade feeding `edges`) re-executes n_buckets times
-        (measured 2.7x in dedup_pipeline before the same fix).  Pass
-        materialize=False only when the upstream is itself bucket-partitioned
-        storage, where the filter prunes at the source."""
+        """Write the buckets of `df` (by hash(id)) that the manifest does
+        not record as done in ONE Spark job of n_buckets write tasks, into
+        `_staging`; then commit each in turn on the driver: rename onto
+        `part_bucket=N`, row count from the parquet footers, manifest entry.
+        A kill inside the write job loses that job's buckets (the next write
+        discards `_staging`); a kill in the commit loop keeps the buckets
+        committed before it.  `materialize` is accepted and ignored."""
         path = os.path.join(self.base, stage)
-        if materialize:
-            df = df.localCheckpoint(eager=True)
+        staging = os.path.join(path, "_staging")
         manifest = self.read_manifest(stage)
         recorded = manifest.get("lineage", {})
         if not resume or (recorded.get("n_buckets"), recorded.get("id_col")) != (n_buckets, id_col):
@@ -123,33 +113,42 @@ class CheckpointManager:
         manifest["config_hash"] = self.cfg.config_hash()
         manifest["engine_version"] = __version__
         manifest["layout_version"] = LAYOUT_VERSION
-        manifest["lineage"] = {
-            "input": self.input_desc,
-            "n_buckets": n_buckets,
-            "id_col": id_col,
-        }
-        done = {int(b) for b, m in manifest["buckets"].items() if m.get("done")}
+        manifest["lineage"] = {"input": self.input_desc, "n_buckets": n_buckets, "id_col": id_col}
         tagged = df.withColumn("part_bucket", bucket_col(id_col, n_buckets))
-        for b in range(n_buckets):
-            if b in done:
-                continue
-            t0 = time.time()
-            part = tagged.filter(F.col("part_bucket") == b).drop("part_bucket")
+        manifest["schema"] = tagged.schema.json()
+        missing = sorted(set(range(n_buckets)) - self.completed_buckets(stage))
+        shutil.rmtree(staging, ignore_errors=True)
+        if not missing:
+            return path
+        t0 = time.time()
+        (
+            tagged.filter(F.col("part_bucket").isin(missing))
+            .repartition(n_buckets, "part_bucket")
+            .write.partitionBy("part_bucket")
+            .parquet(staging)
+        )
+        manifest["write_seconds"] = round(time.time() - t0, 2)
+        for b in missing:
             out = os.path.join(path, f"part_bucket={b}")
-            part.write.mode("overwrite").parquet(out)
-            n = part.sparkSession.read.parquet(out).count()
+            shutil.rmtree(out, ignore_errors=True)
+            written = os.path.join(staging, f"part_bucket={b}")
+            os.makedirs(written, exist_ok=True)  # a bucket no row hashed to
+            os.replace(written, out)
             manifest["buckets"][str(b)] = {
                 "done": True,
-                "rows": n,
-                "seconds": round(time.time() - t0, 2),
+                "rows": ds.dataset(out, format="parquet").count_rows(),
                 "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
             self._write_manifest(stage, manifest)
+        shutil.rmtree(staging, ignore_errors=True)
         return path
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
-        path = os.path.join(self.base, stage)
-        return spark.read.option("basePath", path).parquet(os.path.join(path, "part_bucket=*"))
+        """The stage's rows and `part_bucket`, read with the schema its
+        manifest records (a stage of zero rows has no parquet file to infer
+        one from).  Parquet skips `_manifest.json` and `_staging`."""
+        schema = T.StructType.fromJson(json.loads(self.read_manifest(stage)["schema"]))
+        return spark.read.schema(schema).parquet(os.path.join(self.base, stage))
 
     def stage_complete(self, stage: str, n_buckets: int) -> bool:
         recorded = self.read_manifest(stage).get("lineage", {}).get("n_buckets")

@@ -18,7 +18,11 @@ is 1:1 by design:
 
   checkpoint stage dir        -> Iceberg table `<ns>.<stage>`
   bucket column (xxhash64%N)  -> `PARTITIONED BY (bucket(N, <id_col>))`
-  JSON manifest 'done' bits   -> snapshot commit (atomic per append)
+  one partitioned stage write -> one `writeTo` write
+  per-bucket rename commit +  -> snapshot commit (atomic per write: a kill
+    JSON manifest 'done' bits      loses the write, never half of it)
+  stage schema (manifest)     -> table schema
+  footer row counts           -> snapshot summary row counts
   config_hash in the manifest -> table property 'spark_graft.config_hash'
   resume (skip done buckets)  -> `overwritePartitions` idempotency
 
@@ -93,9 +97,10 @@ def write_stage_iceberg(
     bucket(n_buckets, id_col) — the real-catalog twin of
     CheckpointManager.write_stage.  Returns the table identifier.
 
-    The write is one atomic `overwritePartitions` snapshot commit (the
-    manifest 'done' bit the JSON scheme emulates): re-running a stage after
-    a partial failure REPLACES the bucket partitions it produces instead of
+    The write is one atomic `overwritePartitions` snapshot commit, where
+    the parquet scheme renames each bucket out of `_staging` and records
+    its manifest 'done' bit in turn: re-running a stage after a partial
+    failure REPLACES the bucket partitions it produces instead of
     appending a second copy of every row — the same-config retry is
     idempotent because the pipeline is deterministic, so a retry emits the
     same rows into the same bucket partitions.  Config lineage rides as a

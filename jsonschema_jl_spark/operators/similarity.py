@@ -367,7 +367,9 @@ def ngram_token_pairs(
     from the corpus row count (~50k rows/partition): the gram relation
     grows linearly with the corpus, so at a fixed session partition count
     the rows one kernel task holds grow without bound."""
-    toks_df = df.select(
+    # a null text has no grams: without this filter it would split into one
+    # gram that every null-text document shares
+    toks_df = df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         # Generate barrier: one split per row, referenced twice downstream
         F.explode(F.array(F.split(normalized_text(F.col(text_col)), " "))).alias("toks"),

@@ -249,3 +249,71 @@ def test_resumable_pipeline_matches_direct_and_resumes(spark, tmp_path):
     assert partition(labels2.collect()) == p1
     assert ckpt.read_manifest("signatures") == sig_manifest_before  # untouched
     images.unpersist()
+
+
+def test_empty_stage_round_trips(spark, tmp_path):
+    """A stage of zero rows leaves no parquet file; it reads back with the
+    schema its manifest records."""
+    ckpt = CheckpointManager(str(tmp_path / "c"), CFG)
+    empty = spark.createDataFrame([], "src long, dst long, kind string")
+    ckpt.write_stage(empty, "edges", "src", n_buckets=NB)
+    back = ckpt.read_stage(spark, "edges")
+    assert back.count() == 0
+    assert back.columns == ["src", "dst", "kind", "part_bucket"]
+    assert ckpt.stage_complete("edges", NB) and ckpt.stage_rows("edges") == 0
+
+
+def test_resumable_pipeline_with_no_edges(spark, tmp_path):
+    # ids 0-11 of a generated block are the planted singletons
+    singles = generate_images(spark, 12, CFG, with_bytes=False, with_malformed=False)
+    ckpt = CheckpointManager(str(tmp_path / "c"), CFG)
+    labels = resumable_pipeline(spark, singles, ckpt, CFG, n_buckets=NB).collect()
+    assert ckpt.stage_complete("edges", NB) and ckpt.stage_rows("edges") == 0
+    assert len(labels) == 12
+    assert len({r.component for r in labels}) == 12
+
+
+def test_stale_staging_is_never_read(spark, images, tmp_path):
+    """A kill leaves uncommitted buckets in `_staging`; a kill inside the
+    write job also leaves part files and the committer's `_temporary`.  The
+    next write discards all of it: nothing there is committed or read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "c")
+    rows = images.select("image_id", "caption")
+    killing = _KillingCkpt(root, CFG, fail_stage="s", fail_after=NB - 1)
+    with pytest.raises(RuntimeError, match="mid-stage kill"):
+        killing.write_stage(rows, "s", "image_id", n_buckets=NB)
+    ckpt = CheckpointManager(root, CFG)
+    assert ckpt.completed_buckets("s") == set(range(NB - 1))
+    staging = os.path.join(ckpt.base, "s", "_staging")
+    stale = os.path.join(staging, f"part_bucket={NB - 1}")
+    os.makedirs(os.path.join(stale, "_temporary", "0"), exist_ok=True)
+    junk = pa.Table.from_pandas(rows.limit(7).toPandas())
+    pq.write_table(junk, os.path.join(stale, "part-00000-junk.snappy.parquet"))
+    ckpt.write_stage(rows, "s", "image_id", n_buckets=NB)
+    _assert_exactly_once(ckpt.read_stage(spark, "s"))
+    assert ckpt.stage_rows("s") == N
+    assert not os.path.exists(staging)
+
+
+def test_stage_write_is_one_spark_job(spark, images, tmp_path):
+    """Every missing bucket is written by one job (AQE may run the map stage
+    of its repartition as a job of its own); nothing materializes the input
+    first or counts the written buckets back."""
+    import jsonschema_jl_spark.io.checkpoint as ckpt_mod
+
+    sc = spark.sparkContext
+    rows = images.select("image_id", "caption")
+    ckpt = CheckpointManager(str(tmp_path / "c"), CFG)
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup("ckpt-one-job", "one stage write")
+    try:
+        ckpt.write_stage(rows, "s", "image_id", n_buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert len(sc.statusTracker().getJobIdsForGroup("ckpt-one-job")) == 2
+    assert ckpt.completed_buckets("s") == set(range(8)) and ckpt.stage_rows("s") == N
+    with open(ckpt_mod.__file__, encoding="utf-8") as fh:
+        assert "localCheckpoint" not in fh.read()

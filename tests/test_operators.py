@@ -755,6 +755,15 @@ def test_pair_generators_skip_null_ids(spark):
     assert _pair_set(containment_pairs(captions, cfg=CFG)) == {(1, 2)}
 
 
+def test_ngram_token_pairs_skips_null_text(spark):
+    """A null text has no grams, so null-text documents pair with nothing,
+    as in the DuckDB oracle."""
+    from jsonschema_jl_spark.operators.similarity import ngram_token_pairs
+
+    docs = spark.createDataFrame([(1, None), (2, None), (3, "a b c d")], "doc_id long, text string")
+    assert ngram_token_pairs(docs).collect() == []
+
+
 def _plan_nodes(node):
     yield node
     for i in range(node.children().size()):
