@@ -615,7 +615,7 @@ def q_doc_skew_salted_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, text_col="txt", cfg=CFG, keep_shingles=False, assume_normalized=True
     )
     buckets = band_buckets(sigs, id_col="doc_id", sig_col="minhash", cfg=CFG)
-    pairs = candidate_pairs(buckets, dataclasses.replace(CFG, bucket_cap=NO_CAP))
+    pairs, _ = candidate_pairs(buckets, dataclasses.replace(CFG, bucket_cap=NO_CAP))
     verified = verify_jaccard_text(
         pairs, corpus, id_col="doc_id", text_col="txt", cfg=CFG, assume_normalized=True
     )
@@ -1018,9 +1018,10 @@ _NGRAM_GRAMS = f"""
 # the cluster-size histogram.  The engine's LSH banding (CFG: 256 perms,
 # b=32, r=8),
 # bucket caps, and pigeonhole blocks are all recall-lossless on this corpus
-# — verified pair-for-pair at sf0.001 and sf0.01 (tools/cluster_oracle_dev.py:
-# 245/245 and 238/238 identical edges), so the exact mirror IS the engine's
-# expected output, accidental cross-document near-dups included.
+# — verified pair-for-pair at sf0.001 and sf0.01 (245/245 and 238/238
+# identical edges against the engine's edge set), so the exact mirror IS
+# the engine's expected output, accidental cross-document near-dups
+# included; tools/check_contract.py and tests/test_contract.py hold it.
 _IMAGES_CLUSTERS_SQL = f"""
 WITH RECURSIVE base AS (
   SELECT doc_id, printf('img%012d', doc_id) AS image_id, text AS caption

@@ -120,7 +120,7 @@ def run_pipeline(spark, path: str, deadline_main: float | None = None) -> tuple[
     timings: dict[str, float] = {}
     images = spark.read.parquet(path)
 
-    warm = dedup_pipeline(images, CFG, collect_metrics=False)
+    warm = dedup_pipeline(images, CFG)
     warm.labels.count()
     warm.cleanup()
 
@@ -389,7 +389,7 @@ def scale_worker(
     warm = spark.read.parquet(warm_path)
     n_warm = warm.count()
     t0 = time.time()
-    res = dedup_pipeline(warm, CFG, collect_metrics=False)
+    res = dedup_pipeline(warm, CFG)
     res.labels.count()
     res.cleanup()
     warm_small_dt = time.time() - t0
@@ -418,7 +418,7 @@ def scale_worker(
     warm_skipped = time.time() + 2.2 * est_rep > deadline
     if not warm_skipped:
         t0 = time.time()
-        res = dedup_pipeline(df, CFG, collect_metrics=False)
+        res = dedup_pipeline(df, CFG)
         res.labels.count()
         res.cleanup()
         warm_full = round(time.time() - t0, 1)
@@ -437,7 +437,7 @@ def scale_worker(
                 break
             bw0 = _mem_bandwidth_gbs()
             s0, t0 = _steal_jiffies_cores(cores), time.time()
-            res = dedup_pipeline(df, CFG, collect_metrics=False)
+            res = dedup_pipeline(df, CFG)
             res.labels.count()
             dt = time.time() - t0
             steal_frac = (_steal_jiffies_cores(cores) - s0) / 100.0 / (dt * cores)
@@ -500,7 +500,7 @@ def scale_worker(
         attempts += 1
         bw0 = _mem_bandwidth_gbs()
         s0, t0 = _steal_jiffies_cores(cores), time.time()
-        res = dedup_pipeline(df, CFG, collect_metrics=False)
+        res = dedup_pipeline(df, CFG)
         res.labels.count()
         dt = time.time() - t0
         last_dt = dt

@@ -22,8 +22,9 @@ class DedupConfig:
     # 128/b=32/r=4 shape (midpoint 0.42) admitted ~20x more false
     # candidates at bench scale (4.2% candidate precision — SCALE.md "LSH
     # precision budget"), paying the pipeline's largest shuffle on junk.
-    # Measured on the deterministic corpus (tools/tune_lsh.py, 6000 rows):
-    # raw banding recall 1.0, candidate precision 0.99 (vs 0.62 before).
+    # Measured on the deterministic corpus (6000 rows, round 4): raw
+    # banding recall 1.0, candidate precision 0.99 (vs 0.62 before); the
+    # recall gate in tests/test_dedup_pipeline.py holds it.
     # OPH cost is O(total shingles) independent of bin count, so the wider
     # signature only doubles the (small) signature bytes per row.
     num_perm: int = 256           # signature length (bins for OPH)

@@ -187,6 +187,4 @@ def resumable_pipeline(
     for existing callers."""
     from jsonschema_jl_spark.operators.pipeline import dedup_pipeline
 
-    return dedup_pipeline(
-        images, cfg, checkpoint=(ckpt, n_buckets), collect_metrics=False
-    ).labels
+    return dedup_pipeline(images, cfg, checkpoint=(ckpt, n_buckets)).labels

@@ -17,11 +17,13 @@ Spark-first design:
   * skew handling (north rule, BASELINE.json:6): on the flagship, buckets
     above cfg.bucket_cap are excluded from pairing by the kernel and
     reported as metrics (count + dropped row mass, accumulated as the
-    kernel runs).  Stop-shingle buckets at web scale otherwise explode
-    quadratically — a size-s bucket yields s(s-1)/2 pairs, so a single
-    1M-row bucket would emit 5*10^11 pairs.  Capped mass is
-    recall-accounted by the oracle harness at identical config, and the
-    phash/containment passes still cover capped rows.  The exact path is
+    kernel runs; candidate_pairs returns them with every pair set).
+    Stop-shingle buckets at web scale otherwise explode quadratically —
+    a size-s bucket yields s(s-1)/2 pairs, so a single 1M-row bucket
+    would emit 5*10^11 pairs.  Capped mass is recall-accounted by the
+    oracle harness at identical config, and the phash/containment passes
+    still cover capped rows.  One pairing path, one return shape:
+    (pairs, SkewMetrics), capped or not.  The exact path is
     uncapped streamed pairing: candidate_pairs with a cap above any bucket
     (group_pairs.NO_CAP) emits every pair, a hot bucket's pairs leaving its
     task in batches of at most group_pairs.PAIR_BUDGET.
@@ -80,9 +82,8 @@ class SkewMetrics:
 
 
 def candidate_pairs(
-    buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG, with_metrics: bool = False,
-    num_partitions: int | None = None,
-):
+    buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG, num_partitions: int | None = None,
+) -> tuple[DataFrame, SkewMetrics]:
     """Distinct (src, dst) candidate pairs (src < dst) from shared buckets.
 
     `buckets` holds `id` and `bucket`, the list of the id's band keys (the
@@ -94,14 +95,13 @@ def candidate_pairs(
     kernel: buckets of one row or above cfg.bucket_cap emit nothing, the
     rest emit every member pair in batches of at most 2^20.
 
-    Returns df, or (df, SkewMetrics) when with_metrics=True; the metrics
-    fill in as the pairs materialize (see SkewMetrics)."""
+    Returns (df, SkewMetrics); the metrics fill in as the pairs
+    materialize (see SkewMetrics)."""
     id_type = buckets.schema["id"].dataType
-    skew = SkewMetrics(buckets.sparkSession.sparkContext) if with_metrics else None
+    skew = SkewMetrics(buckets.sparkSession.sparkContext)
     pairs = pair_groups(
         buckets.select("id", "bucket"), list_rows("bucket", "bucket"), ["bucket"], bucket_emitter,
         T.StructType([T.StructField("src", id_type), T.StructField("dst", id_type)]),
-        cap=cfg.bucket_cap, num_partitions=num_partitions,
-        capped=skew.accumulators if skew is not None else None,
+        cap=cfg.bucket_cap, num_partitions=num_partitions, capped=skew.accumulators,
     ).dropDuplicates(["src", "dst"])
-    return (pairs, skew) if with_metrics else pairs
+    return pairs, skew

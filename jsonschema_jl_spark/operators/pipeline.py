@@ -62,10 +62,7 @@ def dedup_pipeline(
     images: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
     gate_schema: dict | None = None,
-    use_phash: bool = True,
-    use_containment: bool = True,
     checkpoint: tuple[CheckpointManager, int] | None = None,
-    collect_metrics: bool = True,
 ) -> PipelineResult:
     """The detector cascade.  Its three materialization points — the
     signatures projection, the edge set and the labels — stay in the
@@ -89,7 +86,7 @@ def dedup_pipeline(
     # default IMAGES_GATE_SCHEMA is fully native (pure Catalyst, no Python
     # stage), so its counters stay zero — a NONZERO walked/fallback count
     # in the flagship metrics is itself the regression signal.
-    gate_metrics = GateMetrics(spark) if collect_metrics else None
+    gate_metrics = GateMetrics(spark)
     try:
         compile_native_checks(gate_schema, images.schema)
         gate_backend = "native"
@@ -170,13 +167,8 @@ def dedup_pipeline(
             # one list per row: the pack task flattens them in numpy (no
             # signature stage or JVM explode exists — see the fused kernel)
             buckets = slim.select(F.col("nid").alias("id"), F.col("bands").alias("bucket"))
-            if collect_metrics:
-                cands, metrics = candidate_pairs(
-                    buckets, cfg, with_metrics=True, num_partitions=hot_par
-                )
-                skew.append(metrics)
-            else:
-                cands = candidate_pairs(buckets, cfg, num_partitions=hot_par)
+            cands, metrics = candidate_pairs(buckets, cfg, num_partitions=hot_par)
+            skew.append(metrics)
             caption_edges = verify_jaccard_text(
                 cands, slim, id_col="nid", text_col="txt_norm", cfg=cfg,
                 assume_normalized=True, num_partitions=hot_par,
@@ -189,22 +181,20 @@ def dedup_pipeline(
             # struct min has no mutable-buffer implementation).  The string
             # kind is re-derived from the int after the agg; semantics
             # (keep first by priority, deterministically) are unchanged.
-            edges = caption_edges.select("src", "dst", F.lit(0).alias("pri"))
-            if use_phash:
-                edges = edges.unionByName(
+            edges = (
+                caption_edges.select("src", "dst", F.lit(0).alias("pri"))
+                .unionByName(
                     phash_pairs(slim, id_col="nid", cfg=cfg, num_partitions=hot_par).select(
                         "src", "dst", F.lit(1).alias("pri")
                     )
                 )
-            if use_containment:
-                edges = edges.unionByName(
+                .unionByName(
                     containment_pairs(
                         slim, id_col="nid", text_col="txt_norm", cfg=cfg,
                         assume_normalized=True, num_partitions=hot_par,
-                    ).select(
-                        "src", "dst", F.lit(2).alias("pri")
-                    )
+                    ).select("src", "dst", F.lit(2).alias("pri"))
                 )
+            )
             return (
                 edges.groupBy("src", "dst").agg(F.min("pri").alias("pri"))
                 .select(
@@ -257,10 +247,7 @@ def dedup_pipeline(
                 # gate counters are final here: the signatures materialization
                 # above already ran the gate for every row (none when a
                 # completed signatures stage was read back)
-                "gate": {
-                    "backend": gate_backend,
-                    **(gate_metrics.as_dict() if gate_metrics is not None else {}),
-                },
+                "gate": {"backend": gate_backend, **gate_metrics.as_dict()},
             },
             _cached=cached,
         )

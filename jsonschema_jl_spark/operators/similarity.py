@@ -7,7 +7,8 @@
     (SimHash) bucketing; only pairs sharing a hyperplane-sign bucket are
     scored.  At 10^12 rows the cross join is infeasible; signs shrink
     candidates to O(n * bucket_size) with tunable recall via
-    (n_planes, n_tables).  Bucket members pair in the group-pairs kernel.
+    (n_planes, n_tables).  One key kernel: the Arrow matmul of
+    signs_keys_udf.  Bucket members pair in the group-pairs kernel.
   * ivf_topk          — scale path for query serving: spherical-k-means
     coarse cells (IVF); each query scans nprobe cells, O(nprobe*n/cells)
     per query, bucket-prunable by cell at scale.
@@ -15,10 +16,16 @@
   * ngram_token_pairs — pairs sharing a token n-gram, with their shared-gram
     count (near-dup candidates for a Jaccard verify); gram members pair in
     the group-pairs kernel.
+
+Every numpy step over embeddings (bucket keys, cell assignment, the
+centroid sample) reads them through `_valid_matrix`: a null, wrong-length
+or non-finite embedding is skipped — its row gets no key and no cell, so
+it pairs with and neighbours nothing — instead of failing the task.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Iterator
 
 import numpy as np
@@ -82,31 +89,31 @@ def _hyperplanes(dim: int, n_planes: int, table: int, seed: int) -> np.ndarray:
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def signs_column(vec_col: Column, planes: np.ndarray) -> Column:
-    """Bucket key: sign bits of <v, h_i> packed into a long — computed with
-    native array expressions per plane (JVM-side).  Plan size grows with
-    n_planes*dim literal elements: past _NATIVE_SIGNS_MAX, lsh_ann_pairs
-    switches to the Arrow matmul kernel (signs_keys_udf) instead."""
-    key = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        lits = F.array(*[F.lit(float(x)) for x in plane])
-        dot = _dot(vec_col, lits)
-        key = key + F.when(dot > 0, F.lit(2 ** i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return key
-
-
-# above this many n_planes*dim literal elements PER TABLE, the native
-# per-plane expression tree becomes a codegen/plan-size risk (each plane is
-# a dim-long literal array + an aggregate fold); the Arrow kernel computes
-# every table's key in ONE (batch, dim) @ (dim, tables*planes) matmul
-_NATIVE_SIGNS_MAX = 4096
+def _valid_matrix(vecs, dim: int) -> tuple[list[int], np.ndarray]:
+    """(idx, X): the positions in `vecs` of the finite `dim`-long vectors
+    and those vectors as a (len(idx), dim) float64 matrix.  A null,
+    wrong-length or non-finite embedding is left out, so one bad row never
+    reaches the ragged np.asarray that would fail its whole batch."""
+    idx: list[int] = []
+    rows: list[np.ndarray] = []
+    for i, v in enumerate(vecs):
+        if v is None:
+            continue
+        a = np.asarray(v, dtype=np.float64)
+        if a.shape == (dim,) and np.isfinite(a).all():
+            idx.append(i)
+            rows.append(a)
+    return idx, (np.vstack(rows) if rows else np.empty((0, dim)))
 
 
 def signs_keys_udf(planes_tables: np.ndarray):
     """Arrow-batched bucket keys for ALL tables at once: planes_tables is
     (n_tables, n_planes, dim); the UDF maps an embedding column to an
-    array<long> of n_tables packed sign keys via a single matmul per batch
-    (same math as signs_column: bit i set iff <v, h_i> > 0)."""
+    array<long> of n_tables packed sign keys (bit i set iff <v, h_i> > 0)
+    via a single (batch, dim) @ (dim, tables*planes) matmul per batch, so
+    the plan stays the same size at every (dim, n_planes).  An embedding
+    _valid_matrix leaves out gets a NULL key array and builds no bucket
+    rows."""
     n_tables, n_planes, dim = planes_tables.shape
     W = planes_tables.reshape(n_tables * n_planes, dim).T.copy()  # (dim, T*P)
     pw = (1 << np.arange(n_planes, dtype=np.int64))
@@ -114,30 +121,12 @@ def signs_keys_udf(planes_tables: np.ndarray):
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def keys(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for vecs in it:
-            n = len(vecs)
-            # null / wrong-length embeddings get a NULL key array (the row
-            # then builds no bucket rows) instead of crashing the matmul
-            # with a ragged np.asarray; the native path degrades the same
-            # way in effect — its null-dot key-0 rows never survive the
-            # `cos >= min_cos` null filter, so pair output is identical
-            out: list = [None] * n
-            idx: list[int] = []
-            rows: list[np.ndarray] = []
-            for i, v in enumerate(vecs):
-                if v is None:
-                    continue
-                a = np.asarray(v, dtype=np.float64)
-                if a.shape != (dim,) or not np.isfinite(a).all():
-                    continue
-                idx.append(i)
-                rows.append(a)
-            if rows:
-                X = np.vstack(rows)
-                S = (X @ W) > 0                       # (g, T*P) sign bits
-                S = S.reshape(len(X), n_tables, n_planes)
-                key = (S * pw).sum(axis=2)            # (g, T) packed longs
-                for j, i in enumerate(idx):
-                    out[i] = key[j].tolist()
+            out: list = [None] * len(vecs)
+            idx, X = _valid_matrix(vecs, dim)
+            S = ((X @ W) > 0).reshape(len(X), n_tables, n_planes)  # sign bits
+            key = (S * pw).sum(axis=2)                # (g, T) packed longs
+            for j, i in enumerate(idx):
+                out[i] = key[j].tolist()
             yield pd.Series(out, dtype=object)
 
     return keys
@@ -162,11 +151,9 @@ def lsh_ann_pairs(
     pair set is deduped BEFORE the vector re-fetch joins, so duplicate ids
     would fan out again in the fetch.
 
-    Bucket keys: native per-plane Column expressions while the literal
-    volume stays small (whole-stage codegen, zero Python), else one Arrow
-    matmul kernel computing every table's key per batch — the per-plane
-    literal arrays are a plan/codegen-size risk past ~64x64
-    (_NATIVE_SIGNS_MAX).
+    Bucket keys: one Arrow matmul kernel (signs_keys_udf) computes every
+    table's key per batch; a null, wrong-length or non-finite embedding
+    gets no key and so no pairs.
 
     Embeddings are the WIDEST rows in the corpus (2-4 KB at dim 512+), so
     no vector ever crosses the candidate-generation shuffle: the key
@@ -185,16 +172,8 @@ def lsh_ann_pairs(
     all grow with the corpus, so at a fixed session partition count their
     per-task memory grows without bound."""
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    if n_planes * dim <= _NATIVE_SIGNS_MAX:
-        keys = F.array(*[
-            signs_column(F.col("vec"), _hyperplanes(dim, n_planes, t, seed))
-            for t in range(n_tables)
-        ])
-    else:
-        planes = np.stack([
-            _hyperplanes(dim, n_planes, t, seed) for t in range(n_tables)
-        ])
-        keys = signs_keys_udf(planes)(F.col("vec"))
+    planes = np.stack([_hyperplanes(dim, n_planes, t, seed) for t in range(n_tables)])
+    keys = signs_keys_udf(planes)(F.col("vec"))
     id_type = base.schema["id"].dataType
     pairs = pair_groups(
         base.select("id", keys.alias("keys")), list_rows("keys", "bucket", pos="table"),
@@ -237,20 +216,24 @@ def ivf_centroids(
     xxhash64(id) — reproducible across partitionings, unlike df.sample).
     Lloyd iterations run driver-side in numpy: the sample is O(sample_n *
     dim) bytes regardless of corpus size, the one driver-side step of the
-    IVF build.  Returns a unit-normalized (n_cells, dim) float64 array."""
-    rows = (
-        df.select(
+    IVF build.  `dim` is the sample's most common vector length; the sample
+    rows _valid_matrix leaves out do not count.  Returns a unit-normalized
+    (n_cells, dim) float64 array."""
+    vecs = [
+        r.v for r in df.select(
             F.col(vec_col).alias("v"),
             F.xxhash64(F.col(id_col), F.lit(seed)).alias("h"),
         )
         .orderBy("h").limit(sample_n).collect()
-    )
-    if len(rows) < n_cells:
+    ]
+    lengths = Counter(len(v) for v in vecs if v is not None)
+    dim = lengths.most_common(1)[0][0] if lengths else 0
+    X = _valid_matrix(vecs, dim)[1]
+    if len(X) < n_cells:
         raise ValueError(
-            f"ivf_centroids: sample has {len(rows)} rows < n_cells={n_cells}; "
+            f"ivf_centroids: sample has {len(X)} valid rows < n_cells={n_cells}; "
             "reduce n_cells or provide more data"
         )
-    X = np.asarray([r.v for r in rows], dtype=np.float64)
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     C = X[:n_cells].copy()
     for _ in range(iters):
@@ -265,12 +248,15 @@ def ivf_centroids(
 
 def _cells_udf(centroids: np.ndarray, nprobe: int):
     """Arrow-batched cell assignment: one (batch, dim) @ (dim, cells)
-    matmul per batch, top-nprobe cells by cosine (centroids are unit)."""
+    matmul per batch, top-nprobe cells by cosine (centroids are unit).  An
+    embedding _valid_matrix leaves out gets NULL cells: as a corpus row it
+    joins no cell, as a query it probes none."""
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def cells(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         Ct = centroids.T
         for vecs in it:
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+            out: list = [None] * len(vecs)
+            idx, X = _valid_matrix(vecs, centroids.shape[1])
             X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
             scores = X @ Ct
             if nprobe == 1:
@@ -279,7 +265,9 @@ def _cells_udf(centroids: np.ndarray, nprobe: int):
                 part = np.argpartition(-scores, nprobe - 1, axis=1)[:, :nprobe]
                 order = np.take_along_axis(-scores, part, 1).argsort(axis=1)
                 top = np.take_along_axis(part, order, 1)
-            yield pd.Series([row.astype(np.int32) for row in top])
+            for j, i in enumerate(idx):
+                out[i] = top[j].astype(np.int32)
+            yield pd.Series(out, dtype=object)
 
     return cells
 

@@ -7,16 +7,13 @@ All native `pyspark.sql.functions` expressions (JVM, codegen, pushdown-safe)
   * quality_score    — length / punctuation-ratio / stopword-ratio heuristic
   * lang_id          — stopword-hit n-gram heuristic (en/de/fr/unknown)
   * fingerprint      — md5 document fingerprint of normalized text
-  * simhash64        — 64-bit SimHash over token md5s (native bit ops)
-  * simhash64_batch  — bit-identical scale path: JVM tokenization + md5 feed
-                       one Arrow-batched numpy vote kernel instead of 60
-                       per-bit aggregate expressions (codegen-size safe)
+  * simhash64        — 64-bit SimHash over token md5s (native bit ops; the
+                       one SimHash kernel)
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 _STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is", "that", "it", "for"],
@@ -107,83 +104,3 @@ def simhash64(col: Column) -> Column:
     for c in bits[1:]:
         out = out + c
     return out
-
-
-def simhash64_batch(col: Column) -> Column:
-    """Scale-path SimHash: bit-identical to `simhash64`, but the 60 per-bit
-    vote aggregates (a Janino-sized codegen method on wide schemas) are
-    replaced by ONE Arrow-batched numpy kernel.  Tokenization + md5 stay in
-    the JVM (same expressions as the native path), so normalization/digest
-    semantics cannot drift; only the vote-count arithmetic crosses to numpy.
-    Parity with the native path is asserted in tests/test_operators.py."""
-    toks = F.array_distinct(F.split(normalized_text(col), " "))
-    tok_hash = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t.cast("binary")), 1, 15), 16, 10).cast("long")
-    )
-    return _simhash_votes(tok_hash)
-
-
-def _simhash_votes_kernel(hash_lists) -> "pd.Series":  # noqa: F821
-    import numpy as np
-    import pandas as pd
-
-    n = len(hash_lists)
-    out = np.zeros(n, dtype=np.int64)
-    # NULL text → 0, matching the native path (its per-bit `otherwise(0)`
-    # branch swallows the NULL vote aggregate)
-    lens = np.zeros(n, dtype=np.int64)
-    arrs = []
-    for i, x in enumerate(hash_lists):
-        if x is None:
-            continue
-        a = np.asarray(x, dtype=np.int64)
-        lens[i] = a.size
-        if a.size:
-            arrs.append(a)
-    if arrs:
-        flat = np.concatenate(arrs)
-        # (T, 60) signed votes in one shot; reduceat sums per-row segments
-        bits = (
-            (flat[:, None] >> np.arange(60, dtype=np.int64)) & 1
-        ).astype(np.int32) * 2 - 1
-        # reduceat is only well-defined for strictly increasing in-range
-        # starts, so segment over the NON-EMPTY rows (empty rows keep vote 0)
-        nz = lens > 0
-        lens_nz = lens[nz]
-        starts = np.zeros(lens_nz.size, dtype=np.int64)
-        np.cumsum(lens_nz[:-1], out=starts[1:])
-        votes = np.zeros((n, 60), dtype=np.int32)
-        votes[nz] = np.add.reduceat(bits, starts, axis=0)
-        weights = (np.int64(1) << np.arange(60, dtype=np.int64))
-        out = ((votes > 0).astype(np.int64) @ weights)
-    return pd.Series(out, dtype="int64")
-
-
-_VOTES_UDF = None
-
-
-def _simhash_votes(col: Column) -> Column:
-    # pandas_udf needs an active SparkSession at decoration time (PySpark 4),
-    # so the UDF is built lazily on first use and cached
-    global _VOTES_UDF
-    if _VOTES_UDF is None:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("long")
-        def votes(hashes: pd.Series) -> pd.Series:
-            return _simhash_votes_kernel(hashes.tolist())
-
-        _VOTES_UDF = votes
-    return _VOTES_UDF(col)
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    return (
-        df.withColumn("n_tokens", token_count(c))
-        .withColumn("punct_ratio", F.round(punct_ratio(c), 6))
-        .withColumn("stopword_ratio", F.round(stopword_ratio(c), 6))
-        .withColumn("quality", quality_score(c))
-        .withColumn("lang_pred", lang_id(c))
-        .withColumn("fingerprint", fingerprint(c))
-    )

@@ -11,7 +11,7 @@ import os
 from pyspark.sql import SparkSession
 
 # glibc-malloc tuning for every Python worker (and the driver): the Arrow
-# signature/vote kernels allocate multi-MB numpy temporaries per batch, and
+# signature/pairing kernels allocate multi-MB numpy temporaries per batch, and
 # default glibc serves those via mmap and RETURNS them to the kernel on free
 # (M_MMAP_THRESHOLD caps at 32 MB, M_TRIM at 128 KB).  Each batch then
 # re-faults fresh anonymous pages and the kernel must zero them —

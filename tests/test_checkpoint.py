@@ -201,7 +201,7 @@ def test_resume_after_midstage_kill_sf001_corpus(spark, monkeypatch):
         # the resume started at the edges stage: no gate or kernel pass
         assert calls == {"normalize_signatures_bands": 0, "candidate_pairs": 1}
 
-        direct = dedup_pipeline(images, CFG, collect_metrics=False)
+        direct = dedup_pipeline(images, CFG)
         expected = partition(direct.labels.collect())
         direct.cleanup()
         assert resumed == expected
@@ -236,7 +236,7 @@ def test_resumable_pipeline_matches_direct_and_resumes(spark, tmp_path):
     # materialize eagerly: the resume step below rewrites the stage files
     p1 = partition(resumable_pipeline(spark, images, ckpt, CFG, n_buckets=4).collect())
 
-    direct = dedup_pipeline(images, CFG, collect_metrics=False)
+    direct = dedup_pipeline(images, CFG)
     assert p1 == partition(direct.labels.collect())
     direct.cleanup()
 
@@ -317,3 +317,31 @@ def test_stage_write_is_one_spark_job(spark, images, tmp_path):
     assert ckpt.completed_buckets("s") == set(range(8)) and ckpt.stage_rows("s") == N
     with open(ckpt_mod.__file__, encoding="utf-8") as fh:
         assert "localCheckpoint" not in fh.read()
+
+
+def test_pipeline_metrics_always_present(spark, images, tmp_path):
+    """Every run reports `skew` and `gate`.  A cold checkpointed run counts
+    the same capped mass as the in-memory run; a run that reads a complete
+    edges stage back ran no pairing kernel, so its `skew` is empty."""
+    import dataclasses
+
+    # planted groups are pairs: cap 1 caps every shared bucket
+    cfg = dataclasses.replace(CFG, bucket_cap=1)
+    direct = dedup_pipeline(images, cfg)
+    direct.labels.count()
+    direct.cleanup()
+    skew = direct.metrics["skew"]
+    assert skew["capped_buckets"] > 0 and skew["capped_rows"] > 0
+    assert direct.metrics["gate"]["backend"] == "native"
+    assert direct.metrics["gate"]["walked"] == 0  # no Python stage in the gate
+
+    ckpt = CheckpointManager(str(tmp_path / "c"), cfg)
+    cold = dedup_pipeline(images, cfg, checkpoint=(ckpt, NB))
+    assert cold.metrics["skew"] == skew
+    assert cold.metrics["gate"] == direct.metrics["gate"]
+
+    shutil.rmtree(os.path.join(ckpt.base, "labels"))
+    resumed = dedup_pipeline(images, cfg, checkpoint=(ckpt, NB))
+    assert resumed.metrics["skew"] == {}
+    assert resumed.metrics["gate"]["backend"] == "native"
+    assert resumed.labels.count() == N

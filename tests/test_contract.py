@@ -29,6 +29,9 @@ SUBSET = [
     "doc_minhash_signatures",
     "doc_skew_salted_pairs",
     "emb_cosine_topk",
+    # the two Arrow-matmul embedding kernels: hyperplane keys and IVF cells
+    "emb_ann_pairs",
+    "emb_ivf_topk",
     "images_frame_sample",
     "audio_features",
     # the flagship in memory and checkpointed: one oracle for both modes

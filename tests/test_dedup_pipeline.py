@@ -30,10 +30,9 @@ def result(images):
     return dedup_pipeline(images, CFG)
 
 
-def test_gate_drops_malformed(images, spark):
-    res = dedup_pipeline(images, CFG, use_phash=False, use_containment=False)
+def test_gate_drops_malformed(result, spark):
     truth = truth_sidecar(spark, N_ROWS)
-    labeled_ids = {r.image_id for r in res.labels.select("image_id").collect()}
+    labeled_ids = {r.image_id for r in result.labels.select("image_id").collect()}
     bad = {r.image_id for r in truth.filter(~F.col("gate_expect_valid")).collect()}
     assert labeled_ids.isdisjoint(bad)
     assert len(labeled_ids) == N_ROWS
@@ -140,7 +139,7 @@ def test_edges_plan_packs_every_detector(images, monkeypatch):
         return real(self, *args, **kwargs)
 
     monkeypatch.setattr(cls, "localCheckpoint", spy)
-    res = dedup_pipeline(images, CFG, collect_metrics=False)
+    res = dedup_pipeline(images, CFG)
     res.cleanup()
     plan = frames[0]._jdf.queryExecution().executedPlan().initialPlan()
     pairing = [
@@ -154,11 +153,11 @@ def test_edges_plan_packs_every_detector(images, monkeypatch):
         assert not [n.nodeName() for n in below if n.nodeName() == "Generate"]
 
 
-def test_determinism_across_runs(images):
-    r1 = dedup_pipeline(images, CFG, use_phash=False, use_containment=False)
-    r2 = dedup_pipeline(images, CFG, use_phash=False, use_containment=False)
-    p1 = sorted((r.src, r.dst) for r in r1.edges.collect())
-    p2 = sorted((r.src, r.dst) for r in r2.edges.collect())
+def test_determinism_across_runs(result, images):
+    again = dedup_pipeline(images, CFG)
+    p1 = sorted((r.src, r.dst, r.kind) for r in result.edges.collect())
+    p2 = sorted((r.src, r.dst, r.kind) for r in again.edges.collect())
+    again.cleanup()
     assert p1 == p2
 
 
@@ -166,14 +165,14 @@ def test_degenerate_inputs(images, spark):
     """Empty input, gate-rejects-everything, and single-row corpora must
     produce empty/singleton label sets, not crash any stage (banding,
     pair-building, CC, and the verify kernels all see zero or one row)."""
-    r = dedup_pipeline(images.limit(0), CFG, collect_metrics=False)
+    r = dedup_pipeline(images.limit(0), CFG)
     assert r.labels.count() == 0
     r.cleanup()
     allbad = images.withColumn("caption", F.lit(None).cast("string"))
-    r = dedup_pipeline(allbad, CFG, collect_metrics=False)
+    r = dedup_pipeline(allbad, CFG)
     assert r.labels.count() == 0  # every row gated out
     r.cleanup()
-    r = dedup_pipeline(images.limit(1), CFG, collect_metrics=False)
+    r = dedup_pipeline(images.limit(1), CFG)
     one = r.labels.collect()
     assert len(one) == 1 and one[0].component is not None
     r.cleanup()

@@ -237,12 +237,10 @@ def test_candidate_pairs_planted_hot_bucket(spark):
     hot_pairs, cold_pairs = hot * (hot - 1) // 2, cold // 2
     assert hot_pairs > PAIR_BUDGET
 
-    uncapped = candidate_pairs(rows, dataclasses.replace(CFG, bucket_cap=NO_CAP))
+    uncapped, _ = candidate_pairs(rows, dataclasses.replace(CFG, bucket_cap=NO_CAP))
     assert uncapped.count() == hot_pairs + cold_pairs
 
-    pairs, skew = candidate_pairs(
-        rows, dataclasses.replace(CFG, bucket_cap=64), with_metrics=True
-    )
+    pairs, skew = candidate_pairs(rows, dataclasses.replace(CFG, bucket_cap=64))
     assert pairs.count() == cold_pairs
     assert (skew.capped_buckets, skew.capped_rows) == (1, hot)
 
@@ -283,8 +281,8 @@ def test_kernel_bands_pair_parity(spark, shape):
     # the kernel's keys as the pipeline passes them: one list per row
     b_kernel = sigs.select(F.col("image_id").alias("id"), F.col("bands").alias("bucket"))
     b_jvm = band_buckets(sigs, sig_col="minhash", cfg=cfg)
-    pk = {(r.src, r.dst) for r in candidate_pairs(b_kernel, cfg).collect()}
-    pj = {(r.src, r.dst) for r in candidate_pairs(b_jvm, cfg).collect()}
+    pk = {(r.src, r.dst) for r in candidate_pairs(b_kernel, cfg)[0].collect()}
+    pj = {(r.src, r.dst) for r in candidate_pairs(b_jvm, cfg)[0].collect()}
     assert pk == pj and len(pk) > 0
     rows = sigs.select("caption", "minhash", "bands").collect()
     mh = np.array([r.minhash for r in rows], dtype=np.int64)
@@ -354,10 +352,25 @@ def test_wav_roundtrip_and_audio_features(spark):
     assert not out["z"].decode_ok and out["z"].sample_rate is None
 
 
-def test_simhash_batch_matches_native(spark):
-    """The Arrow-batched vote kernel must be bit-identical to the 60-aggregate
-    native expression (same JVM tokenization + md5 feed both)."""
-    from jsonschema_jl_spark.operators.textops import simhash64, simhash64_batch
+def test_simhash64_matches_python_reference(spark):
+    """simhash64 against a pure-Python SimHash over the same tokens: lower,
+    trim, collapse whitespace, split on " ", distinct tokens, top 60 bits of
+    each token's md5, one signed vote per bit.  Covers the empty and
+    all-blank text (one empty token), NULL text (0) and token order and
+    repeats (no effect)."""
+    import hashlib
+    import re
+
+    from jsonschema_jl_spark.operators.textops import simhash64
+
+    def ref(text):
+        if text is None:
+            return 0
+        toks = dict.fromkeys(re.sub(r"\s+", " ", text.lower().strip(" ")).split(" "))
+        hs = [int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16) for t in toks]
+        return sum(
+            1 << b for b in range(60) if sum(1 if (h >> b) & 1 else -1 for h in hs) > 0
+        )
 
     rows = [
         ("a", "The quick brown fox jumps over the lazy dog"),
@@ -368,41 +381,14 @@ def test_simhash_batch_matches_native(spark):
         ("f", None),
         ("g", "der die und das ist nicht ein mit für auf"),
         ("h", "a b c d e f g h i j k l m n o p q r s t u v w x y z " * 8),
+        ("i", "dog lazy the over jumps fox brown quick the"),
     ]
     df = spark.createDataFrame(rows, "id string, text string")
-    got = (
-        df.select(
-            "id",
-            simhash64(F.col("text")).alias("native"),
-            simhash64_batch(F.col("text")).alias("batch"),
-        )
-        .collect()
-    )
-    for r in got:
-        assert r.native == r.batch, f"simhash mismatch for id={r.id}"
-
-
-def test_simhash_votes_kernel_edge_segments():
-    """reduceat edge cases: empty rows at the start, middle, end, and the
-    all-empty batch."""
-    from jsonschema_jl_spark.operators.textops import _simhash_votes_kernel
-
-    def ref(hs):
-        sig = 0
-        for b in range(60):
-            votes = sum(1 if (h >> b) & 1 else -1 for h in hs)
-            if votes > 0:
-                sig |= 1 << b
-        return sig
-
-    hs1 = [123456789012345, 987654321098765]
-    hs2 = [(1 << 60) - 1]
-    out = _simhash_votes_kernel([[], hs1, [], hs2, [], None])
-    assert out[0] == 0 and out[2] == 0 and out[4] == 0
-    assert out[1] == ref(hs1) and out[3] == ref(hs2)
-    assert out[5] == 0  # NULL text -> 0, matching the native otherwise(0)
-    out2 = _simhash_votes_kernel([[], []])
-    assert out2[0] == 0 and out2[1] == 0
+    got = {r.id: r.h for r in df.select("id", simhash64(F.col("text")).alias("h")).collect()}
+    for rid, text in rows:
+        assert got[rid] == ref(text), f"simhash mismatch for id={rid}"
+    assert got["f"] == 0 and got["c"] == got["d"] != 0
+    assert got["i"] == got["a"] != got["b"]
 
 
 def _id_kinds(df, kind: str):
@@ -431,7 +417,7 @@ def test_candidate_pairs_matches_jvm_reference(spark, kind):
     df = _id_kinds(spark.createDataFrame(texts, "image_id string, caption string"), kind)
     sigs = with_signatures(df, cfg=cfg, keep_shingles=False)
     buckets = band_buckets(sigs, cfg=cfg).persist()
-    pairs, skew = candidate_pairs(buckets, cfg, with_metrics=True)
+    pairs, skew = candidate_pairs(buckets, cfg)
     got = _pair_set(pairs)
 
     # reference: the pre-kernel one-exchange JVM shape, inline, over one
@@ -453,7 +439,7 @@ def test_candidate_pairs_matches_jvm_reference(spark, kind):
     assert (skew.capped_buckets, skew.capped_rows) == (capped["b"], capped["r"])
     # the cap bit: buckets were capped and their pairs are gone
     assert capped["b"] > 0
-    assert got < _pair_set(candidate_pairs(buckets, dataclasses.replace(cfg, bucket_cap=64)))
+    assert got < _pair_set(candidate_pairs(buckets, dataclasses.replace(cfg, bucket_cap=64))[0])
     buckets.unpersist()
 
 
@@ -586,88 +572,53 @@ def test_containment_pairs_matches_jvm_reference(spark, kind):
     assert got < _pair_set(containment_pairs(slim, cfg=CFG))
 
 
-def test_signs_kernel_parity_dim256(spark):
-    """The Arrow matmul bucket-key kernel (large n_planes*dim path) must
-    produce the same pair set as the native per-plane expression path at
-    dim=256 — forced onto each path by flipping _NATIVE_SIGNS_MAX."""
-    import jsonschema_jl_spark.operators.similarity as sim
-
-    rng = np.random.default_rng(11)
-    dim = 256
-    base = rng.standard_normal((40, dim))
-    rows = [(i, [float(x) for x in base[i]]) for i in range(40)]
-    for j in range(8):
-        v = base[j] + rng.standard_normal(dim) * 0.003
-        rows.append((100 + j, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    saved = sim._NATIVE_SIGNS_MAX
-    try:
-        sim._NATIVE_SIGNS_MAX = 10 ** 9  # force native
-        native = {
-            (r.src, r.dst)
-            for r in sim.lsh_ann_pairs(
-                df, dim=dim, n_planes=10, n_tables=6, min_cos=0.99
-            ).collect()
-        }
-        sim._NATIVE_SIGNS_MAX = 0  # force Arrow kernel
-        kernel = {
-            (r.src, r.dst)
-            for r in sim.lsh_ann_pairs(
-                df, dim=dim, n_planes=10, n_tables=6, min_cos=0.99
-            ).collect()
-        }
-    finally:
-        sim._NATIVE_SIGNS_MAX = saved
-    assert native == kernel
-    planted = {(j, 100 + j) for j in range(8)}
-    assert len(planted & kernel) >= 7
-    # the default threshold keeps small configs (10 planes x 256 = 2560
-    # literals) native and routes big ones (e.g. 32 planes x 256) to the
-    # kernel
-    assert 10 * dim <= sim._NATIVE_SIGNS_MAX < 32 * dim
-
-
-def test_signs_kernel_null_and_ragged_embeddings(spark):
-    """Null / wrong-length embeddings must DEGRADE on the kernel path (row
-    dropped, no pairs) exactly like the native path, not crash the matmul
-    with a ragged array (regression: np.asarray over a batch containing
-    None raised 'inhomogeneous shape').  Pair output must be identical to
-    the same corpus with the bad rows filtered out."""
-    import jsonschema_jl_spark.operators.similarity as sim
-
-    rng = np.random.default_rng(23)
-    dim = 64
-    base = rng.standard_normal((20, dim))
-    rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
-    for j in range(4):
+def _planted_embeddings(spark, seed: int, n: int, dim: int, n_near: int):
+    """(corpus, clean): n random vectors plus n_near near-copies (ids
+    100+j), with and without a null, a short and a NaN embedding
+    (ids 900-902)."""
+    rng = np.random.default_rng(seed)
+    base = rng.standard_normal((n, dim))
+    rows = [(i, [float(x) for x in base[i]]) for i in range(n)]
+    for j in range(n_near):
         v = base[j] + rng.standard_normal(dim) * 0.003
         rows.append((100 + j, [float(x) for x in v]))
     bad = [(900, None), (901, [1.0, 2.0]), (902, [float("nan")] * dim)]
-    df = spark.createDataFrame(
-        rows + bad, "vec_id long, embedding array<float>"
-    )
-    clean = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    schema = "vec_id long, embedding array<float>"
+    return spark.createDataFrame(rows + bad, schema), spark.createDataFrame(rows, schema)
 
-    saved = sim._NATIVE_SIGNS_MAX
-    try:
-        sim._NATIVE_SIGNS_MAX = 0  # force the Arrow kernel
-        got = {
-            (r.src, r.dst)
-            for r in sim.lsh_ann_pairs(
-                df, dim=dim, n_planes=10, n_tables=4, min_cos=0.99
-            ).collect()
-        }
-        want = {
-            (r.src, r.dst)
-            for r in sim.lsh_ann_pairs(
-                clean, dim=dim, n_planes=10, n_tables=4, min_cos=0.99
-            ).collect()
-        }
-    finally:
-        sim._NATIVE_SIGNS_MAX = saved
-    assert got == want
+
+def test_signs_kernel_null_and_ragged_embeddings(spark):
+    """Null / wrong-length / non-finite embeddings DEGRADE in the key
+    kernel (row dropped, no pairs) instead of crashing the matmul with a
+    ragged array (regression: np.asarray over a batch containing None
+    raised 'inhomogeneous shape').  Pair output must be identical to the
+    same corpus with the bad rows filtered out."""
+    dim = 64
+    df, clean = _planted_embeddings(spark, 23, 20, dim, 4)
+    pairs = lambda d: {  # noqa: E731
+        (r.src, r.dst)
+        for r in lsh_ann_pairs(d, dim=dim, n_planes=10, n_tables=4, min_cos=0.99).collect()
+    }
+    got = pairs(df)
+    assert got == pairs(clean)
+    assert {(j, 100 + j) for j in range(4)} <= got
     assert not any(900 <= a or 900 <= b for a, b in got)
+
+
+def test_ivf_topk_skips_bad_embeddings(spark):
+    """A null, a short and a NaN embedding crashed ivf_topk's centroid
+    sample and its cell-assignment UDF (a ragged np.asarray); now such a
+    row joins no cell and probes none, so the top-k rows equal the clean
+    corpus's, the bad rows' own queries included."""
+    from jsonschema_jl_spark.operators.similarity import ivf_topk
+
+    df, clean = _planted_embeddings(spark, 29, 40, 32, 6)
+    top = lambda d: sorted(  # noqa: E731
+        tuple(r) for r in ivf_topk(d, k=2, n_cells=4, nprobe=2).collect()
+    )
+    got = top(df)
+    assert got == top(clean) and len(got) > 0
+    assert not any(900 <= r[0] or 900 <= r[1] for r in got)
 
 
 def test_lsh_ann_pairs_matches_self_join_shape(spark):
@@ -694,15 +645,20 @@ def test_lsh_ann_pairs_matches_self_join_shape(spark):
         ).collect()
     }
 
-    # reference: the pre-round-5 two-sided membership self-join, inline
-    keys = F.array(*[
-        sim.signs_column(
-            F.col("vec"), sim._hyperplanes(dim, n_planes, t, 4242)
-        )
+    # reference: the pre-round-5 two-sided membership self-join, inline,
+    # over sign keys computed here in numpy (bit i of table t set iff
+    # <v, h_i> > 0 for h the table's _hyperplanes) from the float32 values
+    # Spark stores
+    X = np.asarray([r[1] for r in rows], dtype=np.float32).astype(np.float64)
+    keys = np.stack([
+        ((X @ sim._hyperplanes(dim, n_planes, t, 4242).T) > 0) @ (1 << np.arange(n_planes))
         for t in range(n_tables)
-    ])
-    ref_base = df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    exploded = ref_base.select("id", "vec", F.posexplode(keys).alias("table", "bucket"))
+    ], axis=1)
+    ref_base = spark.createDataFrame(
+        [(r[0], r[1], [int(k) for k in keys[i]]) for i, r in enumerate(rows)],
+        "id long, vec array<float>, keys array<long>",
+    )
+    exploded = ref_base.select("id", "vec", F.posexplode("keys").alias("table", "bucket"))
     sizes = exploded.groupBy("table", "bucket").agg(F.count("*").alias("n"))
     ok = sizes.filter((F.col("n") > 1) & (F.col("n") <= 2000)).drop("n")
     member = exploded.join(ok, ["table", "bucket"])
@@ -745,7 +701,7 @@ def test_pair_generators_skip_null_ids(spark):
 
     # three rows, one of them with a null id, for each pipeline detector
     buckets = spark.createDataFrame([(1, [7]), (2, [7]), (None, [7])], "id long, bucket array<long>")
-    assert _pair_set(candidate_pairs(buckets, CFG)) == {(1, 2)}
+    assert _pair_set(candidate_pairs(buckets, CFG)[0]) == {(1, 2)}
     phashes = spark.createDataFrame([(1, 5), (2, 5), (None, 5)], "image_id long, phash long")
     assert _pair_set(phash_pairs(phashes, cfg=CFG), ("src", "dst", "hamming")) == {(1, 2, 0)}
     text = "a caption long enough to be contained"

@@ -203,7 +203,7 @@ def main() -> None:
         "No persisted exchange, size-count aggregate, survivor join or list\n"
         "aggregate. The bucket cap bounds the quadratic expansion per\n"
         "group (skew, P6) and its dropped mass is counted by accumulators.",
-        candidate_pairs(buckets, CFG),
+        candidate_pairs(buckets, CFG)[0],
         expect={"part_exchanges": 1, "generates": 0, "map_in_arrow_nodes": 3},
     ))
 
@@ -303,7 +303,7 @@ def main() -> None:
         "of at most 2^20, so no task holds a quadratic array. The flagship\n"
         "caps hot buckets instead and counts the dropped mass in\n"
         "accumulators.",
-        candidate_pairs(buckets, dataclasses.replace(CFG, bucket_cap=NO_CAP)),
+        candidate_pairs(buckets, dataclasses.replace(CFG, bucket_cap=NO_CAP))[0],
         expect={"part_exchanges": 1, "generates": 0, "map_in_arrow_nodes": 3},
     ))
 
